@@ -117,13 +117,24 @@ def ingest(spark: SparkSession, archive_dir: str, out_dir: str) -> dict:
         F.regexp_extract("target_uri", r"https?://([^/]+)", 1).alias("seed_host"),
         F.decode("payload", "UTF-8").alias("body"),
     )
-    captions = extract_images(html).select(
-        F.concat(
-            F.lit("https://"), "seed_host", F.lit("/images/"),
-            "image_id", F.lit(".png"),
-        ).alias("img_url"),
-        "seed_host", "image_id", "caption",
-    ).dropDuplicates(["img_url"])
+    # one caption per image URL, whichever page it came from: the
+    # elect_captions rule (longest caption, ties to the lexicographically
+    # smallest) as one map-side-combinable aggregate — a single shuffle,
+    # and the same pair table at any partition count
+    captions = (
+        extract_images(html)
+        .groupBy(
+            F.concat(
+                F.lit("https://"), "seed_host", F.lit("/images/"),
+                "image_id", F.lit(".png"),
+            ).alias("img_url")
+        )
+        .agg(F.min(F.struct(
+            (-F.length("caption")).alias("nl"), "caption", "seed_host",
+            "image_id",
+        )).alias("_e"))
+        .select("img_url", "_e.seed_host", "_e.image_id", "_e.caption")
+    )
 
     # image lane: BYTES + zero-decode header fields
     imgs = routed.filter(

@@ -11,7 +11,8 @@ computes:
   MapInPandas / FlatMapGroupsInPandas), which the audit permits.
 
 Plus a codegen floor: the named heavy queries must contain WholeStageCodegen
-spans (the hot path stays JVM-side).
+spans (the hot path stays JVM-side), and a size guard: the registry fits
+the driver's 50-entry correctness window.
 
 Planning only — queries are analyzed and physically planned at the smoke
 SF, not executed (construction-time driver work like sink writes still
@@ -38,6 +39,17 @@ def _registry():
     import __spark_entry__ as entry
 
     return entry.queries()
+
+
+def test_registry_fits_driver_correctness_window():
+    # the driver's correctness gate checks only the first 50 registry
+    # entries; a query registered past that window is never certified
+    n = len(_registry())
+    assert n <= 50, (
+        f"{n} registry entries: the driver's correctness gate checks only "
+        f"the first 50, so entries 51-{n} would never be certified; fold "
+        "new kernels into an existing tagged-union composite instead"
+    )
 
 
 @pytest.fixture(scope="module")

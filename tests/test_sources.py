@@ -870,6 +870,39 @@ def test_cdx_parse_and_fetch_plan(spark):
     assert plan["dB"]["shard_seq"] == 2
 
 
+def test_cdx_fetch_plan_malformed_and_null_digest_captures(spark):
+    """Malformed CDXJ lines never win or vanish: a capture whose
+    timestamp is missing (double space, so the key parses empty) loses
+    the election to a well-formed capture of the same digest, and 2xx
+    captures without a digest are each planned on their own instead of
+    collapsing into one."""
+    from web_crawler_spark.sources import cdx as CX
+
+    def js(url, digest, length, offset):
+        d = f'"digest": "{digest}", ' if digest else ""
+        return (f'{{"url": "{url}", "mime": "text/html", "status": "200", '
+                f'{d}"length": "{length}", "offset": "{offset}", '
+                f'"filename": "s0.warc.gz"}}')
+
+    lines = [
+        "com,ex)/a 20240102000000 " + js("https://ex.com/a", "dA", 100, 0),
+        "com,ex)/a-bad  " + js("https://ex.com/a-bad", "dA", 70, 300),
+        "com,ex)/n1 20240101000000 " + js("https://ex.com/n1", None, 40, 500),
+        "com,ex)/n2 20240101000000 " + js("https://ex.com/n2", None, 60, 600),
+    ]
+    caps = CX.parse_cdx(spark.createDataFrame([(x,) for x in lines], "line string"))
+    assert {r["urlkey"]: r["ts"] for r in caps.collect()}["com,ex)/a-bad"] is None
+
+    plan = {r["url"]: r for r in CX.fetch_plan(caps).collect()}
+    assert set(plan) == {"https://ex.com/a", "https://ex.com/n1", "https://ex.com/n2"}
+    a = plan["https://ex.com/a"]
+    assert (a["ts"], a["n_dups"], a["dup_bytes_saved"]) == ("20240102000000", 2, 70)
+    for u in ("https://ex.com/n1", "https://ex.com/n2"):
+        assert plan[u]["digest"] is None
+        assert (plan[u]["n_dups"], plan[u]["dup_bytes_saved"]) == (1, 0)
+    assert [plan[u]["shard_seq"] for u in sorted(plan)] == [1, 2, 3]
+
+
 def test_cdx_plan_drives_selective_member_reads(spark, tmp_path):
     """End-to-end archive economics: CDXJ index → fetch_plan →
     read_members_at fetches EXACTLY the planned byte ranges (no shard
@@ -930,3 +963,78 @@ def test_cdx_plan_drives_selective_member_reads(spark, tmp_path):
     )
     with pytest.raises(PythonException, match="truncated|expected exactly"):
         W.read_members_at(spark, bad, str(tmp_path)).collect()
+
+
+def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
+    """The archive-replay job elects one caption per image URL by rule —
+    longest caption, ties to the lexicographically smallest — so the pair
+    table is identical at any shuffle partition count, however the pages
+    citing an image are spread across shards."""
+    import importlib.util
+
+    from web_crawler_spark import images as IM
+    from web_crawler_spark.lake import SnapshotTable
+    from web_crawler_spark.sources import warc as W
+
+    spec = importlib.util.spec_from_file_location(
+        "ingest_warc_job",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs",
+                     "ingest_warc_job.py"),
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    def record(uri, ctype, payload):
+        msg = f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode() + payload
+        return (
+            f"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: {uri}\r\n"
+            f"WARC-Date: 2024-01-15T00:00:00Z\r\nContent-Length: {len(msg)}"
+            "\r\n\r\n"
+        ).encode("ascii") + msg + b"\r\n\r\n"
+
+    host = "gallery.example"
+    captions = {  # image -> the alt texts its citing pages carry
+        "img_000000000001": ["harbour at dusk", "b longer caption",
+                             "a longer caption", "boats"],
+        "img_000000000002": ["two boats", "two boats"],
+        "img_000000000003": ["", "lighthouse"],
+    }
+    arc = tmp_path / "arc"
+    arc.mkdir()
+    for i in range(4):  # one shard per page position
+        body = "".join(
+            f'<img src="/images/{img}.png" alt="{caps[i]}">'
+            for img, caps in captions.items() if i < len(caps)
+        )
+        W.write_warc_gz(
+            [record(f"https://{host}/p{i}", "text/html",
+                    f"<html><body>{body}</body></html>".encode())],
+            str(arc / f"page{i}.warc.gz"),
+        )
+    W.write_warc_gz(
+        [record(f"https://{host}/images/{img}.png", "image/png",
+                IM.encode_png(IM.synth_pixels(img, 48, 32)))
+         for img in captions],
+        str(arc / "images.warc.gz"),
+    )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    tables = []
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            out = str(tmp_path / f"pairs{n}")
+            job.ingest(spark, str(arc), out)
+            tables.append(sorted(
+                (r["image_id"], r["caption"], r["seed_host"], r["phash"],
+                 bytes(r["bytes"]))
+                for r in SnapshotTable(out).read(spark).collect()
+            ))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert tables[0] == tables[1]
+    assert [(r[0], r[1]) for r in tables[0]] == [
+        ("img_000000000001", "a longer caption"),
+        ("img_000000000002", "two boats"),
+        ("img_000000000003", "lighthouse"),
+    ]

@@ -16,7 +16,7 @@ key instead of skipping rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -86,22 +86,3 @@ def export_csv(df: DataFrame, path: str, columns: list[str] | None = None) -> No
         .csv(path)
     )
 
-
-def grid_query(
-    df: DataFrame,
-    filters: dict[str, str] | None = None,
-    quality_range: str | None = None,
-    sort_key: str | None = None,
-    ascending: bool = True,
-    page: int = 1,
-    size: int = 20,
-    quality_col: str = "qualityScore",
-) -> DataFrame:
-    """The full UI pipeline in one declarative chain."""
-    if filters:
-        df = contains_filter(df, filters)
-    if quality_range:
-        df = range_filter(df, quality_col, quality_range)
-    if sort_key:
-        df = sort_view(df, sort_key, ascending)
-    return paginate(df, page, size)

@@ -23,8 +23,9 @@ Cross-engine determinism rules used throughout (see functions/text.py):
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_crawler_spark.analytics import grid
@@ -63,6 +64,30 @@ def oracle_sql() -> dict[str, str]:
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _arm(
+    df: DataFrame, schema: dict[str, str], tag: str | Column,
+    **cols: str | Column,
+) -> DataFrame:
+    """One arm of a tagged-union composite. ``schema`` is the composite's
+    ordered {column: Spark type}, tag column first; ``cols`` names only
+    the arm's non-NULL columns (a column name or an expression). Returns
+    the arm in schema order, every column cast to its schema type and
+    typed NULLs in the columns the arm leaves out."""
+    tag_name, *rest = schema
+    unknown = set(cols) - set(rest)
+    if unknown:
+        raise ValueError(f"columns outside the composite schema: {sorted(unknown)}")
+
+    def cell(name: str, c: str | Column | None) -> Column:
+        c = F.lit(None) if c is None else F.col(c) if isinstance(c, str) else c
+        return c.cast(schema[name]).alias(name)
+
+    return df.select(
+        cell(tag_name, tag if isinstance(tag, Column) else F.lit(tag)),
+        *[cell(name, cols.get(name)) for name in rest],
+    )
 
 
 def _spread(pages: DataFrame) -> DataFrame:
@@ -1858,9 +1883,7 @@ def q_sessionize_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # §2.7 scalar kernels
 # --------------------------------------------------------------------------
-@query(
-    "footprint_wkt",
-    oracle="""
+_FOOTPRINT_ORACLE = """
     WITH pt AS (
       SELECT s_suppkey, ((s_suppkey * 37) % 16000) / 100.0 - 80.0 AS lat,
              ((s_suppkey * 73) % 36000) / 100.0 - 180.0 AS lon
@@ -1874,9 +1897,10 @@ def q_sessionize_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
                   lon - 0.0001, lat + 0.0001,
                   lon - 0.0001, lat - 0.0001) AS footprint
     FROM pt
-    """,
-)
-def q_footprint_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """
+
+
+def _footprint_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X13: MULTIPOLYGON WKT builder (±0.0001°, printf-fixed 6 dp)."""
     su = load(spark, sf_dir, "supplier").select(
         "s_suppkey",
@@ -1893,9 +1917,7 @@ def q_footprint_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return su.select("s_suppkey", wkt.alias("footprint"))
 
 
-@query(
-    "phone_postal_format",
-    oracle="""
+_PHONE_POSTAL_ORACLE = """
     WITH d AS (
       SELECT o_orderkey,
              lpad(CAST(o_orderkey * 7 % 10000000000 AS VARCHAR), 10, '9') AS phone10,
@@ -1907,9 +1929,10 @@ def q_footprint_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
                   substr(phone10,7,4)) AS phone,
            printf('%s-%s', substr(zip9,1,5), substr(zip9,6,4)) AS postal
     FROM d
-    """,
-)
-def q_phone_postal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """
+
+
+def _phone_postal_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5+X7: phone/ZIP formatters over synthesized digit strings."""
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -2131,9 +2154,7 @@ def q_intl_phone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "activity_classify",
-    oracle="""
+_ACTIVITY_ORACLE = """
     WITH t AS (
       SELECT p_partkey,
              list_extract(['global headquarters campus','retail store front',
@@ -2181,9 +2202,10 @@ def q_intl_phone(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHEN contains(lower(descr), 'branch') THEN 20.0
         ELSE 25.0 END::DOUBLE AS height_m
     FROM t
-    """,
-)
-def q_activity_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """
+
+
+def _activity_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X11+X12: keyword activity classifier + height estimator."""
     descrs = [
         "global headquarters campus", "retail store front",
@@ -3935,6 +3957,13 @@ def _shard_oracle() -> str:
     """
 
 
+_IMAGE_FEATURES_SCHEMA = {
+    "kernel": "string", "media_id": "string", "fmt": "string",
+    "l1": "long", "l2": "long", "l3": "long",
+    "d1": "double", "b1": "boolean", "s1": "string",
+}
+
+
 @query("image_features")
 def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-payload battery as a tagged union: ``features`` — decode +
@@ -3950,18 +3979,14 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the north rule's per-row emission invariant (images.verify_invariant:
     decoded pixels vs re-derived ground truth, exact for lossless /
     PSNR >= 40 dB for lossy, plus caption equality), golden-pinned."""
-    _ns = F.lit(None).cast("string")
-    _nl = F.lit(None).cast("long")
-    _nd = F.lit(None).cast("double")
-    _nb = F.lit(None).cast("boolean")
-    feats = _image_feature_agg_rows(spark, sf_dir).select(
-        F.lit("features").alias("kernel"), _ns.alias("media_id"), "fmt",
-        F.col("n").cast("long").alias("l1"),
-        F.col("n_ok").cast("long").alias("l2"), _nl.alias("l3"),
-        F.col("avg_luma").cast("double").alias("d1"),
-        _nb.alias("b1"), _ns.alias("s1"),
+    from web_crawler_spark.images import (
+        aspect_bucket, curate_pairs, elect_captions, header_audit,
+        model_score_gate, shard_pack, synthesize_images,
     )
-    from web_crawler_spark.images import curate_pairs
+
+    S = _IMAGE_FEATURES_SCHEMA
+    feats = _arm(_image_feature_agg_rows(spark, sf_dir), S, "features",
+                 fmt="fmt", l1="n", l2="n_ok", d1="avg_luma")
 
     p = load(spark, sf_dir, "part")
     fixture = p.select(
@@ -3987,52 +4012,27 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.lit("a photo of a "), "p_name"))
         .alias("caption"),
     )
-    cur = curate_pairs(fixture).select(
-        F.lit("curation").alias("kernel"),
-        F.col("image_id").alias("media_id"), "fmt",
-        F.col("w").cast("long").alias("l1"),
-        F.col("h").cast("long").alias("l2"),
-        F.col("n_caption_tokens").alias("l3"),
-        F.col("aspect").alias("d1"), F.col("keep").alias("b1"),
-        F.col("reject_reason").alias("s1"),
-    )
-    from web_crawler_spark.images import aspect_bucket, shard_pack, verify_invariant  # noqa: F401
-
-    bk = aspect_bucket(fixture).select(
-        F.lit("bucket").alias("kernel"),
-        F.col("image_id").alias("media_id"), "fmt",
-        F.col("bucket_w").alias("l1"), F.col("bucket_h").alias("l2"),
-        F.col("batch_idx").alias("l3"), F.col("aspect_dist").alias("d1"),
-        _nb.alias("b1"), F.col("bucket_key").alias("s1"),
-    )
+    cur = _arm(curate_pairs(fixture), S, "curation",
+               media_id="image_id", fmt="fmt", l1="w", l2="h",
+               l3="n_caption_tokens", d1="aspect", b1="keep",
+               s1="reject_reason")
+    bk = _arm(aspect_bucket(fixture), S, "bucket",
+              media_id="image_id", fmt="fmt", l1="bucket_w", l2="bucket_h",
+              l3="batch_idx", d1="aspect_dist", s1="bucket_key")
     est_bytes = F.col("w").cast("long") * F.col("h") * 3 + F.length("caption")
-    sh = shard_pack(fixture.withColumn("_eb", est_bytes), "_eb").select(
-        F.lit("shard").alias("kernel"),
-        F.col("image_id").alias("media_id"), "fmt",
-        F.col("writer").alias("l1"), F.col("shard_idx").alias("l2"),
-        F.col("shard_offset").alias("l3"), _nd.alias("d1"),
-        _nb.alias("b1"), F.col("shard_key").alias("s1"),
-    )
-    pv = _image_psnr_agg_rows(spark, sf_dir).select(
-        F.lit("psnr").alias("kernel"), _ns.alias("media_id"), "fmt",
-        F.col("n").cast("long").alias("l1"),
-        F.col("n_ok").cast("long").alias("l2"), _nl.alias("l3"),
-        F.col("min_psnr").cast("double").alias("d1"),
-        (F.col("n") == F.col("n_ok")).alias("b1"), _ns.alias("s1"),
-    )
-    co = _image_color_agg_rows(spark, sf_dir).select(
-        F.lit("colorfulness").alias("kernel"), _ns.alias("media_id"), "fmt",
-        F.col("n").cast("long").alias("l1"), _nl.alias("l2"), _nl.alias("l3"),
-        F.col("avg_color").cast("double").alias("d1"),
-        (F.col("min_color") > 0).alias("b1"), _ns.alias("s1"),
-    )
+    sh = _arm(shard_pack(fixture.withColumn("_eb", est_bytes), "_eb"), S,
+              "shard", media_id="image_id", fmt="fmt", l1="writer",
+              l2="shard_idx", l3="shard_offset", s1="shard_key")
+    pv = _arm(_image_psnr_agg_rows(spark, sf_dir), S, "psnr",
+              fmt="fmt", l1="n", l2="n_ok", d1="min_psnr",
+              b1=F.col("n") == F.col("n_ok"))
+    co = _arm(_image_color_agg_rows(spark, sf_dir), S, "colorfulness",
+              fmt="fmt", l1="n", d1="avg_color", b1=F.col("min_color") > 0)
     # score_gate: model scores AS DATA (images.model_score_gate) — the
     # broadcast threshold cascade over a closed-form score fixture the
     # oracle re-derives exactly (integer-ratio doubles, engine-exact);
     # every p_partkey % 11 == 0 image is deliberately unscored to prove
     # unscored rows never silently pass
-    from web_crawler_spark.images import model_score_gate
-
     pairs_fx = p.select(F.format_string("img_%06d", "p_partkey").alias("image_id"))
     scores_fx = p.filter(F.col("p_partkey") % 11 != 0).select(
         F.format_string("img_%06d", "p_partkey").alias("image_id"),
@@ -4041,21 +4041,15 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         (((F.col("p_partkey") / 3).cast("long") % 5) / F.lit(7.0))
         .alias("watermark_p"),
     )
-    sg = model_score_gate(pairs_fx, scores_fx).select(
-        F.lit("score_gate").alias("kernel"),
-        F.col("image_id").alias("media_id"), _ns.alias("fmt"),
-        _nl.alias("l1"), _nl.alias("l2"), _nl.alias("l3"),
-        F.col("aesthetic").alias("d1"), F.col("keep").alias("b1"),
-        F.col("reject_reason").alias("s1"),
-    )
+    sg = _arm(model_score_gate(pairs_fx, scores_fx), S, "score_gate",
+              media_id="image_id", d1="aesthetic", b1="keep",
+              s1="reject_reason")
     # caption_elect: per-near-dup-cluster caption election
     # (images.elect_captions) over a planted chain-cluster fixture —
     # consecutive ids k, k+1, k+2 for k % 5 == 0 form 3-chains (the
     # transitive case naive per-pair collapse gets wrong); captions vary
     # in length AND tie, so both electoral rules (longest, then
     # lexicographically smallest) decide somewhere
-    from web_crawler_spark.images import elect_captions
-
     el_range = p.filter(F.col("p_partkey").between(10, 160))
     el_pairs = el_range.select(
         F.format_string("img_%06d", "p_partkey").alias("image_id"),
@@ -4073,14 +4067,9 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.format_string("img_%06d", F.col("p_partkey") + 1).alias("b"),
         )
     )
-    el = elect_captions(el_pairs, el_edges).select(
-        F.lit("caption_elect").alias("kernel"),
-        F.col("image_id").alias("media_id"), _ns.alias("fmt"),
-        F.col("n_members").alias("l1"), F.col("n_captions").alias("l2"),
-        _nl.alias("l3"), _nd.alias("d1"),
-        F.col("is_rep").alias("b1"),
-        F.col("elected_caption").alias("s1"),
-    )
+    el = _arm(elect_captions(el_pairs, el_edges), S, "caption_elect",
+              media_id="image_id", l1="n_members", l2="n_captions",
+              b1="is_rep", s1="elected_caption")
     # header: the zero-decode binary payload audit (images.header_audit —
     # magic sniff + PNG IHDR / surrogate LQNT fixed-layout parse, pure
     # hex/substr/conv column algebra) over the synthesized payload table
@@ -4093,8 +4082,6 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncated rows sniff 'png' but fail dims, bad-magic rows sniff NULL.
     # A parser bug — wrong offset, wrong endianness, a length guard off by
     # one — shows up as a nonzero delta or a flipped flag, never hides.
-    from web_crawler_spark.images import header_audit, synthesize_images
-
     _i = F.regexp_extract("image_id", r"img_(\d+)", 1).cast("long")
     _nodup = ~F.col("image_id").endswith("_dup")
     hdr_fx = synthesize_images(spark, 120).withColumn(
@@ -4106,21 +4093,13 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.substr(F.col("bytes"), F.lit(2), F.length("bytes"))))
         .otherwise(F.col("bytes")),
     )
-    hd = header_audit(hdr_fx).select(
-        F.lit("header").alias("kernel"),
-        F.col("image_id").alias("media_id"), "fmt",
-        (F.col("hdr_w") - F.col("w")).cast("long").alias("l1"),
-        (F.col("hdr_h") - F.col("h")).cast("long").alias("l2"),
-        (F.col("hdr_bit_depth") * 100 + F.col("hdr_color_type"))
-        .cast("long").alias("l3"),
-        _nd.alias("d1"), F.col("header_dims_ok").alias("b1"),
-        F.col("sniffed").alias("s1"),
-    )
-    return (
-        feats.unionByName(cur).unionByName(bk).unionByName(sh)
-        .unionByName(pv).unionByName(co).unionByName(sg).unionByName(el)
-        .unionByName(hd)
-    )
+    hd = _arm(header_audit(hdr_fx), S, "header",
+              media_id="image_id", fmt="fmt",
+              l1=F.col("hdr_w") - F.col("w"), l2=F.col("hdr_h") - F.col("h"),
+              l3=F.col("hdr_bit_depth") * 100 + F.col("hdr_color_type"),
+              b1="header_dims_ok", s1="sniffed")
+    return reduce(DataFrame.unionByName,
+                  [feats, cur, bk, sh, pv, co, sg, el, hd])
 
 
 # --------------------------------------------------------------------------
@@ -4901,6 +4880,12 @@ def _geocode_cascade_oracle() -> str:
     """
 
 
+_GEOCODE_CASCADE_SCHEMA = {
+    "variant": "string", "c_custkey": "long", "latitude": "double",
+    "longitude": "double", "provider": "string", "formatted": "string",
+}
+
+
 @query("geocode_cascade", oracle=_geocode_cascade_oracle())
 def q_geocode_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3+J8 under both provider topologies, tagged by variant:
@@ -4939,37 +4924,25 @@ def q_geocode_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_custkey") % 3600000 / 10000.0 - 180.0,
         ).alias("longitude"),
     )
-    _ns = F.lit(None).cast("string")
-    single = EN.geocode_enrich(recs).select(
-        F.lit("single").alias("variant"),
-        "c_custkey",
-        F.round("latitude", 6).alias("latitude"),
-        F.round("longitude", 6).alias("longitude"),
-        F.when(F.col("geocoded"), F.lit("dim")).otherwise(F.lit("source")).alias("provider"),
-        _ns.alias("formatted"),
-    )
-    cascade = EN.multi_geocode_enrich(recs).select(
-        F.lit("cascade").alias("variant"),
-        "c_custkey",
-        F.round("latitude", 6).alias("latitude"),
-        F.round("longitude", 6).alias("longitude"),
-        F.col("geo_provider").alias("provider"),
-        _ns.alias("formatted"),
-    )
     pts = c.select(
         "c_custkey",
         ((F.col("c_custkey") % 1100000) / 10000.0 - 55.0).alias("latitude"),
         ((F.col("c_custkey") % 3300000) / 10000.0 - 165.0).alias("longitude"),
     )
-    reverse = EN.reverse_geocode(pts).select(
-        F.lit("reverse").alias("variant"),
-        "c_custkey",
-        F.round("latitude", 6).alias("latitude"),
-        F.round("longitude", 6).alias("longitude"),
-        F.col("rgeo_provider").alias("provider"),
-        F.col("formatted_address").alias("formatted"),
-    )
-    return single.unionByName(cascade).unionByName(reverse)
+    S = _GEOCODE_CASCADE_SCHEMA
+    lat, lon = F.round("latitude", 6), F.round("longitude", 6)
+    return reduce(DataFrame.unionByName, [
+        _arm(EN.geocode_enrich(recs), S, "single",
+             c_custkey="c_custkey", latitude=lat, longitude=lon,
+             provider=F.when(F.col("geocoded"), F.lit("dim"))
+             .otherwise(F.lit("source"))),
+        _arm(EN.multi_geocode_enrich(recs), S, "cascade",
+             c_custkey="c_custkey", latitude=lat, longitude=lon,
+             provider="geo_provider"),
+        _arm(EN.reverse_geocode(pts), S, "reverse",
+             c_custkey="c_custkey", latitude=lat, longitude=lon,
+             provider="rgeo_provider", formatted="formatted_address"),
+    ])
 
 
 def _fuzzy_greedy_input(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7062,46 +7035,22 @@ _EXTRACT_KERNELS_ORACLE = (
     """
 )
 
-_EXTRACT_STR_COLS = [
-    "sourceUrl", "locationName", "street", "city", "postcode", "country",
-    "phone", "email", "state",
-]
+_EXTRACT_SCHEMA = {
+    "kernel": "string",
+    **dict.fromkeys(
+        ["sourceUrl", "locationName", "street", "city", "postcode",
+         "country", "phone", "email", "state"], "string"),
+    **dict.fromkeys(["confidence", "latitude", "longitude"], "double"),
+}
 
 
-def _align_extract_tagged(df: DataFrame) -> DataFrame:
-    """Like _align_extract, but the per-row sourceType IS the kernel tag
-    (the structural battery carries five strategies in one DataFrame)."""
-    cols: list = [F.col("sourceType").alias("kernel")]
-    for c in _EXTRACT_STR_COLS:
-        cols.append(
-            F.col(c).cast("string").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("string").alias(c)
-        )
-    for c in ["confidence", "latitude", "longitude"]:
-        cols.append(
-            F.col(c).cast("double").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("double").alias(c)
-        )
-    return df.select(*cols)
-
-
-def _align_extract(df: DataFrame, kernel: str) -> DataFrame:
-    cols: list = [F.lit(kernel).alias("kernel")]
-    for c in _EXTRACT_STR_COLS:
-        cols.append(
-            F.col(c).cast("string").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("string").alias(c)
-        )
-    for c in ["confidence", "latitude", "longitude"]:
-        cols.append(
-            F.col(c).cast("double").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("double").alias(c)
-        )
-    return df.select(*cols)
+def _align_extract(df: DataFrame, kernel: str | None = None) -> DataFrame:
+    """One extract_kernels arm: the record columns ``df`` carries, tagged
+    ``kernel`` — or, when None, by each row's sourceType (the structural
+    batteries carry several strategies in one DataFrame)."""
+    present = {c: c for c in _EXTRACT_SCHEMA if c != "kernel" and c in df.columns}
+    tag = F.col("sourceType") if kernel is None else kernel
+    return _arm(df, _EXTRACT_SCHEMA, tag, **present)
 
 
 @query("extract_kernels", oracle=_EXTRACT_KERNELS_ORACLE)
@@ -7139,26 +7088,23 @@ def q_extract_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _align_extract(_xhr_rows(spark, sf_dir), "xhr"),
         lambda: _align_extract(_h3_rows(spark, sf_dir), "h3_sequential"),
         lambda: _align_extract(_text_line_rows(spark, sf_dir), "text_line"),
-        lambda: _align_extract_tagged(_structural_rows(spark, sf_dir)),
-        lambda: _align_extract_tagged(_dataattr_rows(spark, sf_dir)),
-        lambda: _align_extract_tagged(_heuristic_rows(spark, sf_dir)),
-        lambda: _align_extract_tagged(
+        lambda: _align_extract(_structural_rows(spark, sf_dir)),
+        lambda: _align_extract(_dataattr_rows(spark, sf_dir)),
+        lambda: _align_extract(_heuristic_rows(spark, sf_dir)),
+        lambda: _align_extract(
             _scraper_rows(spark, sf_dir).drop("activity", "usageShare")
         ),
-        lambda: _align_extract_tagged(
+        lambda: _align_extract(
             _loc_dom_rows(spark, sf_dir).drop("activity", "usageShare")
         ),
-        lambda: _align_extract_tagged(_generic_rows(spark, sf_dir)),
+        lambda: _align_extract(_generic_rows(spark, sf_dir)),
         lambda: _align_extract(
             _jsonld_rec_rows(spark, sf_dir), "jsonld_recursive"
         ),
     ]
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
         parts = [f.result() for f in [pool.submit(b) for b in builders]]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 _LINK_DISCOVERY_ORACLE = (
@@ -8101,8 +8047,7 @@ _CDX_ORACLE = """
 """
 
 
-@query("cdx_fetch_plan", oracle=_CDX_ORACLE)
-def q_cdx_fetch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cdx_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDX capture-index planning (sources/cdx.py) — the fourth Common
     Crawl artifact: the Spark side renders real CDXJ LINES (urlkey +
     timestamp + JSON with url/mime/status/digest/length/offset/filename),
@@ -8161,8 +8106,7 @@ _WAT_ORACLE = """
 """
 
 
-@query("wat_link_graph", oracle=_WAT_ORACLE)
-def q_wat_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _wat_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAT metadata ingestion (sources/warc.py:wat_outlinks): the third
     Common Crawl format — JSON metadata envelopes → the outlink edge
     list that bootstraps the host link graph (PageRank/HITS/OPIC priors)
@@ -8259,8 +8203,7 @@ _WARC_GZ_ORACLE = """
 """
 
 
-@query("warc_gz_ingest", oracle=_WARC_GZ_ORACLE)
-def q_warc_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _warc_gz_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw Common-Crawl archive leg end-to-end
     (sources/warc.py:read_warc_gz): 8 synthesized .warc.gz shards, each a
     gzip-MEMBER-per-record concatenation (ISO 28500 record-at-time
@@ -8333,6 +8276,70 @@ def q_warc_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "content_length", F.md5("body").alias("body_md5"), "len_ok",
     )
     return text.unionByName(binary)
+
+
+_ARCHIVE_INGEST_ORACLE = (
+    """
+    SELECT 'cdx' AS kind, CAST(NULL AS VARCHAR) AS lane,
+           filename AS container, url, CAST(NULL AS VARCHAR) AS label,
+           digest, ts, shard_seq AS seq, "offset", length,
+           n_dups AS n, dup_bytes_saved AS saved,
+           CAST(NULL AS BOOLEAN) AS len_ok
+    FROM ("""
+    + _CDX_ORACLE
+    + """)
+    UNION ALL
+    SELECT 'wat', NULL, src, url, link_path, NULL, NULL, link_ord, NULL,
+           NULL, n_outlinks, NULL, NULL
+    FROM ("""
+    + _WAT_ORACLE
+    + """)
+    UNION ALL
+    SELECT 'warc_gz', lane, shard, target_uri, warc_type, body_md5,
+           warc_date, record_ord, NULL, content_length, NULL, NULL, len_ok
+    FROM ("""
+    + _WARC_GZ_ORACLE
+    + """)
+    """
+)
+
+_ARCHIVE_INGEST_SCHEMA = {
+    "kind": "string", "lane": "string", "container": "string",
+    "url": "string", "label": "string", "digest": "string", "ts": "string",
+    "seq": "long", "offset": "long", "length": "long", "n": "long",
+    "saved": "long", "len_ok": "boolean",
+}
+
+
+@query("archive_ingest", oracle=_ARCHIVE_INGEST_ORACLE)
+def q_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The three archive-side Common Crawl artifacts as one tagged union
+    (``kind``): ``cdx`` — the CDXJ capture index → deduplicated fetch
+    plan; ``wat`` — WAT metadata envelopes → outlink edge list;
+    ``warc_gz`` — raw .warc.gz shards through the text and binary
+    readers (``lane``). Shared columns: ``container`` (CDX filename / WAT
+    source page / WARC shard), ``url`` (capture url / outlink / target
+    URI), ``label`` (WAT link path / WARC type), ``digest`` (CDX content
+    digest / WARC body md5), ``ts`` (CDX timestamp / WARC date), ``seq``
+    (CDX shard sequence / WAT link ordinal / WARC record ordinal),
+    ``offset``/``length`` (CDX member range; WARC Content-Length), ``n``
+    (CDX duplicates / WAT outlinks per page), ``saved`` (CDX duplicate
+    bytes avoided) and ``len_ok`` (WARC framing check). Each arm's
+    fixture and oracle are described on its rows function."""
+    S = _ARCHIVE_INGEST_SCHEMA
+    return reduce(DataFrame.unionByName, [
+        _arm(_cdx_rows(spark, sf_dir), S, "cdx",
+             container="filename", url="url", digest="digest", ts="ts",
+             seq="shard_seq", offset="offset", length="length",
+             n="n_dups", saved="dup_bytes_saved"),
+        _arm(_wat_rows(spark, sf_dir), S, "wat",
+             container="src", url="url", label="link_path", seq="link_ord",
+             n="n_outlinks"),
+        _arm(_warc_gz_rows(spark, sf_dir), S, "warc_gz",
+             lane="lane", container="shard", url="target_uri",
+             label="warc_type", digest="body_md5", ts="warc_date",
+             seq="record_ord", length="content_length", len_ok="len_ok"),
+    ])
 
 
 def _warc_http_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8851,6 +8858,14 @@ _CRAWL_URL_ORACLE = (
 )
 
 
+_CRAWL_URL_SCHEMA = {
+    "kernel": "string", "key": "long", "url": "string", "canonical": "string",
+    "flag_a": "boolean", "flag_b": "boolean", "flag_c": "boolean",
+    "lat": "double", "lon": "double", "priority": "long", "rank": "long",
+    "provider": "string", "label": "string",
+}
+
+
 @query("crawl_url_kernels", oracle=_CRAWL_URL_ORACLE)
 def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F5 + S4/J2 + X14 + the link-explorer discovery pipeline as one
@@ -8878,277 +8893,104 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/frontier.py:detect_mirror_hosts over a planted
     exact-mirror / partial-mirror / boilerplate-parking-page fixture) —
     each over its dedicated fixture."""
+    from web_crawler_spark import lake as LK
     from web_crawler_spark.operators import frontier as FR
 
-    _ns = F.lit(None).cast("string")
-    _nb = F.lit(None).cast("boolean")
-    _nd = F.lit(None).cast("double")
-    _nl = F.lit(None).cast("long")
-    lf = _link_filter_rows(spark, sf_dir).select(
-        F.lit("link_filter").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"),
-        F.col("href").alias("url"), "canonical",
-        F.col("is_bad_scheme").alias("flag_a"),
-        F.col("is_same_domain").alias("flag_b"),
-        F.col("is_excluded").alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    rg = _robots_gate_rows(spark, sf_dir).select(
-        F.lit("robots_gate").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"), "url",
-        _ns.alias("canonical"),
-        F.col("is_blocked").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    mu = _map_url_rows(spark, sf_dir).select(
-        F.lit("map_url").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"),
-        F.col("map_url").alias("url"), _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lon").cast("double").alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    md = _map_detect_rows(spark, sf_dir).select(
-        F.when(F.col("kind") == "iframe", F.lit("map_iframe"))
-        .otherwise(F.lit("map_link")).alias("kernel"),
-        F.col("k").alias("key"), F.col("src").alias("url"),
-        _ns.alias("canonical"),
-        F.col("coords_found").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        "lat", "lon", _nl.alias("priority"),
-        F.col("ord").cast("long").alias("rank"),
-        "provider", "label",
-    )
-    da = _map_dataattr_rows(spark, sf_dir).select(
-        F.lit("map_dataattr").alias("kernel"),
-        F.col("k").alias("key"), _ns.alias("url"), _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        "lat", "lon", _nl.alias("priority"),
-        F.col("ord").cast("long").alias("rank"),
-        _ns.alias("provider"), "label",
-    )
-    rt = _robots_txt_rows(spark, sf_dir).select(
-        F.lit("robots_txt").alias("kernel"),
-        F.col("k").alias("key"), F.col("value").alias("url"),
-        _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"), _nl.alias("priority"),
-        F.col("ord").alias("rank"),
-        _ns.alias("provider"), F.col("kind").alias("label"),
-    )
-    ld = _link_discovery_rows(spark, sf_dir).select(
-        F.lit("discover").alias("kernel"),
-        F.regexp_extract("sourceUrl", r"home-(\d+)$", 1)
-        .cast("long").alias("key"),
-        "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    dr = _doc_route_rows(spark, sf_dir).select(
-        F.lit("doc_route").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"), "url",
-        _ns.alias("canonical"),
-        F.col("is_pdf").alias("flag_a"),
-        F.col("is_doc").alias("flag_b"),
-        F.col("is_home").alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    pr = _pagerank_rows(spark, sf_dir).select(
-        F.lit("pagerank").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    at = _anchor_text_rows(spark, sf_dir).select(
-        F.lit("anchor_text").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", _nl.alias("rank"),
-        _ns.alias("provider"), "label",
-    )
-    tr = _trap_rows(spark, sf_dir).select(
-        F.lit("trap").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        F.col("is_trap").alias("flag_a"), _nb.alias("flag_b"),
-        _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("n_urls").alias("priority"),
-        F.col("n_templates").alias("rank"),
-        F.col("top_template_urls").cast("string").alias("provider"),
-        F.col("top_template").alias("label"),
-    )
-    ht = _hits_rows(spark, sf_dir).select(
-        F.lit("hits").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("auth_int").alias("priority"),
-        F.col("hub_int").alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    wr = _warc_rows(spark, sf_dir).select(
-        F.lit("warc").alias("kernel"),
-        F.col("k").alias("key"),
-        F.col("target_uri").alias("url"),
-        F.md5("body").alias("canonical"),
-        F.col("len_ok").alias("flag_a"),
-        (F.col("warc_type") == "conversion").alias("flag_b"),
-        _nb.alias("flag_c"), _nd.alias("lat"), _nd.alias("lon"),
-        F.col("content_length").alias("priority"),
-        F.col("record_ord").cast("long").alias("rank"),
-        F.col("warc_type").alias("provider"),
-        F.col("warc_date").alias("label"),
-    )
-    wh = _warc_http_rows(spark, sf_dir).select(
-        F.lit("warc_http").alias("kernel"),
-        F.col("k").cast("long").alias("key"),
-        F.col("target_uri").alias("url"),
-        F.col("payload_md5").alias("canonical"),
-        F.col("len_ok").alias("flag_a"),
-        (F.col("http_status") == 200).alias("flag_b"),
-        _nb.alias("flag_c"), _nd.alias("lat"), _nd.alias("lon"),
-        F.col("http_status").alias("priority"),
-        F.col("record_ord").cast("long").alias("rank"),
-        F.col("http_content_type").alias("provider"),
-        F.col("warc_type").alias("label"),
-    )
-    rd = _redirect_rows(spark, sf_dir).select(
-        F.lit("redirect").alias("kernel"),
-        F.col("k").alias("key"), "url",
-        F.col("final_url").alias("canonical"),
-        F.col("is_loop").alias("flag_a"), _nb.alias("flag_b"),
-        _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("n_hops").alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    rc = _recrawl_rows(spark, sf_dir).select(
-        F.lit("recrawl").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        F.col("due").alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", F.col("n_changes").alias("rank"),
-        F.col("n_visits").cast("string").alias("provider"),
-        F.col("next_due").cast("string").alias("label"),
-    )
-    tk = _trustrank_rows(spark, sf_dir).select(
-        F.lit("trustrank").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    oc = _opic_rows(spark, sf_dir).select(
-        F.lit("opic").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    ib = _ip_budget_rows(spark, sf_dir).select(
-        F.lit("ip_budget").alias("kernel"),
-        F.col("k").alias("key"), "url",
-        F.col("polite_key").alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("ip_rank").alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), F.col("seed_host").alias("label"),
-    )
+    S = _CRAWL_URL_SCHEMA
     mirror_pairs = FR.detect_mirror_hosts(
         _mirror_rows(spark, sf_dir), "host", "fp",
         max_fp_hosts=10, min_shared=2,
     )
-    mcl = D.connected_min(
+    mirror_clusters = D.connected_min(
         mirror_pairs.filter(F.col("is_mirror")).select(
             F.col("host_a").alias("a"), F.col("host_b").alias("b"))
-    ).select(
-        F.lit("mirror_cluster").alias("kernel"), _nl.alias("key"),
-        F.col("node").alias("url"),
-        F.col("component").alias("canonical"),
-        (F.col("node") == F.col("component")).alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    mr = mirror_pairs.select(
-        F.lit("mirror").alias("kernel"),
-        F.col("shared").alias("key"),
-        F.col("host_a").alias("url"),
-        F.col("host_b").alias("canonical"),
-        F.col("is_mirror").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("jaccard_micro").alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     dust_pages = _dust_rows(spark, sf_dir)
     dust_rules = FR.mine_param_rules(dust_pages, "url", "fp", min_support=3)
-    dur = dust_rules.select(
-        F.lit("dust_rule").alias("kernel"), _nl.alias("key"),
-        F.col("host").alias("url"), F.col("param").alias("canonical"),
-        F.col("is_rule").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("support").alias("priority"),
-        F.col("counterexamples").alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    dua = FR.apply_param_rules(
+    dust_applied = FR.apply_param_rules(
         dust_pages.select("url").distinct(), dust_rules
-    ).select(
-        F.lit("dust_apply").alias("kernel"), _nl.alias("key"),
-        "url", F.col("canonical_url").alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     # frontier z-order layout key (lake.zorder_value — the clustering key
     # zorder compaction range-partitions by): Morton interleave of two
     # closed-form 8-bit ranks, plus the 16-way file bucket it implies
     # (zv >> 12); the oracle re-derives the identical bit algebra in SQL
-    from web_crawler_spark import lake as LK
-
     zsrc = load(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("long").alias("key"),
         (F.col("p_partkey") % 256).cast("long").alias("_zx"),
         ((F.col("p_partkey") / 7).cast("long") % 256).alias("_zy"),
     )
     zv = LK.zorder_value([F.col("_zx"), F.col("_zy")], bits=8)
-    zo = zsrc.select(
-        F.lit("zorder").alias("kernel"), "key",
-        _ns.alias("url"), _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        zv.alias("priority"), F.shiftright(zv, 12).alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
-    )
-    return (
-        lf.unionByName(rg).unionByName(mu).unionByName(md).unionByName(da)
-        .unionByName(rt).unionByName(ld).unionByName(dr)
-        .unionByName(pr).unionByName(at).unionByName(rc).unionByName(tr)
-        .unionByName(ht).unionByName(rd).unionByName(wr).unionByName(wh)
-        .unionByName(tk).unionByName(oc).unionByName(ib)
-        .unionByName(mr).unionByName(mcl).unionByName(dur).unionByName(dua)
-        .unionByName(zo)
-    )
+    return reduce(DataFrame.unionByName, [
+        _arm(_link_filter_rows(spark, sf_dir), S, "link_filter",
+             key="p_partkey", url="href", canonical="canonical",
+             flag_a="is_bad_scheme", flag_b="is_same_domain",
+             flag_c="is_excluded"),
+        _arm(_robots_gate_rows(spark, sf_dir), S, "robots_gate",
+             key="p_partkey", url="url", flag_a="is_blocked"),
+        _arm(_map_url_rows(spark, sf_dir), S, "map_url",
+             key="p_partkey", url="map_url", lat="lat", lon="lon"),
+        _arm(_map_detect_rows(spark, sf_dir), S,
+             F.when(F.col("kind") == "iframe", F.lit("map_iframe"))
+             .otherwise(F.lit("map_link")),
+             key="k", url="src", flag_a="coords_found", lat="lat",
+             lon="lon", rank="ord", provider="provider", label="label"),
+        _arm(_map_dataattr_rows(spark, sf_dir), S, "map_dataattr",
+             key="k", lat="lat", lon="lon", rank="ord", label="label"),
+        _arm(_robots_txt_rows(spark, sf_dir), S, "robots_txt",
+             key="k", url="value", rank="ord", label="kind"),
+        _arm(_link_discovery_rows(spark, sf_dir), S, "discover",
+             key=F.regexp_extract("sourceUrl", r"home-(\d+)$", 1),
+             url="url", priority="priority", rank="rank"),
+        _arm(_doc_route_rows(spark, sf_dir), S, "doc_route",
+             key="p_partkey", url="url", flag_a="is_pdf", flag_b="is_doc",
+             flag_c="is_home"),
+        _arm(_pagerank_rows(spark, sf_dir), S, "pagerank",
+             key="k", url="url", priority="priority", rank="rank"),
+        _arm(_anchor_text_rows(spark, sf_dir), S, "anchor_text",
+             key="k", url="url", priority="priority", label="label"),
+        _arm(_recrawl_rows(spark, sf_dir), S, "recrawl",
+             key="k", url="url", flag_a="due", priority="priority",
+             rank="n_changes", provider="n_visits", label="next_due"),
+        _arm(_trap_rows(spark, sf_dir), S, "trap",
+             key="k", url="url", flag_a="is_trap", priority="n_urls",
+             rank="n_templates", provider="top_template_urls",
+             label="top_template"),
+        _arm(_hits_rows(spark, sf_dir), S, "hits",
+             key="k", url="url", priority="auth_int", rank="hub_int"),
+        _arm(_redirect_rows(spark, sf_dir), S, "redirect",
+             key="k", url="url", canonical="final_url", flag_a="is_loop",
+             priority="n_hops"),
+        _arm(_warc_rows(spark, sf_dir), S, "warc",
+             key="k", url="target_uri", canonical=F.md5("body"),
+             flag_a="len_ok", flag_b=F.col("warc_type") == "conversion",
+             priority="content_length", rank="record_ord",
+             provider="warc_type", label="warc_date"),
+        _arm(_warc_http_rows(spark, sf_dir), S, "warc_http",
+             key="k", url="target_uri", canonical="payload_md5",
+             flag_a="len_ok", flag_b=F.col("http_status") == 200,
+             priority="http_status", rank="record_ord",
+             provider="http_content_type", label="warc_type"),
+        _arm(_trustrank_rows(spark, sf_dir), S, "trustrank",
+             key="k", url="url", priority="priority", rank="rank"),
+        _arm(_opic_rows(spark, sf_dir), S, "opic",
+             key="k", url="url", priority="priority", rank="rank"),
+        _arm(_ip_budget_rows(spark, sf_dir), S, "ip_budget",
+             key="k", url="url", canonical="polite_key",
+             priority="ip_rank", label="seed_host"),
+        _arm(mirror_pairs, S, "mirror",
+             key="shared", url="host_a", canonical="host_b",
+             flag_a="is_mirror", priority="jaccard_micro"),
+        _arm(mirror_clusters, S, "mirror_cluster",
+             url="node", canonical="component",
+             flag_a=F.col("node") == F.col("component")),
+        _arm(dust_rules, S, "dust_rule",
+             url="host", canonical="param", flag_a="is_rule",
+             priority="support", rank="counterexamples"),
+        _arm(dust_applied, S, "dust_apply",
+             url="url", canonical="canonical_url"),
+        _arm(zsrc, S, "zorder",
+             key="key", priority=zv, rank=F.shiftright(zv, 12)),
+    ])
 
 
 _PINS_ORACLE = (
@@ -9295,8 +9137,34 @@ _RECORDS_KERNELS_ORACLE = (
     FROM ("""
     + _PINS_ORACLE
     + """)
+    UNION ALL
+    SELECT 'footprint_wkt', s_suppkey, footprint, NULL, NULL, NULL, NULL,
+           NULL, NULL, NULL, NULL
+    FROM ("""
+    + _FOOTPRINT_ORACLE
+    + """)
+    UNION ALL
+    SELECT 'phone_postal_format', o_orderkey, phone, postal, NULL, NULL,
+           NULL, NULL, NULL, NULL, NULL
+    FROM ("""
+    + _PHONE_POSTAL_ORACLE
+    + """)
+    UNION ALL
+    SELECT 'activity_classify', p_partkey, descr, activity, NULL, NULL,
+           NULL, NULL, height_m, NULL, NULL
+    FROM ("""
+    + _ACTIVITY_ORACLE
+    + """)
     """
 )
+
+
+_RECORDS_KERNELS_SCHEMA = {
+    "kernel": "string", "key": "long",
+    "s1": "string", "s2": "string", "s3": "string",
+    "s4": "string", "s5": "string", "s6": "string",
+    "d1": "double", "d2": "double", "b1": "boolean",
+}
 
 
 @query("records_kernels", oracle=_RECORDS_KERNELS_ORACLE)
@@ -9304,56 +9172,42 @@ def q_records_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X8 (levenshtein similarity) + X12 (height estimator) + X6 (canonical
     address formatter) + X29/X30 (deterministic row ids) + X21/X22 (needs-JS
     heuristic + page classifier) + X28 (hours/websites/social batteries) +
-    W9/W10 (line/match caps) + the tagged per-country PIN battery as one
-    tagged union over their dedicated fixtures. Generic columns: s1-s6 strings, d1/d2 doubles, b1 boolean —
+    W9/W10 (line/match caps) + the tagged per-country PIN battery + X13
+    (footprint WKT) + X5/X7 (phone/ZIP formatters) + X11/X12 (activity
+    classifier + height) as one tagged union over their dedicated
+    fixtures. Generic columns: s1-s6 strings, d1/d2 doubles, b1 boolean —
     every kernel output still flows into the driver's value hash."""
-    _ns = F.lit(None).cast("string")
-    _nd = F.lit(None).cast("double")
-    _nb = F.lit(None).cast("boolean")
-
-    def pad(df, kernel, key, s=(), d=(), b=None):
-        cols = [F.lit(kernel).alias("kernel"), F.col(key).cast("long").alias("key")]
-        for i in range(6):
-            cols.append(
-                F.col(s[i]).cast("string").alias(f"s{i+1}")
-                if i < len(s) and s[i] is not None
-                else _ns.alias(f"s{i+1}")
-            )
-        for i in range(2):
-            cols.append(
-                F.col(d[i]).cast("double").alias(f"d{i+1}")
-                if i < len(d) and d[i] is not None
-                else _nd.alias(f"d{i+1}")
-            )
-        cols.append(F.col(b).alias("b1") if b else _nb.alias("b1"))
-        return df.select(*cols)
-
-    parts = [
-        pad(_levenshtein_rows(spark, sf_dir), "levenshtein", "c_custkey",
-            s=("a", "b"), d=("sim",)),
-        pad(_height_rows(spark, sf_dir), "height", "p_partkey",
-            s=("activity",), d=("height",)),
-        pad(_address_normalize_rows(spark, sf_dir), "address_normalize",
-            "p_partkey", s=("raw", "normalized")),
-        pad(_det_ids_rows(spark, sf_dir), "deterministic_ids", "o_orderkey",
-            s=("row_id",)),
-        pad(_page_classify_rows(spark, sf_dir), "page_classify", "p_partkey",
-            s=("url", "page_type"), d=("confidence", "priority"), b="needs_js"),
-        pad(_hours_social_rows(spark, sf_dir), "hours_web_social", "s_suppkey",
-            s=("hours", "websites", "facebook", "twitter", "linkedin",
-               "instagram")),
-        pad(_place_details_rows(spark, sf_dir), "place_details", "o_orderkey",
-            s=("place_id", "pd_phone", "pd_website", "pd_hours", "pd_types"),
-            d=("pd_rating",), b="pd_hit"),
-        pad(_line_caps_rows(spark, sf_dir), "line_caps", "s_suppkey",
-            d=("lines_scanned", "distinct_matches")),
-        pad(_pins_rows(spark, sf_dir), "pins", "key",
-            s=("code", "country")),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    S = _RECORDS_KERNELS_SCHEMA
+    return reduce(DataFrame.unionByName, [
+        _arm(_levenshtein_rows(spark, sf_dir), S, "levenshtein",
+             key="c_custkey", s1="a", s2="b", d1="sim"),
+        _arm(_height_rows(spark, sf_dir), S, "height",
+             key="p_partkey", s1="activity", d1="height"),
+        _arm(_address_normalize_rows(spark, sf_dir), S, "address_normalize",
+             key="p_partkey", s1="raw", s2="normalized"),
+        _arm(_det_ids_rows(spark, sf_dir), S, "deterministic_ids",
+             key="o_orderkey", s1="row_id"),
+        _arm(_page_classify_rows(spark, sf_dir), S, "page_classify",
+             key="p_partkey", s1="url", s2="page_type", d1="confidence",
+             d2="priority", b1="needs_js"),
+        _arm(_hours_social_rows(spark, sf_dir), S, "hours_web_social",
+             key="s_suppkey", s1="hours", s2="websites", s3="facebook",
+             s4="twitter", s5="linkedin", s6="instagram"),
+        _arm(_place_details_rows(spark, sf_dir), S, "place_details",
+             key="o_orderkey", s1="place_id", s2="pd_phone",
+             s3="pd_website", s4="pd_hours", s5="pd_types", d1="pd_rating",
+             b1="pd_hit"),
+        _arm(_line_caps_rows(spark, sf_dir), S, "line_caps",
+             key="s_suppkey", d1="lines_scanned", d2="distinct_matches"),
+        _arm(_pins_rows(spark, sf_dir), S, "pins",
+             key="key", s1="code", s2="country"),
+        _arm(_footprint_rows(spark, sf_dir), S, "footprint_wkt",
+             key="s_suppkey", s1="footprint"),
+        _arm(_phone_postal_rows(spark, sf_dir), S, "phone_postal_format",
+             key="o_orderkey", s1="phone", s2="postal"),
+        _arm(_activity_rows(spark, sf_dir), S, "activity_classify",
+             key="p_partkey", s1="descr", s2="activity", d1="height_m"),
+    ])
 
 
 # ---- media: image resize + audio features + video frame sampling ---------
@@ -9435,6 +9289,13 @@ def _video_frames_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.sample_frames(videos, every_n=2)
 
 
+_MEDIA_FEATURES_SCHEMA = {
+    "kernel": "string", "media_id": "string", "frame_idx": "long",
+    "w": "long", "h": "long", "fmt": "string", "duration_s": "double",
+    "rms": "double", "zero_crossings": "long", "decode_ok": "boolean",
+}
+
+
 @query("media_features", oracle=_MEDIA_FEATURES_ORACLE)
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal payload battery as one tagged union: image decode →
@@ -9444,35 +9305,19 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame of MINIVID capsules, poison rows yield decode_ok=false). All
     three run Arrow-batched mapInPandas over binary payload columns — the
     production plumbing shape for opaque media at scale."""
-    _nd = F.lit(None).cast("double")
-    _nl = F.lit(None).cast("long")
-    _ns = F.lit(None).cast("string")
-    img = _image_resize_rows(spark, sf_dir).select(
-        F.lit("image_resize").alias("kernel"),
-        F.col("image_id").alias("media_id"), _nl.alias("frame_idx"),
-        F.col("w").cast("long").alias("w"), F.col("h").cast("long").alias("h"),
-        "fmt", _nd.alias("duration_s"), _nd.alias("rms"),
-        _nl.alias("zero_crossings"), "decode_ok",
-    )
-    aud = _audio_features_rows(spark, sf_dir).select(
-        F.lit("audio").alias("kernel"),
-        F.col("audio_id").alias("media_id"), _nl.alias("frame_idx"),
-        _nl.alias("w"), _nl.alias("h"), _ns.alias("fmt"),
-        F.col("duration_s").cast("double").alias("duration_s"),
-        F.col("rms").cast("double").alias("rms"),
-        F.col("zero_crossings").cast("long").alias("zero_crossings"),
-        "decode_ok",
-    )
-    vid = _video_frames_rows(spark, sf_dir).select(
-        F.lit("video").alias("kernel"),
-        F.col("video_id").alias("media_id"),
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        F.col("w").cast("long").alias("w"), F.col("h").cast("long").alias("h"),
-        F.when(F.col("decode_ok"), F.lit("png")).alias("fmt"),
-        _nd.alias("duration_s"), _nd.alias("rms"),
-        _nl.alias("zero_crossings"), "decode_ok",
-    )
-    return img.unionByName(aud).unionByName(vid)
+    S = _MEDIA_FEATURES_SCHEMA
+    return reduce(DataFrame.unionByName, [
+        _arm(_image_resize_rows(spark, sf_dir), S, "image_resize",
+             media_id="image_id", w="w", h="h", fmt="fmt",
+             decode_ok="decode_ok"),
+        _arm(_audio_features_rows(spark, sf_dir), S, "audio",
+             media_id="audio_id", duration_s="duration_s", rms="rms",
+             zero_crossings="zero_crossings", decode_ok="decode_ok"),
+        _arm(_video_frames_rows(spark, sf_dir), S, "video",
+             media_id="video_id", frame_idx="frame_idx", w="w", h="h",
+             fmt=F.when(F.col("decode_ok"), F.lit("png")),
+             decode_ok="decode_ok"),
+    ])
 
 
 # --------------------------------------------------------------------------

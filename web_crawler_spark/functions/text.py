@@ -181,15 +181,6 @@ def minhash_signature(text: Column | str, k: int = 3, perms: int = 8) -> Column:
     return F.transform(F.array(sh), over)[0]
 
 
-def lsh_band_keys(sig: Column, perms: int, band_size: int = 2) -> Column:
-    """Band keys for a fixed-length signature (array<string>)."""
-    bands = []
-    for b in range(perms // band_size):
-        part = F.slice(sig, b * band_size + 1, band_size)
-        bands.append(F.md5(F.concat(F.lit(f"{b}|"), F.array_join(part, ","))))
-    return F.array(*bands)
-
-
 def word_overlap_similarity(a: Column | str, b: Column | str) -> Column:
     """X10: |common words| / |union| (scraper.service.js:155-190),
     over normalized tokens."""

@@ -1388,6 +1388,11 @@ def semantic_dedup_pairs(
     6-dp-rounded cosine (ties → smallest id), so the output is stable
     across engines and partitionings. Pass ``codebook`` (e.g. from
     ``ivf_train_codebook``) to cluster with trained centroids.
+
+    With ``n_centroids=None`` and no ``codebook``, the centroid count is
+    sized from the corpus by an eager ``df.count()`` that runs at call
+    time, not when the result is acted on (one extra pass over ``df``'s
+    lineage). Pass ``n_centroids`` or ``codebook`` to keep the call lazy.
     """
     from web_crawler_spark.operators import similarity as SIM
 
@@ -1397,9 +1402,6 @@ def semantic_dedup_pairs(
         # rows) exactly as embedding_neardup_pairs derives n_bits. A
         # FIXED centroid count at growing n is the scale trap: lists grow
         # as n/k and the within-list self-join goes quadratic.
-        # NOTE: this sizing runs one eager count() over df at call time
-        # (one extra upstream pass when df is unpersisted lineage) — pass
-        # n_centroids or a trained codebook explicitly to stay fully lazy.
         import math as _m
 
         n = df.count()
@@ -1455,7 +1457,8 @@ def semantic_dedup(
     """Corpus after SemDeDup: anti-join the dropped ids from
     :func:`semantic_dedup_pairs` (first-wins — the smallest id of each
     semantic group survives, every later member with an over-threshold
-    in-cluster witness is removed)."""
+    in-cluster witness is removed). As there, ``n_centroids=None``
+    without a ``codebook`` runs an eager ``df.count()`` at call time."""
     drops = semantic_dedup_pairs(
         df, id_col, vec_col, threshold, n_centroids, codebook, seed_strategy
     ).select(F.col("dup").alias(id_col))

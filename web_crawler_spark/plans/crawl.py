@@ -101,7 +101,6 @@ class CrawlConfig:
     # for cold hosts. CMS never undercounts, so no host is under-salted.
     host_salt_budget: int | None = None
     keep_snapshots: int = 3
-    ordering: str = "strict"     # strict = bit-identical; fast = hash order
     compact_every: int = 8       # fold delta into base every k waves
     # W5: stop visiting a seed once its cumulative extracted-location count
     # reaches this (professional-crawler.service.js:79-82, default 50 there)
@@ -603,17 +602,7 @@ class CrawlDriver:
             [(s, m) for s, m in max_seq_d.items()],
             "seed_host string, max_seq long",
         )
-        if cfg.ordering == "strict":
-            new = FR.assign_enqueue_seq(new, max_seq)
-        else:
-            # fast mode: any deterministic unique seq works; avoid the
-            # per-seed sort entirely (throughput benchmarking)
-            new = new.join(F.broadcast(max_seq), "seed_host", "left").withColumn(
-                "enqueue_seq",
-                F.coalesce(F.col("max_seq"), F.lit(0))
-                + 1
-                + F.pmod(F.xxhash64("url"), F.lit(2**40)),
-            ).drop("max_seq")
+        new = FR.assign_enqueue_seq(new, max_seq)
 
         new_frontier_rows = new.select(
             "url",

@@ -14,15 +14,16 @@ This module gives that planning step Spark shape:
 - :func:`parse_cdx` — lines → typed capture rows. Pure column algebra
   (``substring_index`` for the two space-delimited keys — the JSON tail
   may itself contain spaces — then ``get_json_object`` per field);
-  malformed JSON yields NULL fields, never a misparse.
+  malformed JSON or a malformed timestamp yields NULL fields, never a
+  misparse.
 - :func:`fetch_plan` — captures → the deduplicated fetch plan: keep
   2xx captures, elect ONE capture per content digest (Common Crawl
   stores revisits/duplicates under the same digest — fetching them all
   is pure waste), deterministic election (earliest timestamp, ties by
-  url then filename/offset). Emits per-shard plan rows sorted by
-  offset (sequential reads within a shard) plus the bytes each
-  duplicate skip saved — the fetch-avoidance metric a 100 TB replay
-  reports.
+  url then filename/offset, NULLs last). Captures without a digest are
+  never merged. Emits per-shard plan rows sorted by offset (sequential
+  reads within a shard) plus the bytes each duplicate skip saved — the
+  fetch-avoidance metric a 100 TB replay reports.
 
 Reference analogue: none (the reference crawls live pages); this is the
 archive-side entry point the north rule's scale story starts from,
@@ -47,16 +48,18 @@ CDX_FIELDS = {
 
 def parse_cdx(df: DataFrame, col: str = "line") -> DataFrame:
     """CDXJ lines → (urlkey, ts, url, mime, status, digest, length,
-    offset, filename). Keeps any other columns of ``df``."""
+    offset, filename). Keeps any other columns of ``df``. ``ts`` is NULL
+    unless the second key is a 4-14 digit CDX timestamp."""
     c = F.col(col)
     keep = [x for x in df.columns if x != col]
     json = F.expr(
         f"substring({col}, length(substring_index({col}, ' ', 2)) + 2)"
     )
+    ts = F.substring_index(F.substring_index(c, " ", 2), " ", -1)
     out = df.select(
         *keep,
         F.substring_index(c, " ", 1).alias("urlkey"),
-        F.substring_index(F.substring_index(c, " ", 2), " ", -1).alias("ts"),
+        F.when(ts.rlike(r"^[0-9]{4,14}$"), ts).alias("ts"),
         json.alias("_json"),
     )
     for name, typ in CDX_FIELDS.items():
@@ -84,19 +87,27 @@ def fetch_plan(
     captures collapsed into this digest, and ``dup_bytes_saved`` is the
     total member bytes the election avoided fetching. One shuffle on
     digest + one on filename — never a scan of the archive itself.
+
+    NULL policy: a NULL value in any election key (an unparseable ``ts``
+    included) sorts LAST, so a malformed capture never beats a
+    well-formed one. A capture with a NULL ``digest`` has no content
+    identity to share: it is never merged with another capture and is
+    planned on its own (``n_dups`` 1, ``dup_bytes_saved`` 0).
     """
     ok = captures.filter(F.col("status").isin(*statuses))
-    w = Window.partitionBy("digest").orderBy(
-        "ts", "url", "filename", "offset"
+    # NULL digests get a per-row key so no two of them share a partition
+    by = Window.partitionBy(
+        "digest",
+        F.when(F.col("digest").isNull(), F.monotonically_increasing_id()),
     )
+    w = by.orderBy(*[
+        F.col(c).asc_nulls_last() for c in ("ts", "url", "filename", "offset")
+    ])
     ranked = ok.select(
         "url", "ts", "digest", "filename", "offset", "length",
         F.row_number().over(w).alias("_rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("digest")).alias("n_dups"),
-        (
-            F.sum("length").over(Window.partitionBy("digest"))
-            - F.col("length")
-        ).alias("_saved"),
+        F.count(F.lit(1)).over(by).alias("n_dups"),
+        (F.sum("length").over(by) - F.col("length")).alias("_saved"),
     )
     elected = ranked.filter(F.col("_rn") == 1).drop("_rn")
     ws = Window.partitionBy("filename").orderBy("offset")

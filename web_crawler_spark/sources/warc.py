@@ -404,7 +404,8 @@ def http_response(body: Column) -> Column:
 def wat_outlinks(
     df: DataFrame, body_col: str = "body", uri_col: str = "target_uri"
 ) -> DataFrame:
-    """WAT metadata records → the outlink edge list (src, link_ord, url).
+    """WAT metadata records → the outlink edge list (src, link_ord,
+    link_path, url).
 
     WAT is the third Common Crawl format (WARC envelope, JSON body): the
     canonical outlink path is ``Envelope → Payload-Metadata →
