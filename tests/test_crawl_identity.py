@@ -19,12 +19,17 @@ def _spark_results(driver):
     rows = frontier.orderBy("seed_host", "enqueue_seq").collect()
     by_seed: dict[str, dict] = {}
     for r in rows:
-        d = by_seed.setdefault(r["seed_host"], {"discovered": [], "visits": []})
+        d = by_seed.setdefault(
+            r["seed_host"], {"discovered": [], "visits": [], "blocked": []}
+        )
         d["discovered"].append(r["url"])
         if r["status"] in ("visited", "error"):
             d["visits"].append((r["visit_seq"], r["url"]))
+        elif r["status"] == "robots_blocked":
+            d["blocked"].append(r["url"])
     for d in by_seed.values():
         d["visits"] = [u for _, u in sorted(d["visits"])]
+        d["blocked"].sort()
     return by_seed
 
 
@@ -93,19 +98,24 @@ def test_bloom_pre_prune_is_lossless(spark, tmp_path):
     assert _spark_results(base) == _spark_results(bloomed)
 
 
-def test_robots_gate_blocks_disallowed(spark, tmp_path):
+@pytest.mark.parametrize("cap", [None, 10])
+def test_robots_gate_blocks_disallowed(spark, tmp_path, cap):
     """S4/F5/J2: with robots checking on, queued URLs under a host's
     disallow prefixes end 'robots_blocked' (never fetched), permissive
     hosts are unaffected, and every blocked URL agrees with the
-    single-threaded robots oracle (robots.service.js:44-71 semantics)."""
+    single-threaded robots oracle (robots.service.js:44-71 semantics).
+    Per seed the visit order, discovery order and blocked set equal the
+    oracle's robots-on crawl, with and without the W5 location cap
+    (blocked rows count toward maxPages and add no locations)."""
     # seed 6: hosts 1/7/11 have pages under their disallow prefixes
     web = SyntheticWeb(n_hosts=12, pages_per_host=20, seed=6)
     with_rules = [h for h in range(web.n_hosts) if web.robots(h)["disallow_prefixes"]]
     assert with_rules, "fixture must include at least one disallowing host"
 
     driver = CrawlDriver(
-        spark, web, str(tmp_path / "robots_crawl"),
-        CrawlConfig(max_pages=20, max_depth=3, check_robots=True, use_bloom=False),
+        spark, web, str(tmp_path / f"robots_crawl_{cap}"),
+        CrawlConfig(max_pages=20, max_depth=3, check_robots=True,
+                    use_bloom=False, max_locations=cap),
     )
     driver.run(max_waves=10)
     rows = driver.frontier_tbl.read(spark).collect()
@@ -119,6 +129,31 @@ def test_robots_gate_blocks_disallowed(spark, tmp_path):
         assert not web.robots_allows(host_idx[host], url), (host, url)
     for host, url in visited:
         assert web.robots_allows(host_idx[host], url), (host, url)
+
+    got = _spark_results(driver)
+    want = crawl_all(web, max_pages=20, max_depth=3, check_robots=True,
+                     max_locations=cap)
+    for seed, res in want.items():
+        g = got[seed.split("//", 1)[1].split("/", 1)[0]]
+        assert g["visits"] == res.visit_order, seed
+        assert g["discovered"] == res.discovered, seed
+        assert g["blocked"] == sorted(res.robots_blocked), seed
+
+
+def test_snapshot_without_max_seq_raises(spark, tmp_path):
+    """Budgets come from snapshot summaries only: a frontier snapshot that
+    lacks ``max_seq`` was not written by this engine, and resuming from
+    it raises with the table path instead of re-deriving by a scan."""
+    wd = str(tmp_path / "legacy")
+    driver = CrawlDriver(spark, WEB, wd, CrawlConfig(use_bloom=False))
+    driver.run(max_waves=0)  # seeds the frontier, runs no wave
+    driver.frontier_tbl.overwrite(
+        driver._seed_frontier(), summary={"wave": 0, "op": "seed"}
+    )
+    resumed = CrawlDriver(spark, WEB, wd, CrawlConfig(use_bloom=False))
+    with pytest.raises(ValueError, match="max_seq") as err:
+        resumed.run(resume=True, max_waves=1)
+    assert driver.frontier_tbl.path in str(err.value)
 
 
 def test_crawl_delay_budget_preserves_order(spark, tmp_path):

@@ -4,9 +4,9 @@ Re-expresses the reference UI's data grid pipeline
 (web-crawler-ui/src/components/CustomDataGrid.jsx): conjunctive
 case-insensitive contains-filters (:44-52, F11), quality-range filter
 (AdvancedFilter.jsx:37-44, F12), single-key sort with nulls last (:55-69,
-W7), pagination (:72-77, W8), CSV export of the filtered+sorted view
-(:168-190, S9) — as one declarative DataFrame chain that Catalyst folds
-into a single scan with pushed filters.
+W7), pagination (:72-77, W8) — as one declarative DataFrame chain that
+Catalyst folds into a single scan with pushed filters. CSV export of the
+filtered+sorted view (:168-190, S9) is ``sources/bulk.py:export_csv``.
 
 Pagination note for scale: ``paginate`` uses a global sort + offset/limit,
 which is the correct semantics for a UI page; for deep paging over 10^10
@@ -71,18 +71,3 @@ def autocomplete(df: DataFrame, col: str, value: str, limit: int = 10) -> DataFr
         .orderBy("suggestion")
         .limit(limit)
     )
-
-
-def export_csv(df: DataFrame, path: str, columns: list[str] | None = None) -> None:
-    """S9: CSV export with full quoting, matching the UI's "-escaped export.
-    escape='"' doubles embedded quotes (RFC 4180) instead of Spark's
-    default backslash-escaping."""
-    out = df.select(*columns) if columns else df
-    (
-        out.write.mode("overwrite")
-        .option("header", True)
-        .option("quoteAll", True)
-        .option("escape", '"')
-        .csv(path)
-    )
-

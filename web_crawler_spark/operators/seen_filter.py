@@ -51,19 +51,6 @@ DEFAULT_K = 6
 BROADCAST_BYTES_MAX = 64 << 20
 
 
-def _pick_mode(mode: str, filter_bytes: int, broadcast_bytes_max: int) -> str:
-    """Resolve mode='auto' from the filter's declared byte size — the safe
-    mode is the automatic one: a filter too big to collect on the driver
-    selects the cogroup path without anyone having to read a docstring."""
-    if mode == "auto":
-        return "broadcast" if filter_bytes <= broadcast_bytes_max else "cogroup"
-    if mode not in ("broadcast", "cogroup"):
-        raise ValueError(
-            f"mode must be 'auto', 'broadcast' or 'cogroup', got {mode!r}"
-        )
-    return mode
-
-
 def _with_hashes(df: DataFrame, url_col: str, n_buckets: int) -> DataFrame:
     return (
         df.withColumn("_h1", F.xxhash64(F.col(url_col)))
@@ -133,6 +120,95 @@ def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
+def _probe(
+    candidates: DataFrame,
+    filt: DataFrame,
+    blob_col: str,
+    hits,
+    filter_bytes: int,
+    url_col: str,
+    n_buckets: int,
+    mode: str,
+    broadcast_bytes_max: int,
+) -> DataFrame:
+    """Adds boolean ``maybe_seen``: False ⇒ definitely NOT in the seen set.
+
+    The one probe behind :func:`prune` and :func:`prune_cuckoo`. A sketch
+    supplies its declared byte size, its blob column and a kernel
+    ``hits(h1, h2, blobs) -> bool array`` testing hashed keys against the
+    non-NULL blobs of their bucket (a bucket with several rows is the
+    union of its blobs, mirroring collapse_blooms' merge-on-read).
+
+    ``mode="auto"`` (default) selects ``broadcast`` when ``filter_bytes``
+    (derived from the declared geometry, never from data) is at or under
+    ``broadcast_bytes_max``, ``cogroup`` above it — a filter too big to
+    collect on the driver picks the safe path automatically.
+
+    ``mode="broadcast"``: the whole filter ships to each executor ONCE as
+    a Spark broadcast variable and the membership check is a local numpy
+    lookup per Arrow batch. No join, no shuffle, and crucially no per-row
+    blob: the earlier broadcast-JOIN formulation attached the bucket's
+    128 KiB bitmap to every candidate row, so a 150k-row prune pushed
+    ~19 GB through the Arrow boundary (measured 41 s at sf0.1 — the fix
+    is >40×).
+
+    ``mode="cogroup"``: for filters too big to broadcast (≳ executor
+    memory; a 10^10-URL seen set at 12 bits/key is ~15 GB): candidates
+    shuffle by bucket and cogroup with the filter rows, so each bucket's
+    blobs cross the boundary once per bucket. Parallelism = n_buckets —
+    size n_buckets to the cluster at that scale.
+    """
+    if mode == "auto":
+        mode = "broadcast" if filter_bytes <= broadcast_bytes_max else "cogroup"
+    elif mode not in ("broadcast", "cogroup"):
+        raise ValueError(
+            f"mode must be 'auto', 'broadcast' or 'cogroup', got {mode!r}"
+        )
+    hashed = _with_hashes(candidates, url_col, n_buckets)
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
+    ) + ", maybe_seen boolean"
+    in_cols = candidates.columns
+
+    def flagged(pdf: pd.DataFrame, res: np.ndarray) -> pd.DataFrame:
+        out = pdf[in_cols].copy()
+        out["maybe_seen"] = res
+        return out
+
+    if mode == "broadcast":
+        tbl: dict[int, list] = {}
+        for r in filt.select("bucket", blob_col).collect():
+            if r[blob_col] is not None:
+                tbl.setdefault(int(r["bucket"]), []).append(r[blob_col])
+        bc = candidates.sparkSession.sparkContext.broadcast(tbl)
+
+        def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            tblv = bc.value
+            for pdf in batches:
+                res = np.zeros(len(pdf), dtype=bool)
+                h1, h2 = pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy()
+                for bkt, idx in pdf.groupby("_bucket").indices.items():
+                    blobs = tblv.get(int(bkt))
+                    if blobs:
+                        res[idx] = hits(h1[idx], h2[idx], blobs)
+                yield flagged(pdf, res)
+
+        return hashed.mapInPandas(check, schema=schema)
+
+    def check_cg(key, cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
+        res = np.zeros(len(cand_pdf), dtype=bool)
+        blobs = [b for b in filt_pdf[blob_col] if b is not None]
+        if len(cand_pdf) and blobs:
+            res = hits(cand_pdf["_h1"].to_numpy(), cand_pdf["_h2"].to_numpy(), blobs)
+        return flagged(cand_pdf, res)
+
+    return (
+        hashed.groupBy("_bucket")
+        .cogroup(filt.select("bucket", blob_col).groupBy("bucket"))
+        .applyInPandas(check_cg, schema=schema)
+    )
+
+
 def prune(
     candidates: DataFrame,
     bloom: DataFrame,
@@ -143,89 +219,20 @@ def prune(
     mode: str = "auto",
     broadcast_bytes_max: int = BROADCAST_BYTES_MAX,
 ) -> DataFrame:
-    """Adds boolean ``maybe_seen``: False ⇒ definitely NOT in the seen set.
+    """Bloom probe: adds ``maybe_seen`` (modes and contract: :func:`_probe`).
+    The declared size is n_buckets × m_bits/8 (8 MiB at the defaults); a
+    bucket's bitmaps are ORed and a key hits when all k bits are set."""
 
-    ``mode="auto"`` (default) derives the filter's byte size from the
-    declared geometry (n_buckets × m_bits/8) and selects ``broadcast``
-    at or under ``broadcast_bytes_max``, ``cogroup`` above it — the
-    driver-OOM shape picks the safe path automatically.
-
-    ``mode="broadcast"``: the whole filter (n_buckets ×
-    m_bits/8 bytes — 8 MiB at the defaults) ships to each executor ONCE
-    as a Spark broadcast variable and the membership check is a local
-    numpy lookup per Arrow batch. No join, no shuffle, and crucially no
-    per-row blob: the earlier broadcast-JOIN formulation attached the
-    bucket's 128 KiB bitmap to every candidate row, so a 150k-row prune
-    pushed ~19 GB through the Arrow boundary (measured 41 s at sf0.1 —
-    the fix is >40×). Multiple rows per bucket are OR-merged at collect
-    time, mirroring collapse_blooms' merge-on-read.
-
-    ``mode="cogroup"``: for filters too big to broadcast (≳ executor
-    memory; a 10^10-URL seen set at 12 bits/key is ~15 GB): candidates
-    shuffle by bucket and cogroup with the filter rows, so each bucket's
-    bitmap crosses the boundary once per bucket. Parallelism = n_buckets
-    — size n_buckets to the cluster at that scale.
-    """
-    mode = _pick_mode(mode, n_buckets * (m_bits // 8), broadcast_bytes_max)
-    hashed = _with_hashes(candidates, url_col, n_buckets)
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-    schema = out_fields + ", maybe_seen boolean"
-    in_cols = [f.name for f in candidates.schema.fields]
-
-    def _hits(pdf: pd.DataFrame, bitmap: np.ndarray, idx) -> np.ndarray:
-        pos = _bit_positions(
-            pdf["_h1"].to_numpy()[idx], pdf["_h2"].to_numpy()[idx], m_bits, k
-        )
+    def hits(h1: np.ndarray, h2: np.ndarray, blobs: list) -> np.ndarray:
+        bitmap = np.frombuffer(blobs[0], dtype=np.uint8)
+        for blob in blobs[1:]:
+            bitmap = bitmap | np.frombuffer(blob, dtype=np.uint8)
+        pos = _bit_positions(h1, h2, m_bits, k)
         return ((bitmap[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
 
-    if mode == "broadcast":
-        blobs: dict[int, np.ndarray] = {}
-        for r in bloom.select("bucket", "bitmap").collect():
-            if r["bitmap"] is None:
-                continue
-            bm = np.frombuffer(r["bitmap"], dtype=np.uint8)
-            b = int(r["bucket"])
-            blobs[b] = (blobs[b] | bm) if b in blobs else bm
-        bc = candidates.sparkSession.sparkContext.broadcast(
-            {b: bm.tobytes() for b, bm in blobs.items()}
-        )
-
-        def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tbl = bc.value
-            for pdf in batches:
-                res = np.zeros(len(pdf), dtype=bool)
-                if len(pdf):
-                    for bkt, idx in pdf.groupby("_bucket").indices.items():
-                        blob = tbl.get(int(bkt))
-                        if blob is not None:
-                            res[idx] = _hits(pdf, np.frombuffer(blob, np.uint8), idx)
-                out = pdf[in_cols].copy()
-                out["maybe_seen"] = res
-                yield out
-
-        return hashed.mapInPandas(check, schema=schema)
-
-    def check_cg(key, cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        res = np.zeros(len(cand_pdf), dtype=bool)
-        maps = [
-            np.frombuffer(m, dtype=np.uint8)
-            for m in filt_pdf["bitmap"] if m is not None
-        ]
-        if len(cand_pdf) and maps:
-            bm = maps[0].copy()
-            for m in maps[1:]:
-                bm |= m
-            res = _hits(cand_pdf, bm, slice(None))
-        out = cand_pdf[in_cols].copy()
-        out["maybe_seen"] = res
-        return out
-
-    return (
-        hashed.groupBy("_bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(check_cg, schema=schema)
+    return _probe(
+        candidates, bloom, "bitmap", hits, n_buckets * (m_bits // 8),
+        url_col, n_buckets, mode, broadcast_bytes_max,
     )
 
 
@@ -479,29 +486,13 @@ def prune_cuckoo(
     mode: str = "auto",
     broadcast_bytes_max: int = BROADCAST_BYTES_MAX,
 ) -> DataFrame:
-    """Adds boolean ``maybe_seen``: False ⇒ definitely NOT in the seen set.
-    Same contract and modes as the bloom ``prune``: ``mode="auto"``
-    (default) resolves from the declared geometry (n_buckets × n_cells ×
-    n_slots × 2 bytes) against ``broadcast_bytes_max``; ``broadcast``
-    ships the whole filter once per executor, never one copy per row;
-    ``cogroup`` shuffles candidates by bucket for filters too big to
-    broadcast. FPR ≈ 2·n_slots/2^16 ≈ 0.012%. A bucket with multiple
-    table rows is treated as the union of their entry sets (hit in any
-    table)."""
-    mode = _pick_mode(
-        mode, n_buckets * n_cells * n_slots * 2, broadcast_bytes_max
-    )
-    hashed = _with_hashes(candidates, url_col, n_buckets)
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-    schema = out_fields + ", maybe_seen boolean"
-    in_cols = [f.name for f in candidates.schema.fields]
+    """Cuckoo probe: adds ``maybe_seen`` (modes and contract: :func:`_probe`).
+    The declared size is n_buckets × n_cells × n_slots × 2 bytes; a key
+    hits when any of its bucket's tables holds its fingerprint in either
+    candidate cell. FPR ≈ 2·n_slots/2^16 ≈ 0.012%."""
 
-    def _hits(pdf: pd.DataFrame, blobs: list, idx) -> np.ndarray:
-        fp, canon = _ck_entries(
-            pdf["_h1"].to_numpy()[idx], pdf["_h2"].to_numpy()[idx], n_cells
-        )
+    def hits(h1: np.ndarray, h2: np.ndarray, blobs: list) -> np.ndarray:
+        fp, canon = _ck_entries(h1, h2, n_cells)
         alt = canon ^ _ck_cellhash(fp, n_cells)
         f_i = fp[:, None]
         res = np.zeros(len(fp), dtype=bool)
@@ -510,39 +501,7 @@ def prune_cuckoo(
             res |= (tab[canon] == f_i).any(axis=1) | (tab[alt] == f_i).any(axis=1)
         return res
 
-    if mode == "broadcast":
-        tbl: dict[int, list] = {}
-        for r in filt.select("bucket", "table").collect():
-            if r["table"] is not None:
-                tbl.setdefault(int(r["bucket"]), []).append(r["table"])
-        bc = candidates.sparkSession.sparkContext.broadcast(tbl)
-
-        def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tblv = bc.value
-            for pdf in batches:
-                res = np.zeros(len(pdf), dtype=bool)
-                if len(pdf):
-                    for bkt, idx in pdf.groupby("_bucket").indices.items():
-                        blobs = tblv.get(int(bkt))
-                        if blobs:
-                            res[idx] = _hits(pdf, blobs, idx)
-                out = pdf[in_cols].copy()
-                out["maybe_seen"] = res
-                yield out
-
-        return hashed.mapInPandas(check, schema=schema)
-
-    def check_cg(key, cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        res = np.zeros(len(cand_pdf), dtype=bool)
-        blobs = [b for b in filt_pdf["table"] if b is not None]
-        if len(cand_pdf) and blobs:
-            res = _hits(cand_pdf, blobs, slice(None))
-        out = cand_pdf[in_cols].copy()
-        out["maybe_seen"] = res
-        return out
-
-    return (
-        hashed.groupBy("_bucket")
-        .cogroup(filt.groupBy("bucket"))
-        .applyInPandas(check_cg, schema=schema)
+    return _probe(
+        candidates, filt, "table", hits, n_buckets * n_cells * n_slots * 2,
+        url_col, n_buckets, mode, broadcast_bytes_max,
     )

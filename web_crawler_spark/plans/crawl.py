@@ -143,18 +143,19 @@ class CrawlDriver:
     # committed content, so budgets derived from them are crash-consistent
     # with the data a wave reads — no O(frontier) scan, no side state.
     def _base_agg(self) -> dict[str, int]:
-        cur = self.frontier_tbl.current()
-        agg = (cur or {}).get("summary", {}).get("max_seq")
-        if agg is not None:
-            return dict(agg)
-        # legacy checkpoint without summary aggregates: recover by scan
-        rows = (
-            self.frontier_tbl.read(self.spark)
-            .groupBy("seed_host")
-            .agg(F.max("enqueue_seq").alias("m"))
-            .collect()
-        )
-        return {r["seed_host"]: r["m"] for r in rows}
+        """Per-seed max enqueue_seq from the base snapshot's summary. Every
+        frontier write (seed, discover, compact, requeue) records it, so a
+        snapshot without ``max_seq`` was not written by this engine: it
+        raises ValueError naming the table and snapshot instead of being
+        re-derived by a scan."""
+        cur = self.frontier_tbl.current() or {}
+        agg = cur.get("summary", {}).get("max_seq")
+        if agg is None:
+            raise ValueError(
+                f"frontier table {self.frontier_tbl.path} snapshot "
+                f"{cur.get('snapshot_id')} has no max_seq in its summary"
+            )
+        return dict(agg)
 
     def _delta_agg(self) -> tuple[dict[str, int], dict[str, int]]:
         cur = self.delta_tbl.current() if self.delta_tbl.exists() else None
@@ -188,10 +189,12 @@ class CrawlDriver:
             .drop("_dstatus", "_dwave", "_dseq")
         )
 
-    def _read_bloom(self) -> DataFrame | None:
+    def _read_bloom(self, compact_wave: int | None = None) -> DataFrame | None:
         """Seen-set sketch, merged on read: appended wave deltas are extra
         rows per bucket; collapse to one row per bucket only when deltas
-        have accumulated (single-fileset reads skip the OR shuffle)."""
+        have accumulated (single-fileset reads skip the OR shuffle). With
+        ``compact_wave`` a collapsed sketch is also written back, so
+        merge-on-read fan-in stays bounded by ``compact_every``."""
         if not self.bloom_tbl.exists():
             return None
         df = self.bloom_tbl.read(self.spark)
@@ -200,6 +203,10 @@ class CrawlDriver:
             from web_crawler_spark.operators import seen_filter as SF
 
             df = SF.collapse_blooms(df)
+            if compact_wave is not None:
+                self.bloom_tbl.overwrite(
+                    df, summary={"wave": compact_wave, "op": "compact"}
+                )
         return df
 
     def _compact(self, wave: int) -> None:
@@ -207,16 +214,8 @@ class CrawlDriver:
         ``compact_every`` waves instead of per wave) and truncate it. The
         running aggregates are carried forward in both new snapshots'
         summaries, so they survive the fold and later snapshot expiry."""
-        bl_snap = self.bloom_tbl.current() if self.cfg.use_bloom else None
-        if bl_snap and len(bl_snap["files"]) > 1:
-            # fold accumulated bloom deltas to one row per bucket so
-            # merge-on-read fan-in stays bounded by compact_every
-            from web_crawler_spark.operators import seen_filter as SF
-
-            self.bloom_tbl.overwrite(
-                SF.collapse_blooms(self.bloom_tbl.read(self.spark)),
-                summary={"wave": wave, "op": "compact"},
-            )
+        if self.cfg.use_bloom:
+            self._read_bloom(compact_wave=wave)
         if self._delta() is None:
             return
         visited_n, loc_found = self._delta_agg()
@@ -378,9 +377,17 @@ class CrawlDriver:
         return self.frontier()
 
     def _run_wave(self, wave: int, robots_df) -> bool:
-        """One wave: budgeted visit of lowest-seq queued rows → fetch →
-        link expansion → seen anti-join → append. Returns False when no
-        work remains (all budgets exhausted or queue drained).
+        """One wave: budgeted visit of lowest-seq queued rows → robots gate
+        → fetch → W5 cutoff → link expansion → seen anti-join → append.
+        Returns False when no work remains (all budgets exhausted or queue
+        drained).
+
+        After the robots gate the wave holds ONE persisted slice: the fetch
+        output plus a ``status`` column (visited/error), with robots-blocked
+        rows unioned in as ``robots_blocked`` (no body, ``fetch_ok`` false,
+        ``n_locations`` 0). The W5 cutoff, the per-seed stats aggregate,
+        the status transitions and the pages append (its non-blocked rows)
+        all read that one frame.
 
         All writes are delta-sized appends (new discoveries → base table,
         status transitions → delta table); the only full-base work is a
@@ -407,19 +414,6 @@ class CrawlDriver:
 
         max_seq_d = self._base_agg()
         visited_n, loc_found = self._delta_agg()
-        if delta is None and not self.delta_tbl.exists():
-            # fresh-from-compacted-base case (e.g. legacy checkpoint):
-            # visit counts live in base statuses, recover once by scan
-            cur = self.frontier_tbl.current() or {}
-            if cur.get("summary", {}).get("op") not in ("seed",):
-                rows = (
-                    base.filter(
-                        F.col("status").isin("visited", "error", "robots_blocked")
-                    )
-                    .groupBy("seed_host").count().collect()
-                )
-                for r in rows:
-                    visited_n[r["seed_host"]] = visited_n.get(r["seed_host"], 0) + r["count"]
 
         def _remaining(seed: str) -> int:
             if (
@@ -441,14 +435,9 @@ class CrawlDriver:
         )
         take = take.withColumn("wave", F.lit(wave)).withColumn("visit_seq", F.col("enqueue_seq"))
 
+        blocked = None
         if robots_df is not None and cfg.check_robots:
             take, blocked = FR.robots_gate(take, robots_df)
-            # no count here: the per-seed bstats aggregate below is the one
-            # action that both materializes the persist and yields n_blocked
-            blocked = blocked.persist()
-        else:
-            blocked = None
-        n_blocked = 0
 
         host_salts = None
         if cfg.host_salt_budget:
@@ -458,9 +447,24 @@ class CrawlDriver:
                 "seed_host",
                 per_salt_budget=cfg.host_salt_budget,
             )
-        fetched = fetch_pages(
+        wave_rows = fetch_pages(
             take, self.web, cfg.salt_partitions, host_salts=host_salts
-        ).persist()
+        ).withColumn(
+            "status",
+            F.when(F.col("fetch_ok"), F.lit("visited")).otherwise(F.lit("error")),
+        )
+        if blocked is not None:
+            wave_rows = wave_rows.unionByName(
+                blocked.select(
+                    "url", "seed_host", "depth", "enqueue_seq", "wave", "visit_seq",
+                    F.lit(None).cast("string").alias("body"),
+                    F.lit(None).cast("string").alias("xhr_json"),
+                    F.lit(False).alias("fetch_ok"),
+                    F.lit(0).alias("n_locations"),
+                    F.lit("robots_blocked").alias("status"),
+                )
+            )
+        wave_rows = wave_rows.persist()
 
         # ---- W5 in-wave cutoff (professional-crawler.service.js:79-82) ----
         # the reference checks locationsFound before visiting EACH url, so
@@ -473,40 +477,30 @@ class CrawlDriver:
                 [(s, loc_found.get(s, 0)) for s in max_seq_d],
                 "seed_host string, _carry long",
             )
-            fb = fetched.select(
-                "seed_host", "url", "visit_seq", F.col("n_locations").alias("_nl")
-            )
-            if blocked is not None:
-                fb = fb.unionByName(
-                    blocked.select(
-                        "seed_host", "url", "visit_seq", F.lit(0).alias("_nl")
-                    )
-                )
             wv = Window.partitionBy("seed_host").orderBy("visit_seq")
             keep_keys = (
-                fb.join(F.broadcast(carry), "seed_host", "left")
-                .withColumn("_prev", F.sum("_nl").over(wv) - F.col("_nl"))
+                wave_rows.select("seed_host", "url", "visit_seq", "n_locations")
+                .join(F.broadcast(carry), "seed_host", "left")
+                .withColumn(
+                    "_prev", F.sum("n_locations").over(wv) - F.col("n_locations")
+                )
                 .filter(
                     F.coalesce(F.col("_carry"), F.lit(0)) + F.col("_prev")
                     < cfg.max_locations
                 )
                 .select("seed_host", "url")
             )
-            kept = fetched.join(keep_keys, ["seed_host", "url"], "left_semi").persist()
-            fetched.unpersist()
-            fetched = kept
-            if blocked is not None:
-                bk = blocked.join(keep_keys, ["seed_host", "url"], "left_semi").persist()
-                blocked.unpersist()
-                blocked = bk
+            kept = wave_rows.join(keep_keys, ["seed_host", "url"], "left_semi").persist()
+            wave_rows.unpersist()
+            wave_rows = kept
 
-        # ---- per-seed wave stats: ONE action over fetched (and one over
-        # blocked) yields visit counts, location sums, and last visited
-        # position — the driver loop stays O(#seeds) per wave, not
-        # O(actions x stages)
-        fstats = {
+        # ---- per-seed wave stats: ONE action yields page and transition
+        # counts, location sums and the last visited position — the driver
+        # loop stays O(#seeds) per wave, not O(actions x stages)
+        stats = {
             r["seed_host"]: r
-            for r in fetched.groupBy("seed_host").agg(
+            for r in wave_rows.groupBy("seed_host").agg(
+                F.count(F.when(F.col("status") != "robots_blocked", 1)).alias("_pages"),
                 F.count(F.lit(1)).alias("_n"),
                 F.sum(
                     F.when(F.col("fetch_ok"), F.col("n_locations")).otherwise(F.lit(0))
@@ -514,23 +508,12 @@ class CrawlDriver:
                 F.max("visit_seq").alias("_vk"),
             ).collect()
         }
-        n_fetched = sum(r["_n"] for r in fstats.values())
-        bstats: dict = {}
-        if blocked is not None:
-            bstats = {
-                r["seed_host"]: r
-                for r in blocked.groupBy("seed_host").agg(
-                    F.count(F.lit(1)).alias("_n"), F.max("visit_seq").alias("_vk")
-                ).collect()
-            }
-            n_blocked = sum(r["_n"] for r in bstats.values())
-        for seed in set(fstats) | set(bstats):
-            n_tr = fstats.get(seed, {"_n": 0})["_n"] + (
-                bstats[seed]["_n"] if seed in bstats else 0
-            )
-            visited_n[seed] = visited_n.get(seed, 0) + n_tr
-            if cfg.max_locations is not None and seed in fstats:
-                loc_found[seed] = loc_found.get(seed, 0) + int(fstats[seed]["_nl"] or 0)
+        n_fetched = sum(r["_pages"] for r in stats.values())
+        n_transitions = sum(r["_n"] for r in stats.values())
+        for seed, r in stats.items():
+            visited_n[seed] = visited_n.get(seed, 0) + r["_n"]
+            if cfg.max_locations is not None and r["_pages"]:
+                loc_found[seed] = loc_found.get(seed, 0) + int(r["_nl"])
 
         # ---- depth-skip gate (W6 x W5 interaction) ------------------------
         # Without a location cap every queued too-deep row can be popped-and-
@@ -545,16 +528,8 @@ class CrawlDriver:
             capped_seeds = [
                 s2 for s2, n in loc_found.items() if n >= cfg.max_locations
             ]
-            def _vk_of(d, seed):
-                v = d[seed]["_vk"] if seed in d else None
-                return -1 if v is None else v
-
-            vk = {
-                seed: max(_vk_of(fstats, seed), _vk_of(bstats, seed))
-                for seed in set(fstats) | set(bstats)
-            }
             vk_rows = spark.createDataFrame(
-                [(seed, v) for seed, v in vk.items()],
+                [(seed, r["_vk"]) for seed, r in stats.items()],
                 "seed_host string, _vk long",
             )
             deep_trans = (
@@ -565,13 +540,11 @@ class CrawlDriver:
                 )
                 .drop("_vk")
             )
-        if n_fetched == 0 and n_blocked == 0 and deep_trans.isEmpty():
-            if blocked is not None:
-                blocked.unpersist()
-            fetched.unpersist()
+        if n_transitions == 0 and deep_trans.isEmpty():
+            wave_rows.unpersist()
             return False
 
-        ok_pages = fetched.filter(F.col("fetch_ok"))
+        ok_pages = wave_rows.filter(F.col("fetch_ok"))
 
         # ---- link expansion on successfully fetched pages ----------------
         links = (
@@ -617,21 +590,10 @@ class CrawlDriver:
         ).persist()
 
         # ---- status transitions (the wave's frontier delta) ---------------
-        transitions = fetched.select(
-            "seed_host", "url",
-            F.when(F.col("fetch_ok"), F.lit("visited"))
-            .otherwise(F.lit("error")).alias("status"),
-            F.lit(wave).alias("wave_visited"),
-            F.col("visit_seq"),
-        )
-        if blocked is not None:
-            transitions = transitions.unionByName(
-                blocked.select(
-                    "seed_host", "url", F.lit("robots_blocked").alias("status"),
-                    F.lit(wave).alias("wave_visited"), F.col("visit_seq"),
-                )
-            )
-        transitions = transitions.unionByName(
+        transitions = wave_rows.select(
+            "seed_host", "url", "status",
+            F.lit(wave).alias("wave_visited"), "visit_seq",
+        ).unionByName(
             deep_trans.select(
                 "seed_host", "url", F.lit("depth_skipped").alias("status"),
                 F.lit(None).cast("int").alias("wave_visited"),
@@ -655,7 +617,7 @@ class CrawlDriver:
         summary = {
             "wave": wave,
             "pages_fetched": n_fetched,
-            "robots_blocked": n_blocked,
+            "robots_blocked": n_transitions - n_fetched,
             "candidates": n_cand,
             "deduped_out": n_cand - n_new,
             "new_urls": n_new,
@@ -678,10 +640,10 @@ class CrawlDriver:
         # read-back since deep-skip rows have no driver-side counts)
         def _write_pages() -> None:
             self.pages_tbl.append(
-                fetched,
+                wave_rows.filter(F.col("status") != "robots_blocked").drop("status"),
                 summary={"wave": wave, "rows": n_fetched},
                 lineage_key="seed_host",
-                lineage={s: int(r["_n"]) for s, r in fstats.items()},
+                lineage={s: int(r["_pages"]) for s, r in stats.items() if r["_pages"]},
             )
 
         def _write_bloom() -> None:
@@ -735,12 +697,10 @@ class CrawlDriver:
         self.pages_tbl.expire_snapshots(self.cfg.keep_snapshots)
         self.bloom_tbl.expire_snapshots(self.cfg.keep_snapshots)
 
-        fetched.unpersist()
+        wave_rows.unpersist()
         cand.unpersist()
         new_frontier_rows.unpersist()
         transitions.unpersist()
-        if blocked is not None:
-            blocked.unpersist()
         # progress iff we visited, blocked, or retired deep rows
         return True
 
