@@ -35,8 +35,7 @@ def _spark_results(driver):
 
 @pytest.mark.parametrize("host_budget", [None, 4])
 def test_bit_identical_order_and_seen_set(spark, tmp_path, host_budget):
-    cfg = CrawlConfig(max_pages=12, max_depth=3, host_wave_budget=host_budget,
-                      use_bloom=False)
+    cfg = CrawlConfig(max_pages=12, max_depth=3, host_wave_budget=host_budget)
     driver = CrawlDriver(spark, WEB, str(tmp_path / f"crawl_{host_budget}"), cfg)
     driver.run(max_waves=60)
     got = _spark_results(driver)
@@ -54,7 +53,7 @@ def test_bit_identical_order_and_seen_set(spark, tmp_path, host_budget):
 
 
 def test_priority_bucket_sort_matches_oracle(spark, tmp_path):
-    cfg = CrawlConfig(max_pages=12, max_depth=2, use_bloom=False)
+    cfg = CrawlConfig(max_pages=12, max_depth=2)
     driver = CrawlDriver(spark, WEB, str(tmp_path / "crawl_prio"), cfg)
     driver.run(max_waves=30)
     pr = driver.prioritized()
@@ -70,7 +69,7 @@ def test_priority_bucket_sort_matches_oracle(spark, tmp_path):
 
 
 def test_resume_reproduces_uninterrupted_state(spark, tmp_path):
-    cfg = CrawlConfig(max_pages=10, max_depth=3, use_bloom=False)
+    cfg = CrawlConfig(max_pages=10, max_depth=3)
     full = CrawlDriver(spark, WEB, str(tmp_path / "full"), cfg)
     full.run(max_waves=60)
 
@@ -82,20 +81,6 @@ def test_resume_reproduces_uninterrupted_state(spark, tmp_path):
     a = _spark_results(full)
     b = _spark_results(resumed)
     assert a == b
-
-
-def test_bloom_pre_prune_is_lossless(spark, tmp_path):
-    base = CrawlDriver(
-        spark, WEB, str(tmp_path / "nobloom"),
-        CrawlConfig(max_pages=10, max_depth=2, use_bloom=False),
-    )
-    base.run(max_waves=30)
-    bloomed = CrawlDriver(
-        spark, WEB, str(tmp_path / "bloom"),
-        CrawlConfig(max_pages=10, max_depth=2, use_bloom=True),
-    )
-    bloomed.run(max_waves=30)
-    assert _spark_results(base) == _spark_results(bloomed)
 
 
 @pytest.mark.parametrize("cap", [None, 10])
@@ -115,7 +100,7 @@ def test_robots_gate_blocks_disallowed(spark, tmp_path, cap):
     driver = CrawlDriver(
         spark, web, str(tmp_path / f"robots_crawl_{cap}"),
         CrawlConfig(max_pages=20, max_depth=3, check_robots=True,
-                    use_bloom=False, max_locations=cap),
+                    max_locations=cap),
     )
     driver.run(max_waves=10)
     rows = driver.frontier_tbl.read(spark).collect()
@@ -145,12 +130,12 @@ def test_snapshot_without_max_seq_raises(spark, tmp_path):
     lacks ``max_seq`` was not written by this engine, and resuming from
     it raises with the table path instead of re-deriving by a scan."""
     wd = str(tmp_path / "legacy")
-    driver = CrawlDriver(spark, WEB, wd, CrawlConfig(use_bloom=False))
+    driver = CrawlDriver(spark, WEB, wd, CrawlConfig())
     driver.run(max_waves=0)  # seeds the frontier, runs no wave
     driver.frontier_tbl.overwrite(
         driver._seed_frontier(), summary={"wave": 0, "op": "seed"}
     )
-    resumed = CrawlDriver(spark, WEB, wd, CrawlConfig(use_bloom=False))
+    resumed = CrawlDriver(spark, WEB, wd, CrawlConfig())
     with pytest.raises(ValueError, match="max_seq") as err:
         resumed.run(resume=True, max_waves=1)
     assert driver.frontier_tbl.path in str(err.value)
@@ -162,7 +147,7 @@ def test_crawl_delay_budget_preserves_order(spark, tmp_path):
     wave, without changing the final visit order or seen set — budgets
     move wave boundaries, never reorder (plans/crawl.py invariant)."""
     web = SyntheticWeb(n_hosts=3, pages_per_host=20, seed=6)
-    cfg_kw = dict(max_pages=12, max_depth=3, use_bloom=False)
+    cfg_kw = dict(max_pages=12, max_depth=3)
     base = CrawlDriver(spark, web, str(tmp_path / "nodelay"), CrawlConfig(**cfg_kw))
     base.run(max_waves=30)
     delayed = CrawlDriver(
@@ -195,7 +180,7 @@ def test_locations_found_early_exit(spark, tmp_path, cap, host_budget):
     :79-82) — same visit order, same visited set, rows past the stop point
     left queued — including when a politeness budget forces the stop to
     land mid-wave vs at a wave boundary."""
-    cfg = CrawlConfig(max_pages=30, max_depth=3, use_bloom=False,
+    cfg = CrawlConfig(max_pages=30, max_depth=3,
                       host_wave_budget=host_budget, max_locations=cap)
     driver = CrawlDriver(spark, WEB, str(tmp_path / f"cap_{cap}_{host_budget}"), cfg)
     driver.run(max_waves=60)
@@ -256,7 +241,7 @@ def test_discover_location_pages_reference_trace(spark):
 
 
 def test_requeue_recrawls_only_the_expired(spark, tmp_path):
-    cfg = CrawlConfig(max_pages=10, max_depth=3, use_bloom=True)
+    cfg = CrawlConfig(max_pages=10, max_depth=3)
     driver = CrawlDriver(spark, WEB, str(tmp_path / "requeue"), cfg)
     driver.run()
     before = {
@@ -290,14 +275,47 @@ def test_requeue_recrawls_only_the_expired(spark, tmp_path):
 
 def test_fresh_rerun_on_dirty_workdir_matches_clean_run(spark, tmp_path):
     """run(resume=False) on a workdir holding a finished crawl must drop the
-    stale delta/pages/bloom tables — otherwise the old run's visited counts
-    shrink the new per-seed budgets and the stale bloom drops live URLs."""
-    cfg = CrawlConfig(max_pages=12, max_depth=3, use_bloom=True)
-    wd = str(tmp_path / "dirty")
-    d1 = CrawlDriver(spark, WEB, wd, cfg)
+    stale delta/pages tables — otherwise the old run's visited counts
+    shrink the new per-seed budgets. The seen set is the base table's
+    discovery rows, so the crawl keeps no sketch table beside them."""
+    cfg = CrawlConfig(max_pages=12, max_depth=3)
+    wd = tmp_path / "dirty"
+    d1 = CrawlDriver(spark, WEB, str(wd), cfg)
     d1.run(max_waves=60)
     clean = _spark_results(d1)
 
-    d2 = CrawlDriver(spark, WEB, wd, cfg)  # same dir, fresh start
+    d2 = CrawlDriver(spark, WEB, str(wd), cfg)  # same dir, fresh start
     d2.run(max_waves=60)
     assert _spark_results(d2) == clean
+    assert not (wd / "seen_bloom").exists()
+
+
+def test_anti_join_seen_is_one_exact_join_keyed_by_seed(spark):
+    """J1 without a crawl: the seen set is keyed by (seed_host, url), so a
+    URL one seed has seen stays new for a seed that has not; duplicate
+    seen rows drop a candidate once, an empty seen set drops nothing, and
+    the executed plan is a single JVM join with no Python node."""
+    from web_crawler_spark.operators import frontier as FR
+
+    cand = spark.createDataFrame(
+        [("a.ex", "https://x.ex/p", 1), ("b.ex", "https://x.ex/p", 2),
+         ("a.ex", "https://a.ex/q", 3), ("b.ex", "https://b.ex/r", 4)],
+        "seed_host string, url string, link_idx int",
+    )
+    seen = spark.createDataFrame(
+        [("https://x.ex/p", "a.ex", 1), ("https://x.ex/p", "a.ex", 2),
+         ("https://b.ex/r", "b.ex", 1)],
+        "url string, seed_host string, depth int",
+    )
+    new = FR.anti_join_seen(cand, seen)
+    plan = new._jdf.queryExecution().executedPlan().toString()
+    assert new.columns == cand.columns
+    assert sorted(tuple(r) for r in new.collect()) == [
+        ("a.ex", "https://a.ex/q", 3), ("b.ex", "https://x.ex/p", 2),
+    ]
+    none_seen = FR.anti_join_seen(cand, spark.createDataFrame([], seen.schema))
+    assert sorted(none_seen.collect()) == sorted(cand.collect())
+
+    assert sum("Join" in line for line in plan.splitlines()) == 1, plan
+    for node in ("Python", "Pandas", "Arrow"):
+        assert node not in plan, plan

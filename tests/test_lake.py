@@ -308,108 +308,3 @@ def test_rollback_restores_content_without_deleting_history(spark, tmp_path):
     assert sorted(r["v"] for r in t.read(spark).collect()) == list(range(18))
     with pytest.raises(Exception):
         t.read(spark, bad["snapshot_id"]).collect()
-
-
-# ---------------- bucketed standing tables (co-located joins) --------------
-def test_bucketed_seen_set_joins_without_reshuffling(spark, tmp_path):
-    """The 100 TB frontier shape: the standing URL-seen set is written
-    hash-bucketed on url, so the per-wave anti-join never reshuffles it —
-    both-bucketed joins plan with ZERO exchanges, and a raw (delta) left
-    side costs exactly ONE exchange, sized to the delta. attach_bucketed
-    re-registers the same files in a fresh catalog (the resume path) with
-    the same plan shape."""
-    from web_crawler_spark import lake as L
-
-    seen = spark.range(20000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 50).cast("string"),
-                 F.lit("/p"), "id").alias("url")
-    )
-    cand = spark.range(1000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 50).cast("string"),
-                 F.lit("/p"), (F.col("id") * 7).cast("string")).alias("url")
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        L.write_bucketed(seen, "t_seen_b", str(tmp_path / "seen"), "url", 8)
-        L.write_bucketed(cand, "t_cand_b", str(tmp_path / "cand"), "url", 8)
-
-        j = spark.table("t_cand_b").join(spark.table("t_seen_b"), "url",
-                                         "left_anti")
-        expected = cand.join(seen, "url", "left_anti").count()
-        assert j.count() == expected
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-
-        # non-bucketed delta side: exactly one exchange, on the delta only
-        j2 = cand.join(spark.table("t_seen_b"), "url", "left_anti")
-        assert j2.count() == expected
-        plan2 = j2._jdf.queryExecution().executedPlan().toString()
-        assert plan2.count("Exchange") == 1, plan2
-
-        # resume path: re-attach the same files under a new catalog name
-        att = L.attach_bucketed(
-            spark, "t_seen_b2", str(tmp_path / "seen"), "url", 8
-        )
-        j3 = spark.table("t_cand_b").join(att, "url", "left_anti")
-        assert j3.count() == expected
-        plan3 = j3._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan3, plan3
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in ("t_seen_b", "t_cand_b", "t_seen_b2"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_attach_bucketed_refuses_existing_catalog_name(spark, tmp_path):
-    import pytest
-
-    from web_crawler_spark import lake as L
-
-    df = spark.range(100).select(F.col("id").cast("string").alias("url"))
-    L.write_bucketed(df, "t_attach_guard", str(tmp_path / "b"), "url", 4)
-    try:
-        with pytest.raises(ValueError, match="already exists"):
-            L.attach_bucketed(
-                spark, "t_attach_guard", str(tmp_path / "b"), "url", 4
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_attach_guard")
-
-
-def test_attach_bucketed_quotes_identifiers_and_path(spark, tmp_path):
-    """DDL hygiene: a LOCATION path containing a single quote must land as
-    an escaped literal (valid DDL, correct reads), and a table name the
-    catalog cannot hold must surface as the catalog's clean error — never
-    a broken-DDL ParseException from unquoted interpolation. (This
-    session catalog restricts names to [A-Za-z0-9_], so a weirder name
-    cannot exist at all; the quoting keeps the failure mode sane.)"""
-    import pyspark.sql.functions as F
-    import pytest
-    from pyspark.errors.exceptions.captured import (
-        AnalysisException,
-        ParseException,
-    )
-
-    from web_crawler_spark import lake as L
-
-    d = tmp_path / "o'brien"
-    d.mkdir()
-    df = spark.range(0, 100).select(
-        F.col("id").alias("url"), (F.col("id") % 7).alias("v")
-    )
-    L.write_bucketed(df, "wcs_quote_src", str(d / "t"), "url", 4)
-    try:
-        att = L.attach_bucketed(spark, "wcs_quote_att", str(d / "t"), "url", 4)
-        assert att.count() == 100
-        assert att.filter(F.col("v") == 3).count() == df.filter("v = 3").count()
-        with pytest.raises(AnalysisException):
-            L.attach_bucketed(spark, "wcs-bad-name", str(d / "t"), "url", 4)
-        with pytest.raises((AnalysisException, ParseException)) as ei:
-            L.attach_bucketed(spark, "wcs_bad2; DROP TABLE x", str(d / "t"),
-                              "url", 4)
-        assert "INVALID" in str(ei.value) or "valid name" in str(ei.value)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS wcs_quote_att")
-        spark.sql("DROP TABLE IF EXISTS wcs_quote_src")

@@ -1,5 +1,5 @@
-"""Partitioned Bloom filter: no false negatives, bounded false positives,
-mergeability."""
+"""Partitioned Bloom and cuckoo filters: no false negatives, bounded false
+positives, deletion."""
 
 from __future__ import annotations
 
@@ -24,14 +24,6 @@ def test_no_false_negatives_and_low_fpr(spark):
     outsiders = _urls(spark, 1_000_000, 5000, tag="zz")
     fp = SF.prune(outsiders, bloom).filter(F.col("maybe_seen")).count()
     assert fp / 5000 < 0.02, f"false-positive rate too high: {fp}/5000"
-
-
-def test_merge_is_union(spark):
-    a = _urls(spark, 0, 1000)
-    b = _urls(spark, 1000, 1000)
-    merged = SF.merge_blooms(SF.build_bloom(a), SF.build_bloom(b)).cache()
-    both = a.unionByName(b)
-    assert SF.prune(both, merged).filter(~F.col("maybe_seen")).count() == 0
 
 
 # ------------------------------------------------ S4 robots.txt parsing ----
@@ -191,21 +183,6 @@ def test_cuckoo_delete_forgets_only_the_deleted(spark):
     after = SF.delete_from_cuckoo(ck, gone).cache()
     assert SF.prune_cuckoo(gone, after).filter(F.col("maybe_seen")).count() == 0
     assert SF.prune_cuckoo(kept, after).filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_merge_is_union_and_idempotent(spark):
-    a = _urls(spark, 0, 1000)
-    b = _urls(spark, 1000, 1000)
-    ca, cb = SF.build_cuckoo(a).cache(), SF.build_cuckoo(b).cache()
-    merged = SF.merge_cuckoos(ca, cb).cache()
-    both = a.unionByName(b)
-    assert SF.prune_cuckoo(both, merged).filter(~F.col("maybe_seen")).count() == 0
-    # idempotent + deterministic: merge(a, a) is byte-identical to a,
-    # so replaying a wave's append cannot corrupt the seen set
-    twice = SF.merge_cuckoos(ca, ca)
-    rows_a = {r["bucket"]: bytes(r["table"]) for r in ca.collect()}
-    rows_t = {r["bucket"]: bytes(r["table"]) for r in twice.collect()}
-    assert rows_a == rows_t
 
 
 def test_cuckoo_build_deterministic_across_input_order(spark):

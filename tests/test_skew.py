@@ -22,12 +22,12 @@ def _results(driver):
 def test_salting_preserves_bit_identity(spark, tmp_path):
     base = CrawlDriver(
         spark, HOT_WEB, str(tmp_path / "nosalt"),
-        CrawlConfig(max_pages=60, max_depth=2, use_bloom=False),
+        CrawlConfig(max_pages=60, max_depth=2),
     )
     base.run(max_waves=20)
     salted = CrawlDriver(
         spark, HOT_WEB, str(tmp_path / "salt"),
-        CrawlConfig(max_pages=60, max_depth=2, use_bloom=False, salt_partitions=8),
+        CrawlConfig(max_pages=60, max_depth=2, salt_partitions=8),
     )
     salted.run(max_waves=20)
     assert _results(base) == _results(salted)
@@ -120,12 +120,12 @@ def test_host_salted_fetch_splits_hot_host_keeps_cold_whole(spark):
 def test_host_salting_preserves_bit_identity(spark, tmp_path):
     base = CrawlDriver(
         spark, HOT_WEB, str(tmp_path / "plain2"),
-        CrawlConfig(max_pages=60, max_depth=2, use_bloom=False),
+        CrawlConfig(max_pages=60, max_depth=2),
     )
     base.run(max_waves=20)
     salted = CrawlDriver(
         spark, HOT_WEB, str(tmp_path / "hostsalt"),
-        CrawlConfig(max_pages=60, max_depth=2, use_bloom=False,
+        CrawlConfig(max_pages=60, max_depth=2,
                     salt_partitions=8, host_salt_budget=10),
     )
     salted.run(max_waves=20)

@@ -44,7 +44,7 @@ def main() -> None:
     web = SyntheticWeb(n_hosts=n_hosts, pages_per_host=pages, seed=11)
     cfg = CrawlConfig(
         max_pages=pages, max_depth=10, host_wave_budget=budget,
-        use_bloom=True, compact_every=1_000_000,  # no compaction: pure delta cost
+        compact_every=1_000_000,  # no compaction: pure delta cost
     )
     workdir = tempfile.mkdtemp(prefix="wcs_wavecost_")
     driver = CrawlDriver(spark, web, workdir, cfg)

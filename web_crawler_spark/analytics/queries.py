@@ -3676,7 +3676,7 @@ def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_crawler_spark.synthetic.web import SyntheticWeb
 
     web = SyntheticWeb(n_hosts=3, pages_per_host=25, seed=42)
-    cfg = CrawlConfig(max_pages=12, max_depth=3, use_bloom=False)
+    cfg = CrawlConfig(max_pages=12, max_depth=3)
     driver = CrawlDriver(spark, web, tempfile.mkdtemp(prefix="wcs_q_"), cfg)
     # workload-aware shuffle sizing: per-wave frontier state here is a few
     # hundred rows — 32 shuffle partitions is pure scheduling overhead.
@@ -3706,7 +3706,7 @@ def q_crawl_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_crawler_spark.synthetic.web import SyntheticWeb
 
     web = SyntheticWeb(n_hosts=3, pages_per_host=25, seed=42)
-    cfg = CrawlConfig(max_pages=12, max_depth=3, use_bloom=False,
+    cfg = CrawlConfig(max_pages=12, max_depth=3,
                       keep_snapshots=1000, compact_every=1000)
     driver = CrawlDriver(spark, web, tempfile.mkdtemp(prefix="wcs_prog_"), cfg)
     prev = spark.conf.get("spark.sql.shuffle.partitions")

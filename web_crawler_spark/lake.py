@@ -491,85 +491,3 @@ class SnapshotTable:
         shutil.rmtree(self.path, ignore_errors=True)
         os.makedirs(self.meta_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
-
-
-# ------------------- bucketed standing tables (co-located joins) -----------
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    path: str,
-    key: str,
-    n_buckets: int,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a hash-bucketed, per-bucket-sorted parquet table.
-
-    This is the lake's answer to the per-wave frontier shuffle: a standing
-    table a job joins against EVERY wave (the URL-seen set, the robots
-    cache, the standing corpus fingerprints) should be stored
-    pre-partitioned on its join key. A bucketed scan exposes its hash
-    partitioning to the planner, so wave-after-wave joins and anti-joins
-    read the standing side in place — the only exchange left is the
-    (delta-sized) other side, and at 10^10 standing URLs vs 10^6-URL wave
-    deltas that is the difference between shuffling the corpus nightly and
-    shuffling a rounding error. Same mechanism as Iceberg's
-    ``bucket(n, col)`` partition transform / Hive bucketing; Spark reads
-    the spec from the session catalog (see :func:`attach_bucketed` for
-    re-attaching in a fresh session).
-    """
-    (
-        df.write.mode(mode)
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(name)
-    )
-
-
-def attach_bucketed(
-    spark: SparkSession,
-    name: str,
-    path: str,
-    key: str,
-    n_buckets: int,
-    schema_ddl: str | None = None,
-) -> DataFrame:
-    """Re-register a bucketed parquet directory in THIS session's catalog
-    (the resume path — catalog entries are session-scoped, the files are
-    not). Schema is inferred from the files unless ``schema_ddl`` pins it.
-
-    The declared ``(key, n_buckets)`` MUST match what
-    :func:`write_bucketed` used: Spark trusts the catalog's bucket spec
-    (it does not re-validate file contents), so a mismatched declaration
-    makes co-located joins silently drop matches — store the spec next to
-    the path (snapshot summary metadata is the natural place) and pass it
-    back verbatim. Refuses to touch an existing catalog entry rather than
-    dropping it (a same-named MANAGED table's data would go with it)."""
-    # quote identifiers and escape the location literal the same way the
-    # inferred-schema branch already quotes field names — a key or table
-    # name needing backquotes, or a path containing a quote or backslash,
-    # must produce valid DDL, not a broken (or wrong) statement. Dots
-    # split multi-part identifiers (db.table) BEFORE quoting so qualified
-    # names keep resolving to their database.
-    qname = ".".join(
-        "`" + part.replace("`", "``") + "`" for part in name.split(".")
-    )
-    qkey = "`" + key.replace("`", "``") + "`"
-    qpath = path.replace("\\", "\\\\").replace("'", "\\'")
-    if spark.catalog.tableExists(qname):
-        raise ValueError(
-            f"table {name!r} already exists in this session's catalog — "
-            "drop it explicitly before re-attaching"
-        )
-    if schema_ddl is None:
-        schema_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in spark.read.parquet(path).schema.fields
-        )
-    spark.sql(
-        f"CREATE TABLE {qname} ({schema_ddl}) USING PARQUET "
-        f"CLUSTERED BY ({qkey}) SORTED BY ({qkey}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{qpath}'"
-    )
-    return spark.table(qname)

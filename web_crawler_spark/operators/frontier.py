@@ -3,9 +3,8 @@
 Spark-first restatement of the reference's in-memory BFS machinery
 (site-crawler.service.js:129-196):
 
-- ``visited.has(url)`` / ``allDiscoveredUrls.has(url)``  →  J1: left_anti
-  join against the frontier table, with an optional Bloom-filter pre-prune
-  (exactness restored by the anti-join; the Bloom only cheapens it).
+- ``visited.has(url)`` / ``allDiscoveredUrls.has(url)``  →  J1: one exact
+  left_anti join against the frontier table on (seed_host, url).
 - FIFO ordering  →  an explicit ``enqueue_seq`` column: the queue position
   a single-threaded run would assign. All order-sensitive steps sort on it
   (never on partition order) — this is the bit-identity contract.
@@ -84,28 +83,16 @@ def dedup_first_discoverer(links: DataFrame) -> DataFrame:
     )
 
 
-def anti_join_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: DataFrame | None = None,
-) -> DataFrame:
-    """J1: drop URLs already in the seen set.
+def anti_join_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+    """J1: drop candidates whose (seed_host, url) is already in the seen set.
 
-    At 10^10-URL scale the seen table dwarfs each wave's candidates, so we
-    pre-prune with the partitioned Bloom filter (operators/seen_filter):
-    candidates the Bloom proves unseen skip the big shuffle entirely;
-    possible hits (including false positives) fall through to the exact
-    left_anti — exactness is preserved by construction.
+    One exact left_anti join, JVM-side. A Bloom pre-prune in front of it
+    was measured not to pay on crawl traffic: almost every candidate link
+    points at a URL the crawl has already seen, so nearly all of them fall
+    through to this join anyway, and the sketch can only shrink the probe
+    side, never the scan of the seen set.
     """
     seen_urls = seen.select("seed_host", "url")
-    if bloom is not None:
-        from web_crawler_spark.operators import seen_filter as SF
-
-        flagged = SF.prune(candidates, bloom)
-        definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        possible = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        checked = possible.join(seen_urls, on=["seed_host", "url"], how="left_anti")
-        return definite_new.unionByName(checked)
     return candidates.join(seen_urls, on=["seed_host", "url"], how="left_anti")
 
 

@@ -1,4 +1,4 @@
-"""Partitioned Bloom filter for the URL-seen set.
+"""Partitioned Bloom and cuckoo filters: build, probe, delete.
 
 north_rule: "a 10^10-URL frontier held in Iceberg tables with a partitioned
 Bloom/cuckoo-filter URL-seen set". Spark 4.1 does not SQL-register
@@ -7,16 +7,19 @@ join filters), so this module implements the sketch as library code:
 
 - the URL space is partitioned into ``n_buckets`` by ``xxhash64(url)``;
   each bucket owns an ``m_bits`` bitmap → the whole filter is a small
-  DataFrame ``(bucket int, bitmap binary)`` persisted as a side table
-  (SnapshotTable) next to the frontier;
+  DataFrame ``(bucket int, bitmap binary)``;
 - bit positions use double hashing ``(h1 + i*h2) mod m`` for i in [0,k)
   — h1/h2 are computed JVM-side (``xxhash64``), the bit twiddling is
   vectorized numpy over Arrow batches (no per-row Python);
-- the filter is mergeable: per-bucket bitwise OR → incremental per-wave
-  maintenance instead of rebuilds;
 - false positives only cost an extra exact anti-join probe; false
   negatives are impossible → exactness is preserved by construction
   (the anti-join downstream stays authoritative).
+
+Users: the registry's ``anti_join_seen`` bloom/cuckoo arms (certified
+against its exact arm) and ``dedup``'s corpus-fingerprint sketch. The
+crawl wave itself runs the exact anti-join only
+(``frontier.anti_join_seen``): on crawl traffic almost every candidate is
+already seen, so a pre-prune there saves nothing.
 
 Reference analogue: the in-memory ``visited``/``allDiscoveredUrls`` Sets
 (site-crawler.service.js:134-136) — which cannot exist at 10^10 URLs.
@@ -91,35 +94,6 @@ def build_bloom(
     )
 
 
-def collapse_blooms(df: DataFrame) -> DataFrame:
-    """Per-bucket bitwise OR over any number of bloom rows per bucket.
-
-    This is the merge-on-read half of O(delta) bloom maintenance: wave
-    deltas are appended as extra ``(bucket, bitmap)`` rows and collapsed
-    to one row per bucket here (OR is associative/commutative/idempotent,
-    so re-appended deltas from a replayed wave are harmless)."""
-
-    def or_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        maps = [np.frombuffer(m, dtype=np.uint8) for m in pdf["bitmap"] if m is not None]
-        out = maps[0].copy()
-        for m in maps[1:]:
-            out |= m
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "bitmap": [out.tobytes()]})
-
-    return (
-        df.select("bucket", "bitmap")
-        .groupBy("bucket")
-        .applyInPandas(or_group, schema="bucket int, bitmap binary")
-    )
-
-
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Per-bucket bitwise OR of two bloom tables (either may miss buckets)."""
-    return collapse_blooms(
-        a.select("bucket", "bitmap").unionByName(b.select("bucket", "bitmap"))
-    )
-
-
 def _probe(
     candidates: DataFrame,
     filt: DataFrame,
@@ -137,7 +111,7 @@ def _probe(
     supplies its declared byte size, its blob column and a kernel
     ``hits(h1, h2, blobs) -> bool array`` testing hashed keys against the
     non-NULL blobs of their bucket (a bucket with several rows is the
-    union of its blobs, mirroring collapse_blooms' merge-on-read).
+    union of its blobs).
 
     ``mode="auto"`` (default) selects ``broadcast`` when ``filter_bytes``
     (derived from the declared geometry, never from data) is at or under
@@ -241,23 +215,22 @@ def prune(
 # "bloom/cuckoo URL-seen set".
 # ===========================================================================
 #
-# Why a second sketch: the Bloom half above is OR-mergeable and replay-safe
-# but cannot forget — a URL scheduled for re-crawl (TTL expiry, robots
-# change) stays "seen" until a full rebuild. The cuckoo filter stores 16-bit
-# fingerprints in a 2-choice, 4-slot-per-cell table, so membership, merge,
-# AND deletion are all per-bucket local operations.
+# Why a second sketch: the Bloom half above cannot forget — a URL scheduled
+# for re-crawl (TTL expiry, robots change) stays "seen" until a full
+# rebuild. The cuckoo filter stores 16-bit fingerprints in a 2-choice,
+# 4-slot-per-cell table, so membership AND deletion are both per-bucket
+# local operations.
 #
 # Layout mirrors the bloom table: the URL space shards into ``n_buckets``
 # by ``xxhash64(url)``; each bucket owns an independent (n_cells × n_slots)
 # uint16 table serialized as one binary cell — the whole filter is a small
-# ``(bucket int, table binary)`` DataFrame persisted beside the frontier.
+# ``(bucket int, table binary)`` DataFrame.
 # Scale-out at 10^10 URLs is horizontal (more buckets), never bigger rows.
 #
-# Determinism/idempotence: an item IS its canonical entry
-# ``(fp, min(i, i ^ cellhash(fp)))``. build/merge/delete all reduce to
+# Determinism: an item IS its canonical entry
+# ``(fp, min(i, i ^ cellhash(fp)))``. build and delete both reduce to
 # "rebuild this bucket from a sorted, deduped entry set", so identical seen
-# sets produce byte-identical tables, merge(a, a) == a, and a replayed wave
-# append cannot double-insert (same replay-safety the bloom gets from OR).
+# sets produce byte-identical tables, whatever the input order.
 #
 # Reference analogue: site-crawler.service.js:134-136 — visited Sets, which
 # support delete() but cannot exist at 10^10 URLs.
@@ -396,41 +369,6 @@ def build_cuckoo(
     hashed = _with_hashes(df.select(url_col), url_col, n_buckets)
     return hashed.groupBy("_bucket").applyInPandas(
         agg_bucket, schema="bucket int, table binary"
-    )
-
-
-def merge_cuckoos(
-    a: DataFrame,
-    b: DataFrame,
-    n_cells: int = DEFAULT_CK_CELLS,
-    n_slots: int = DEFAULT_CK_SLOTS,
-) -> DataFrame:
-    """Per-bucket union of the canonical entry sets, rebuilt. Idempotent
-    (merge(a, a) == a byte-for-byte) and commutative — safe under wave
-    replay, like the bloom OR."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        fps, canons = [], []
-        for blob in pdf["table"]:
-            if blob is None:
-                continue
-            tab = np.frombuffer(blob, dtype=np.uint16).reshape(n_cells, n_slots)
-            fp, canon = _ck_extract_entries(tab, n_cells)
-            fps.append(fp)
-            canons.append(canon)
-        if not fps:
-            fps, canons = [np.zeros(0, dtype=np.uint16)], [np.zeros(0, dtype=np.int64)]
-        fp, canon = _ck_dedup(np.concatenate(fps), np.concatenate(canons))
-        table = _ck_build_table(fp, canon, n_cells, n_slots)
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "table": [table.tobytes()]}
-        )
-
-    return (
-        a.select("bucket", "table")
-        .unionByName(b.select("bucket", "table"))
-        .groupBy("bucket")
-        .applyInPandas(merge_group, schema="bucket int, table binary")
     )
 
 

@@ -23,8 +23,9 @@ the snapshot summary → a killed run resumes from the last complete wave
 (north_rule resumability).
 
 Scale design: all joins/windows partition by seed_host (embarrassingly
-parallel across sites); the seen-set anti-join is Bloom-pre-pruned; the
-fetch stage is salted across executors to break hot-host skew.
+parallel across sites); the seen set is one exact anti-join against the
+base's discovery rows; the fetch stage is salted across executors to
+break hot-host skew.
 
 Wave write cost is O(wave delta), not O(frontier): the frontier is a
 merge-on-read pair of tables — an append-only BASE of discovery rows
@@ -92,7 +93,6 @@ class CrawlConfig:
     host_wave_budget: int | None = None  # politeness cap per host per wave
     wave_seconds: float | None = None    # crawl-delay → per-wave host budget
     check_robots: bool = False   # reference checks robots in extract phase
-    use_bloom: bool = True
     salt_partitions: int | None = None
     # host-aware skew control: estimated per-host wave rows per fetch shard.
     # When set, a count-min sketch of the wave's hosts (operators/sketch.py)
@@ -119,7 +119,6 @@ class CrawlDriver:
         self.frontier_tbl = SnapshotTable(os.path.join(workdir, "frontier"))
         self.delta_tbl = SnapshotTable(os.path.join(workdir, "frontier_delta"))
         self.pages_tbl = SnapshotTable(os.path.join(workdir, "pages"))
-        self.bloom_tbl = SnapshotTable(os.path.join(workdir, "seen_bloom"))
         self.state_path = os.path.join(workdir, "crawl_state.json")
 
     # ------------------------------------------------------------ state ---
@@ -189,33 +188,11 @@ class CrawlDriver:
             .drop("_dstatus", "_dwave", "_dseq")
         )
 
-    def _read_bloom(self, compact_wave: int | None = None) -> DataFrame | None:
-        """Seen-set sketch, merged on read: appended wave deltas are extra
-        rows per bucket; collapse to one row per bucket only when deltas
-        have accumulated (single-fileset reads skip the OR shuffle). With
-        ``compact_wave`` a collapsed sketch is also written back, so
-        merge-on-read fan-in stays bounded by ``compact_every``."""
-        if not self.bloom_tbl.exists():
-            return None
-        df = self.bloom_tbl.read(self.spark)
-        snap = self.bloom_tbl.current()
-        if snap and len(snap["files"]) > 1:
-            from web_crawler_spark.operators import seen_filter as SF
-
-            df = SF.collapse_blooms(df)
-            if compact_wave is not None:
-                self.bloom_tbl.overwrite(
-                    df, summary={"wave": compact_wave, "op": "compact"}
-                )
-        return df
-
     def _compact(self, wave: int) -> None:
         """Fold the delta into base (one O(frontier) rewrite per
         ``compact_every`` waves instead of per wave) and truncate it. The
         running aggregates are carried forward in both new snapshots'
         summaries, so they survive the fold and later snapshot expiry."""
-        if self.cfg.use_bloom:
-            self._read_bloom(compact_wave=wave)
         if self._delta() is None:
             return
         visited_n, loc_found = self._delta_agg()
@@ -259,11 +236,9 @@ class CrawlDriver:
         the normal wave loop; re-visits reuse ``visit_seq = enqueue_seq``, so
         the crawl order stays deterministic.
 
-        The discovery Bloom needs no surgery: it gates NEW url discovery and
-        requeued urls already hold base rows, so re-discoveries still dedup
-        against the frontier. A deployment keying a sketch on the VISITED set
-        instead would pair this with ``seen_filter.delete_from_cuckoo`` (the
-        deletable sketch); the Bloom cannot forget.
+        The seen set needs no surgery: it is the base's discovery rows, and
+        requeued urls keep theirs, so re-discoveries still dedup against the
+        frontier.
 
         ``urls`` is a DataFrame with a ``url`` column — typically a small TTL
         batch (joined broadcast). Location budgets (``loc_found``) stay
@@ -337,10 +312,10 @@ class CrawlDriver:
         else:
             wave = 0
             # Fresh start on a dirty workdir: frontier is overwritten below,
-            # but delta / pages / bloom tables from a previous run would
-            # otherwise survive and poison the new run (stale visited counts
-            # shrink per-seed budgets; a stale bloom drops live URLs).
-            for tbl in (self.delta_tbl, self.pages_tbl, self.bloom_tbl):
+            # but delta / pages tables from a previous run would otherwise
+            # survive and poison the new run (stale visited counts shrink
+            # per-seed budgets).
+            for tbl in (self.delta_tbl, self.pages_tbl):
                 tbl.drop()
             seeds = self._seed_frontier()
             self.frontier_tbl.overwrite(
@@ -567,9 +542,8 @@ class CrawlDriver:
         # join trips a JVM assertion in this PySpark build — the count()
         # below reads the persisted rows, so it's a cheap cached-scan job.)
         cand = FR.dedup_first_discoverer(cand).persist()
-        bloom = self._read_bloom() if cfg.use_bloom else None
         # seen set == base discovery rows (delta only changes status)
-        new = FR.anti_join_seen(cand, base, bloom=bloom)
+        new = FR.anti_join_seen(cand, base)
 
         max_seq = spark.createDataFrame(
             [(s, m) for s, m in max_seq_d.items()],
@@ -624,17 +598,16 @@ class CrawlDriver:
             "visited_n": visited_n,
             "loc_found": loc_found,
         }
-        # Commit protocol: {pages, bloom delta, base append} are mutually
-        # independent and each replay-safe in ANY completion order
-        # (duplicate page appends dedup on read, bloom OR is idempotent,
-        # and a re-run wave re-discovers the same URLs into an anti-join
-        # that now drops them — the base never double-appends and
-        # enqueue_seqs never collide), so they're submitted CONCURRENTLY;
-        # the delta append stays strictly after the barrier as the wave's
-        # single commit point. Spark job submission is thread-safe and
-        # every write input is a persisted DataFrame, so the three small
-        # write jobs overlap their fixed scheduling/IO cost instead of
-        # paying it serially.
+        # Commit protocol: {pages, base append} are mutually independent
+        # and each replay-safe in ANY completion order (duplicate page
+        # appends dedup on read, and a re-run wave re-discovers the same
+        # URLs into an anti-join that now drops them — the base never
+        # double-appends and enqueue_seqs never collide), so they're
+        # submitted CONCURRENTLY; the delta append stays strictly after the
+        # barrier as the wave's single commit point. Spark job submission
+        # is thread-safe and every write input is a persisted DataFrame, so
+        # the two small write jobs overlap their fixed scheduling/IO cost
+        # instead of paying it serially.
         # lineage passed from the aggregates already collected above — no
         # read-back job per append (the delta append below keeps the
         # read-back since deep-skip rows have no driver-side counts)
@@ -646,29 +619,6 @@ class CrawlDriver:
                 lineage={s: int(r["_pages"]) for s, r in stats.items() if r["_pages"]},
             )
 
-        def _write_bloom() -> None:
-            # incremental seen-set sketch (north_rule: partitioned Bloom
-            # persisted next to the frontier). O(delta) like the frontier:
-            # the wave appends ONLY the delta buckets built from its new
-            # URLs; _read_bloom ORs appended rows per bucket and _compact
-            # folds them. The old read-old ∪ delta → overwrite rewrote the
-            # whole sketch every wave — at a 10^10-URL filter that is a
-            # multi-GB rewrite per wave for a KB-sized delta.
-            from web_crawler_spark.operators import seen_filter as SF
-
-            if not self.bloom_tbl.exists():
-                seed_src = new_frontier_rows.select("url").unionByName(
-                    base.select("url")
-                )
-                self.bloom_tbl.overwrite(
-                    SF.build_bloom(seed_src), summary={"wave": wave, "op": "seed"}
-                )
-            elif n_new > 0:
-                self.bloom_tbl.append(
-                    SF.build_bloom(new_frontier_rows.select("url")),
-                    summary={"wave": wave, "op": "delta"},
-                )
-
         def _write_base() -> None:
             self.frontier_tbl.append(
                 new_frontier_rows,
@@ -677,16 +627,11 @@ class CrawlDriver:
                 lineage=new_lineage,
             )
 
-        writes = [_write_pages]
-        if cfg.use_bloom:
-            writes.append(_write_bloom)
-        if n_new > 0:
-            writes.append(_write_base)
-        if len(writes) == 1:
-            writes[0]()
+        if n_new == 0:
+            _write_pages()
         else:
-            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                futures = [pool.submit(w) for w in writes]
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futures = [pool.submit(_write_pages), pool.submit(_write_base)]
             # pool __exit__ joined all threads; surface any failure before
             # the commit-point append below
             for fut in futures:
@@ -695,7 +640,6 @@ class CrawlDriver:
         self.frontier_tbl.expire_snapshots(self.cfg.keep_snapshots)
         self.delta_tbl.expire_snapshots(self.cfg.keep_snapshots)
         self.pages_tbl.expire_snapshots(self.cfg.keep_snapshots)
-        self.bloom_tbl.expire_snapshots(self.cfg.keep_snapshots)
 
         wave_rows.unpersist()
         cand.unpersist()
