@@ -162,18 +162,25 @@ def ingest(spark: SparkSession, archive_dir: str, out_dir: str) -> dict:
 
     tbl = SnapshotTable(out_dir)
     n_records = recs.count()
-    n_pairs = out.count()
-    tbl.append(
-        out, partition_by=["seed_host"], lineage_key="seed_host",
-        summary={
-            "job": "ingest_warc", "n_archive_records": n_records,
-            "n_pairs": n_pairs,
-        },
-    )
+    # the pair pipeline (gunzip, decode, phash on Python workers) runs
+    # once: the count fills the cache and the append writes from it; the
+    # per-host lineage the append reads back from its files gives `hosts`
+    out = out.persist()
+    try:
+        n_pairs = out.count()
+        snap = tbl.append(
+            out, partition_by=["seed_host"], lineage_key="seed_host",
+            summary={
+                "job": "ingest_warc", "n_archive_records": n_records,
+                "n_pairs": n_pairs,
+            },
+        )
+    finally:
+        out.unpersist()
     return {
         "records": n_records,
         "pairs": n_pairs,
-        "hosts": out.select("seed_host").distinct().count(),
+        "hosts": len(snap["partition_lineage"]),
         "seconds": round(time.time() - t0, 2),
     }
 

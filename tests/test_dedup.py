@@ -603,6 +603,22 @@ def test_dedup_against_corpus_false_positives_verified_away(spark):
     assert ids == list(range(1000, 1100))
 
 
+def test_dedup_against_corpus_probes_the_sketch_once(spark):
+    # the verify join keys on (fingerprint, maybe_seen) over ONE probe
+    # output, so the executed plan runs the Python sketch probe once;
+    # the output keeps the increment's columns, fingerprint last
+    corpus = spark.createDataFrame(
+        [(i, f"old {i}") for i in range(100)], "doc_id long, text string"
+    )
+    inc = spark.createDataFrame(
+        [(1000 + i, f"new {i}") for i in range(100)], "doc_id long, text string"
+    )
+    got = D.dedup_against_corpus(inc, corpus)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert got.columns == ["doc_id", "text", "fingerprint"]
+
+
 def test_c4_span_dedup_keeps_first_occurrence_deletes_rest(spark):
     """C4 §2.2 (operators/dedup.py:c4_span_dedup): a duplicated
     three-sentence span survives only at its globally first (doc, pos);

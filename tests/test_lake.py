@@ -285,6 +285,7 @@ def test_rollback_restores_content_without_deleting_history(spark, tmp_path):
 
     rb = t.rollback(good["snapshot_id"])                                # snap 3
     assert rb["operation"] == "rollback" and rb["snapshot_id"] == 3
+    assert rb["schema"] == good["schema"] is not None
     assert sorted(r["v"] for r in t.read(spark).collect()) == list(range(15))
     # the bad commit is still time-travelable until expiry
     assert sorted(r["v"] for r in t.read(spark, bad["snapshot_id"]).collect()) \
@@ -308,3 +309,103 @@ def test_rollback_restores_content_without_deleting_history(spark, tmp_path):
     assert sorted(r["v"] for r in t.read(spark).collect()) == list(range(18))
     with pytest.raises(Exception):
         t.read(spark, bad["snapshot_id"]).collect()
+
+
+def _jobs_run_by(spark, fn):
+    """Spark job ids ``fn`` starts, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _nested_df(spark):
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("host", T.StringType(), False),
+        T.StructField("n", T.LongType(), True),
+        T.StructField("meta", T.StructType([
+            T.StructField("depth", T.IntegerType(), False),
+            T.StructField("tags", T.ArrayType(T.StringType(), False), True),
+        ]), True),
+    ])
+    rows = [
+        (f"https://h{i % 3}.example/p{i}", f"h{i % 3}.example", i,
+         (i % 4, [f"t{i}"] if i % 2 else None))
+        for i in range(12)
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("partition_by", [None, ["host"]])
+def test_snapshot_schema_reads_like_inference_without_a_job(
+    spark, tmp_path, partition_by
+):
+    """Each snapshot records its schema and every read hands it to the
+    reader, so planning a read starts no Spark job; the recorded schema
+    is exactly what footer inference gives (nullability, nesting and the
+    partition column's position included), for read, read_changes and
+    read_where alike."""
+    import os
+
+    t = _tbl(spark, tmp_path, "sch")
+    df = _nested_df(spark)
+    first = t.append(df.filter("n < 6"), partition_by=partition_by)
+    snap = t.append(df.filter("n >= 6"), partition_by=partition_by)
+    assert first["schema"] is not None and snap["schema"] == first["schema"]
+
+    def inferred(rel):
+        return spark.read.parquet(os.path.join(t.data_dir, rel))
+
+    reads = {}
+    jobs = _jobs_run_by(spark, lambda: reads.update(
+        first=t.read(spark, first["snapshot_id"]),
+        changes=t.read_changes(spark, first["snapshot_id"]),
+        where=t.read_where(spark, {"n": (3, 8)}),
+    ))
+    assert jobs == []
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.collect())
+
+    for got, rel in ((reads["first"], first["added_files"][0]),
+                     (reads["changes"], snap["added_files"][0])):
+        assert got.schema == inferred(rel).schema
+        assert rows(got) == rows(inferred(rel))
+    # read_where scans data files, not partition directories, so a
+    # partition column is absent there, as with inference on those files
+    kept, _ = t.plan_scan({"n": (3, 8)})
+    leaf = spark.read.parquet(*kept)
+    assert reads["where"].schema == leaf.schema
+    assert rows(reads["where"]) == rows(leaf.filter("n >= 3 AND n <= 8"))
+
+
+def test_snapshot_without_schema_reads_by_inference(spark, tmp_path):
+    """A snapshot written before schemas were recorded has no ``schema``
+    key: its files are still read, with the inference job that costs."""
+    import json
+    import os
+
+    t = _tbl(spark, tmp_path, "old")
+    snap = t.append(_docs(spark, [(1, "alpha"), (2, "beta")]))
+    path = os.path.join(t.meta_dir, f"snap-{snap['snapshot_id']:06d}.json")
+    with open(path) as fh:
+        old = json.load(fh)
+    del old["schema"]
+    with open(path, "w") as fh:
+        json.dump(old, fh)
+
+    got = {}
+    jobs = _jobs_run_by(spark, lambda: got.update(df=t.read(spark)))
+    assert len(jobs) >= 1  # inference ran, and the probe can see it
+    assert got["df"].columns == ["doc_id", "text"]
+    assert sorted(tuple(r) for r in got["df"].collect()) == [(1, "alpha"), (2, "beta")]

@@ -71,6 +71,62 @@ def test_no_row_at_a_time_python_anywhere(plans):
     assert not bad, f"row-at-a-time Python UDF in: {bad}"
 
 
+def test_sketch_arms_probe_once(plans):
+    # anti_join_seen's bloom and cuckoo arms each probe their sketch in
+    # one MapInPandas; the exact verify join must not re-plan the probe
+    assert plans["anti_join_seen"].count("MapInPandas") == 2
+
+
+def test_driver_rows_plan_as_local_relation(spark):
+    # local_df keeps the schema exactly (nullability and nested structs
+    # included) and plans as a LocalRelation, so no Python worker
+    # deserializes the rows
+    from web_crawler_spark.plans.crawl import DELTA_SCHEMA, FRONTIER_SCHEMA
+    from web_crawler_spark.schemas import ROBOTS
+    from web_crawler_spark.session import local_df
+
+    cases = [
+        ([("https://a.example/x", "a.example", 0, 0, 0, None, "queued", None, None),
+          ("https://b.example/", "b.example", 1, 5, 2, "https://b.example/p",
+           "visited", 3, 9)], FRONTIER_SCHEMA),
+        ([], DELTA_SCHEMA),
+        ([("a.example", 3), ("b.example", 0)], "seed_host string, remaining int"),
+        ([([(0, [1.0, 2.0], 2.5), (1, [0.0, 1.0], 1.0)],)],
+         "_cb array<struct<i:int, ce:array<double>, cn:double>>"),
+        ([([[(0, [1.0]), (1, [2.0])], [(0, [3.0]), (1, [4.0])]],)],
+         "_pcb array<array<struct<j:int, ce:array<double>>>>"),
+        ([{"host": "h.example", "fetch_ok": True, "crawl_delay_s": 0.5,
+           "disallow_prefixes": ["/admin"]}], ROBOTS),
+    ]
+    for rows, schema in cases:
+        want = spark.createDataFrame(rows, schema)
+        got = local_df(spark, rows, schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+
+
+def test_create_dataframe_only_inside_local_df():
+    # every driver-built table in the package goes through local_df;
+    # createDataFrame over a Python list plans as an RDD scan that starts
+    # Python workers on every execution
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                       "web_crawler_spark")
+    hits = []
+    for dirpath, _, names in os.walk(pkg):
+        for name in names:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path) as fh:
+                    for i, line in enumerate(fh, 1):
+                        if re.search(r"\bcreateDataFrame\(", line):
+                            hits.append((os.path.relpath(path, pkg), i, line.strip()))
+    assert [p for p, _, _ in hits] == ["session.py"], hits
+
+
 def test_heavy_queries_keep_wholestage_codegen(spark):
     # AQE wraps stages lazily, so an AdaptiveSparkPlan hides codegen
     # labels until execution; whether an operator is codegen-able is

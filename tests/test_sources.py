@@ -969,7 +969,8 @@ def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
     """The archive-replay job elects one caption per image URL by rule —
     longest caption, ties to the lexicographically smallest — so the pair
     table is identical at any shuffle partition count, however the pages
-    citing an image are spread across shards."""
+    citing an image are spread across shards. The job caches its pair
+    pipeline for one pass and leaves no persisted RDD behind."""
     import importlib.util
 
     from web_crawler_spark import images as IM
@@ -1018,13 +1019,19 @@ def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
         str(arc / "images.warc.gz"),
     )
 
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     tables = []
     try:
         for n in (1, 7):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
             out = str(tmp_path / f"pairs{n}")
-            job.ingest(spark, str(arc), out)
+            before = persisted()
+            got = job.ingest(spark, str(arc), out)
+            assert persisted() <= before
+            assert (got["pairs"], got["hosts"]) == (3, 1)
             tables.append(sorted(
                 (r["image_id"], r["caption"], r["seed_host"], r["phash"],
                  bytes(r["bytes"]))

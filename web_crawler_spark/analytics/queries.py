@@ -36,6 +36,7 @@ from web_crawler_spark.functions import urls as U
 from web_crawler_spark.operators import dedup as D
 from web_crawler_spark.operators import similarity as SIM
 from web_crawler_spark.operators import sketch as SK
+from web_crawler_spark.session import local_df
 
 # --------------------------------------------------------------------------
 # registry plumbing
@@ -502,16 +503,18 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     three arms that must agree row-for-row:
 
     - ``exact``   — the plain hash-partitioned left_anti join;
-    - ``bloom``   — partitioned-Bloom pre-prune (seen_filter.build_bloom /
-                    prune) + exact verify of only the maybe_seen survivors;
-    - ``cuckoo``  — partitioned-cuckoo pre-prune (seen_filter.build_cuckoo /
-                    prune_cuckoo) + exact verify, the deletable sketch.
+    - ``bloom``   — partitioned-Bloom probe (seen_filter.build_bloom /
+                    prune) + one exact anti-join that only maybe_seen
+                    rows can match;
+    - ``cuckoo``  — partitioned-cuckoo probe (seen_filter.build_cuckoo /
+                    prune_cuckoo) + the same exact anti-join, the
+                    deletable sketch.
 
     Both sketches admit false positives but never false negatives, so
-    definite-new rows bypass the join and the exact anti-join on the
-    maybe_seen remainder restores exactness — at 10^10 URLs the sketch
-    prunes the shuffle down to the (tiny) collision set. Ref analogue:
-    site-crawler.service.js:134-136 visited Sets.
+    keying the exact anti-join on ``(key, maybe_seen = true)`` keeps
+    every definite-new row and restores exactness for the rest, with
+    the sketch probed once. Ref analogue: site-crawler.service.js:134-136
+    visited Sets.
     """
     from web_crawler_spark.operators import seen_filter as SF
 
@@ -537,12 +540,15 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("https://seen.example.com/c"), F.col("c_custkey")).alias("url")
     )
 
+    seen_keys = seen.select(
+        F.col("c_custkey").alias("o_custkey"), F.lit(True).alias("maybe_seen")
+    )
+
     def sketch_arm(filt: DataFrame, prune_fn) -> DataFrame:
         probed = prune_fn(cand, filt)
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", "url")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen", "url")
-        verified = maybe.join(seen, maybe.o_custkey == seen.c_custkey, "left_anti")
-        return fresh.unionByName(verified)
+        return probed.join(
+            seen_keys, ["o_custkey", "maybe_seen"], "left_anti"
+        ).drop("maybe_seen", "url")
 
     bloom = sketch_arm(SF.build_bloom(seen_urls), SF.prune)
     cuckoo = sketch_arm(SF.build_cuckoo(seen_urls), SF.prune_cuckoo)
@@ -2881,7 +2887,8 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_crawler_spark.operators import bpe as BPE
 
     merges = BPE.bpe_learn(d, "text", n_merges=6)
-    bpe = spark.createDataFrame(
+    bpe = local_df(
+        spark,
         [("bpe", f"{l} {r}", rank, cnt) for rank, l, r, cnt in merges],
         "variant string, predicted string, n long, agree long",
     )
@@ -3727,7 +3734,8 @@ def q_crawl_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in driver.delta_tbl.snapshots()
         if "pages_fetched" in s.get("summary", {})
     ]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows,
         "wave int, pages_fetched long, candidates long, deduped_out long,"
         " new_urls long, total_visited long",
@@ -4639,7 +4647,8 @@ def q_sink_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xlsx_path = tempfile.mkdtemp(prefix="wcs_sinkrt_") + "/report.xlsx"
     BK.write_excel_report(results, xlsx_path, force_stdlib=True)
-    xlsx_arm = spark.createDataFrame(
+    xlsx_arm = local_df(
+        spark,
         [("xlsx", s, rn, col, val) for (s, rn, col, val) in BK.read_xlsx_grid(xlsx_path)],
         "variant string, sheet string, rn bigint, col string, val string",
     )
@@ -4690,7 +4699,8 @@ def q_sink_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("cache", "state", 0, "hit_equals_put", str(equal).lower()),
         ("cache", "state", 0, "request_key", SV.request_key(curls, "single")),
     ]
-    driver_arm = spark.createDataFrame(
+    driver_arm = local_df(
+        spark,
         env_rows + cache_rows,
         "variant string, sheet string, rn bigint, col string, val string",
     )
@@ -4742,7 +4752,8 @@ def q_sink_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("false")).alias("val"),
         )
     )
-    wds_meta = spark.createDataFrame(
+    wds_meta = local_df(
+        spark,
         [
             ("wds", "meta", 0, "total_samples",
              str(sum(r["n_samples"] for r in manifest))),
@@ -5025,7 +5036,8 @@ def _e2e_pages(spark: SparkSession) -> DataFrame:
         for h in range(web.n_hosts)
         for p in range(web.n_pages(h))
     ]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows, "url string, seed_host string, body string, xhr_json string"
     )
 
@@ -6032,7 +6044,7 @@ def _robots_gate_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "disallow_prefixes": ["/admin", "/blog"] if h % 2 == 0 else [],
             }
         )
-    robots = spark.createDataFrame(robots_rows, ROBOTS)
+    robots = local_df(spark, robots_rows, ROBOTS)
     allowed, blocked = FR.robots_gate(frontier, robots)
     out = allowed.withColumn("is_blocked", F.lit(False)).unionByName(
         blocked.withColumn("is_blocked", F.lit(True))

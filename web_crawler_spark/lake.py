@@ -7,10 +7,12 @@ contract on plain parquet + JSON snapshot manifests:
 
 - every commit creates ``snap-{n}.json`` with: parent snapshot id, the
   data files added, per-partition lineage (row counts per partition key),
-  and an arbitrary ``summary`` metrics dict — exactly what Iceberg's
-  snapshot ``summary`` carries;
+  the table schema, and an arbitrary ``summary`` metrics dict — exactly
+  what Iceberg's snapshot ``summary`` carries;
 - reads resolve the latest (or any historical) snapshot's file list —
-  time travel;
+  time travel — and hand the reader the snapshot's schema, so no Spark
+  job runs to infer it from the parquet footers (a snapshot written
+  before schemas were recorded is still read with inference);
 - appends are atomic at the manifest level (data written first, manifest
   renamed into place last).
 
@@ -25,9 +27,11 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Container
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _pq():
@@ -159,7 +163,9 @@ class SnapshotTable:
         column-pruned scan of freshly written local parquet."""
         if lineage_key is None or lineage_key not in df.columns:
             return {}
-        written = df.sparkSession.read.parquet(os.path.join(self.data_dir, rel))
+        written = df.sparkSession.read.schema(df.schema).parquet(
+            os.path.join(self.data_dir, rel)
+        )
         rows = written.groupBy(lineage_key).count().collect()
         return {str(r[lineage_key]): r["count"] for r in rows}
 
@@ -169,6 +175,7 @@ class SnapshotTable:
         added: list[str],
         summary: dict,
         lineage: dict,
+        schema: T.StructType,
     ) -> dict:
         cur = self.current()
         if mode == "append" and cur:
@@ -186,6 +193,7 @@ class SnapshotTable:
             "added_files": added,
             "partition_lineage": lineage,
             "file_stats": file_stats,
+            "schema": schema.jsonValue(),
             "summary": summary,
         }
         tmp = os.path.join(self.meta_dir, f".tmp-{uuid.uuid4().hex}.json")
@@ -209,7 +217,7 @@ class SnapshotTable:
         rel = self._write_files(df, partition_by)
         if lineage is None:
             lineage = self._lineage(df, lineage_key, rel)
-        return self._commit("append", [rel], summary or {}, lineage)
+        return self._commit("append", [rel], summary or {}, lineage, df.schema)
 
     def overwrite(
         self,
@@ -222,7 +230,7 @@ class SnapshotTable:
         rel = self._write_files(df, partition_by)
         if lineage is None:
             lineage = self._lineage(df, lineage_key, rel)
-        return self._commit("overwrite", [rel], summary or {}, lineage)
+        return self._commit("overwrite", [rel], summary or {}, lineage, df.schema)
 
     def compact(
         self,
@@ -299,10 +307,33 @@ class SnapshotTable:
         else:
             df = df.repartition(target_files)
         rel = self._write_files(df, partition_by)
-        lineage = self._lineage(df, None, rel)
-        return self._commit("compact", [rel], summary or {}, lineage)
+        return self._commit("compact", [rel], summary or {}, {}, df.schema)
 
     # ------------------------------------------------------------ read ----
+    def _snapshot(self, snapshot_id: int | None) -> dict:
+        snap = (self.current() if snapshot_id is None
+                else next(s for s in self.snapshots()
+                          if s["snapshot_id"] == snapshot_id))
+        if snap is None or not snap["files"]:
+            raise ValueError(f"table {self.path} has no snapshot/data")
+        return snap
+
+    @staticmethod
+    def _scan(
+        spark: SparkSession, paths: list[str], snap: dict, drop: Container[str] = ()
+    ) -> DataFrame:
+        """Parquet scan of ``paths`` with ``snap``'s recorded schema
+        (minus ``drop``), so the reader plans without an inference job. A
+        snapshot written before schemas were recorded has none; its files
+        are read with inference."""
+        reader = spark.read.option("mergeSchema", "false")
+        if snap.get("schema"):
+            schema = T.StructType.fromJson(snap["schema"])
+            reader = reader.schema(
+                T.StructType([f for f in schema.fields if f.name not in drop])
+            )
+        return reader.parquet(*paths)
+
     def plan_scan(
         self,
         predicates: dict[str, tuple],
@@ -317,11 +348,7 @@ class SnapshotTable:
         (conservative, never wrong). Composes with zorder compaction:
         after ``compact(zorder_by=[x, y])`` a box predicate on (x, y)
         selects a corner's worth of files instead of all of them."""
-        snap = (self.current() if snapshot_id is None
-                else next(s for s in self.snapshots()
-                          if s["snapshot_id"] == snapshot_id))
-        if snap is None or not snap["files"]:
-            raise ValueError(f"table {self.path} has no snapshot/data")
+        snap = self._snapshot(snapshot_id)
         stats = snap.get("file_stats") or {}
         # every data file under the snapshot's rel dirs, stats or not
         all_files: list[str] = []
@@ -358,12 +385,20 @@ class SnapshotTable:
         """Pruned read: scan only the files :meth:`plan_scan` keeps, then
         apply the same ranges as a residual row filter — result identical
         to ``read().filter(...)``, cost proportional to the files the
-        predicate actually touches."""
+        predicate actually touches. The scan names data files, not their
+        partition directories, so partition columns are not read."""
         paths, _ = self.plan_scan(predicates, snapshot_id)
         if not paths:
             df = self.read(spark, snapshot_id).limit(0)
         else:
-            df = spark.read.option("mergeSchema", "false").parquet(*paths)
+            # key=value directory names mark the partition columns
+            part_cols = {
+                seg.split("=", 1)[0]
+                for p in paths
+                for seg in os.path.relpath(p, self.data_dir).split(os.sep)[1:-1]
+                if "=" in seg
+            }
+            df = self._scan(spark, paths, self._snapshot(snapshot_id), part_cols)
         for col, (lo, hi) in predicates.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= lo)
@@ -372,14 +407,9 @@ class SnapshotTable:
         return df
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        if snapshot_id is None:
-            snap = self.current()
-        else:
-            snap = next(s for s in self.snapshots() if s["snapshot_id"] == snapshot_id)
-        if snap is None or not snap["files"]:
-            raise ValueError(f"table {self.path} has no snapshot/data")
+        snap = self._snapshot(snapshot_id)
         paths = [os.path.join(self.data_dir, rel) for rel in snap["files"]]
-        return spark.read.option("mergeSchema", "false").parquet(*paths)
+        return self._scan(spark, paths, snap)
 
     def read_changes(
         self,
@@ -421,7 +451,7 @@ class SnapshotTable:
         if not added:
             return self.read(spark, hi).limit(0)
         paths = [os.path.join(self.data_dir, rel) for rel in added]
-        return spark.read.option("mergeSchema", "false").parquet(*paths)
+        return self._scan(spark, paths, next(s for s in snaps if s["snapshot_id"] == hi))
 
     def rollback(self, snapshot_id: int) -> dict:
         """Iceberg rollback semantics (manageSnapshots().rollbackTo): a
@@ -449,6 +479,7 @@ class SnapshotTable:
             "added_files": [],
             "partition_lineage": target.get("partition_lineage") or {},
             "file_stats": dict(target.get("file_stats") or {}),
+            "schema": target.get("schema"),
             "summary": {"rolled_back_to": snapshot_id},
         }
         tmp = os.path.join(self.meta_dir, f".tmp-{uuid.uuid4().hex}.json")

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from web_crawler_spark.functions import text as TX
+from web_crawler_spark.session import local_df
 
 
 # ------------------------------------------------------------- exact (A1/A2)
@@ -372,7 +373,7 @@ def dsir_importance(
             )
             for r in dist
         ]
-    wdf = df.sparkSession.createDataFrame(weights, "_bucket int, _wgt double")
+    wdf = local_df(df.sparkSession, weights, "_bucket int, _wgt double")
     scored = (
         base.groupBy(id_col, "_bucket")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -455,7 +456,7 @@ def lm_quality_buckets(
         (b, ((tcnt.get(b, 0) + 1) * scale) // (total_t + n_buckets))
         for b in range(n_buckets)
     ]
-    pdf = df.sparkSession.createDataFrame(probs, "_bucket int, _p long")
+    pdf = local_df(df.sparkSession, probs, "_bucket int, _p long")
     scored = (
         base.groupBy(id_col, "_bucket")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -516,14 +517,15 @@ def dedup_against_corpus(
     Plan: the corpus folds ONCE into the partitioned Bloom sketch of its
     fingerprints (operators/seen_filter.py — the URL-seen machinery,
     reused byte-for-byte since a fingerprint is just a key string);
-    increment rows probe the broadcast sketch per Arrow batch. Rows the
-    sketch has definitely never seen pass WITH NO JOIN AT ALL; the
-    maybe-seen survivors (sketch false positives + true dups) verify
-    with an exact left_anti join against the corpus fingerprints — only
-    the collision set shuffles, so ingest cost tracks the increment and
-    the (tiny) collision volume, never the corpus. False positives can
-    only ADD rows to the verify join, never drop a new document — the
-    result is exactly the anti-join's.
+    increment rows probe the broadcast sketch per Arrow batch, once.
+    One exact left_anti join against the corpus fingerprints then
+    verifies, keyed on ``(fp, maybe_seen = true)``: a row the sketch has
+    definitely never seen cannot match any corpus key, so it passes,
+    and a maybe-seen row (sketch false positive or true dup) is dropped
+    only when its fingerprint really is in the corpus. Every increment
+    row crosses the join, but only maybe-seen rows can match. False
+    positives can only send a row to the exact check, never drop a new
+    document — the result is exactly the anti-join's.
 
     Returns the increment's surviving rows plus their ``fp_col``
     (intra-increment duplicates are NOT collapsed here — compose with
@@ -538,10 +540,8 @@ def dedup_against_corpus(
     old = corpus.select(TX.fingerprint(text_col).alias(fp_col)).distinct()
     sketch = SF.build_bloom(old, url_col=fp_col, **sketch_kw)
     probed = SF.prune(inc, sketch, url_col=fp_col, **sketch_kw)
-    fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    verified = maybe.join(old, fp_col, "left_anti")
-    return fresh.unionByName(verified)
+    seen = old.withColumn("maybe_seen", F.lit(True))
+    return probed.join(seen, [fp_col, "maybe_seen"], "left_anti").select(inc.columns)
 
 
 def dedup_table_changes(

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from web_crawler_spark.session import local_df
+
 CONFIDENCE = {
     "jsonld": 0.95,
     "microdata": 0.90,
@@ -607,7 +609,7 @@ def extract_xhr(pages: DataFrame) -> DataFrame:
     playwright-renderer path for SPA pages; fed by the fetch stage's
     xhr_json column, S3)."""
     if "xhr_json" not in pages.columns:
-        return pages.sparkSession.createDataFrame([], _RAW_SCHEMA)
+        return local_df(pages.sparkSession, [], _RAW_SCHEMA)
     items = (
         _base(pages)
         .withColumn("_x", F.from_json("xhr_json", _XHR_SCHEMA))

@@ -61,20 +61,11 @@ def clean_candidate_links(links: DataFrame) -> DataFrame:
     )
 
 
-def first_occurrence_per_page(links: DataFrame, page_key: str = "parent_seq") -> DataFrame:
-    """Per-page Set semantics: keep first occurrence in document order
-    (discoverAllLinks keeps a per-page Set, site-crawler.service.js:15,35)."""
-    w = Window.partitionBy("seed_host", page_key, "url").orderBy("link_idx")
-    return (
-        links.withColumn("_occ", F.row_number().over(w))
-        .filter(F.col("_occ") == 1)
-        .drop("_occ")
-    )
-
-
 def dedup_first_discoverer(links: DataFrame) -> DataFrame:
     """Cross-page enqueue dedup: the first (parent_seq, link_idx) wins
-    (site-crawler.service.js:163-168 checks Sets at enqueue time)."""
+    (site-crawler.service.js:163-168 checks Sets at enqueue time). The
+    winner is also the first occurrence on its own page, so this subsumes
+    the per-page Set (discoverAllLinks, site-crawler.service.js:15,35)."""
     w = Window.partitionBy("seed_host", "url").orderBy("parent_seq", "link_idx")
     return (
         links.withColumn("_rk", F.row_number().over(w))

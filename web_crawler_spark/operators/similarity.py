@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from web_crawler_spark.functions import text as TX
+from web_crawler_spark.session import local_df
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -241,7 +242,8 @@ def ivf_codebook(
     for i, r in enumerate(rows):
         vec = [float(x) for x in r[vec_col]]
         entries.append((i, vec, math.sqrt(sum(x * x for x in vec))))
-    return corpus.sparkSession.createDataFrame(
+    return local_df(
+        corpus.sparkSession,
         [(entries,)], "_cb array<struct<i:int, ce:array<double>, cn:double>>"
     )
 
@@ -305,7 +307,8 @@ def ivf_train_codebook(
             nrm = math.sqrt(sum(x * x for x in vec))
             if nrm > 0:  # degenerate all-zero mean keeps the old centroid
                 entries[r["list_id"]] = (vec, nrm)
-        cb = corpus.sparkSession.createDataFrame(
+        cb = local_df(
+            corpus.sparkSession,
             [([(i, vec, nrm) for i, (vec, nrm) in sorted(entries.items())],)],
             "_cb array<struct<i:int, ce:array<double>, cn:double>>",
         )
@@ -638,7 +641,8 @@ def pq_codebooks(
                 for j, r in enumerate(rows)
             ]
         )
-    return corpus.sparkSession.createDataFrame(
+    return local_df(
+        corpus.sparkSession,
         [(books,)], "_pcb array<array<struct<j:int, ce:array<double>>>>"
     )
 
@@ -870,7 +874,8 @@ def pq_train_codebooks(
         means = ex.groupBy("s", "j", "ipos").agg(F.avg("x").alias("mu"))
         for r in means.collect():
             books[(r["s"], r["j"])][r["ipos"]] = float(r["mu"])
-        cb = corpus.sparkSession.createDataFrame(
+        cb = local_df(
+            corpus.sparkSession,
             [(
                 [
                     [(j, books[(s, j)]) for j in range(k)]

@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 from web_crawler_spark.lake import SnapshotTable
 from web_crawler_spark.operators import frontier as FR
 from web_crawler_spark.operators import sketch as SK
+from web_crawler_spark.session import local_df
 from web_crawler_spark.sources.fetch import fetch_pages
 from web_crawler_spark.synthetic.web import SyntheticWeb
 
@@ -204,7 +205,7 @@ class CrawlDriver:
             summary={"wave": wave, "op": "compact", "max_seq": self._base_agg()},
             lineage_key="seed_host",
         )
-        empty = self.spark.createDataFrame([], DELTA_SCHEMA)
+        empty = local_df(self.spark, [], DELTA_SCHEMA)
         self.delta_tbl.overwrite(
             empty,
             summary={
@@ -219,7 +220,7 @@ class CrawlDriver:
             (url, url.split("//", 1)[1].split("/", 1)[0], 0, 0, 0, None, "queued", None, None)
             for url in self.web.seed_urls()
         ]
-        return self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
+        return local_df(self.spark, rows, FRONTIER_SCHEMA)
 
     # ---------------------------------------------------------- requeue ---
     def requeue(self, urls: DataFrame) -> int:
@@ -291,7 +292,7 @@ class CrawlDriver:
         for seed, c in counts.items():
             visited_n[seed] = max(0, visited_n.get(seed, 0) - c)
         self.delta_tbl.overwrite(
-            self.spark.createDataFrame([], DELTA_SCHEMA),
+            local_df(self.spark, [], DELTA_SCHEMA),
             summary={
                 "wave": wave, "op": "requeue",
                 "visited_n": visited_n, "loc_found": loc_found,
@@ -335,7 +336,8 @@ class CrawlDriver:
         if self.cfg.check_robots or self.cfg.wave_seconds:
             from web_crawler_spark.schemas import ROBOTS
 
-            robots_df = spark.createDataFrame(
+            robots_df = local_df(
+                spark,
                 [self.web.robots(h) for h in range(self.web.n_hosts)], ROBOTS
             )
 
@@ -398,7 +400,8 @@ class CrawlDriver:
                 return 0  # W5: location cap reached → seed takes no pages
             return max(0, cfg.max_pages - visited_n.get(seed, 0))
 
-        remaining = spark.createDataFrame(
+        remaining = local_df(
+            spark,
             [(s, _remaining(s)) for s in max_seq_d],
             "seed_host string, remaining int",
         )
@@ -448,7 +451,8 @@ class CrawlDriver:
         # fetched speculatively beyond the cutoff stay queued (untransitioned)
         # and their links are not expanded.
         if cfg.max_locations is not None:
-            carry = spark.createDataFrame(
+            carry = local_df(
+                spark,
                 [(s, loc_found.get(s, 0)) for s in max_seq_d],
                 "seed_host string, _carry long",
             )
@@ -503,7 +507,8 @@ class CrawlDriver:
             capped_seeds = [
                 s2 for s2, n in loc_found.items() if n >= cfg.max_locations
             ]
-            vk_rows = spark.createDataFrame(
+            vk_rows = local_df(
+                spark,
                 [(seed, r["_vk"]) for seed, r in stats.items()],
                 "seed_host string, _vk long",
             )
@@ -533,19 +538,19 @@ class CrawlDriver:
                 "href",
             )
         )
-        cand = FR.clean_candidate_links(links)
-        cand = FR.first_occurrence_per_page(cand)
-        # persisted: feeds the anti-join, the dedup metric, and (via
-        # new_frontier_rows) the base append — one computation, not 3.
-        # (An Observation riding the anti-join scan would fold the
-        # candidate-count job away entirely, but CollectMetrics under a
-        # join trips a JVM assertion in this PySpark build — the count()
-        # below reads the persisted rows, so it's a cheap cached-scan job.)
-        cand = FR.dedup_first_discoverer(cand).persist()
+        # one window per (seed_host, url) keeps the smallest (parent_seq,
+        # link_idx): the first discoverer, which is also that page's first
+        # occurrence of the link, so no per-page dedup runs before it.
+        # Persisted because the anti-join (feeding the base append) and the
+        # `candidates` count both read it; an Observation on the anti-join
+        # scan would save the count job, but CollectMetrics under a join
+        # trips a JVM assertion in this PySpark build.
+        cand = FR.dedup_first_discoverer(FR.clean_candidate_links(links)).persist()
         # seen set == base discovery rows (delta only changes status)
         new = FR.anti_join_seen(cand, base)
 
-        max_seq = spark.createDataFrame(
+        max_seq = local_df(
+            spark,
             [(s, m) for s, m in max_seq_d.items()],
             "seed_host string, max_seq long",
         )
@@ -573,7 +578,7 @@ class CrawlDriver:
                 F.lit(None).cast("int").alias("wave_visited"),
                 F.lit(None).cast("long").alias("visit_seq"),
             )
-        ).persist()
+        )
 
         # ---- new-discovery aggregates: one action gives count + max seq
         # (and doubles as the frontier append's per-partition lineage) ----
@@ -644,7 +649,6 @@ class CrawlDriver:
         wave_rows.unpersist()
         cand.unpersist()
         new_frontier_rows.unpersist()
-        transitions.unpersist()
         # progress iff we visited, blocked, or retired deep rows
         return True
 

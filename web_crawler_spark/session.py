@@ -4,13 +4,15 @@ Local-mode testing runs on ``local[N]`` (single JVM); the configs below are
 chosen so the same code is cluster-ready: AQE on (runtime skew-join +
 partition coalescing), Arrow on (all Python UDFs are pandas/Arrow
 vectorized), shuffle partitions sized to cores rather than the 200 default.
+:func:`local_df` builds the small driver-side tables the engine joins in.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -65,3 +67,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows: list, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame of rows built on the driver, planned as a ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list plans as a ``LogicalRDD`` over a
+    parallelized RDD, so every execution of a plan that reads it starts
+    Python-worker tasks to unpickle the rows. Passed through a pyarrow
+    Table, the same rows reach the JVM once and plan as a
+    ``LocalRelation``, which executes without any Python worker.
+
+    ``rows`` are tuples in schema order (nested structs as tuples too) or
+    dicts keyed by field name, a missing key reading NULL; ``schema`` is a
+    StructType or a DDL string, kept exactly, nullability included.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [
+        pa.array(
+            [r.get(f.name) if isinstance(r, dict) else r[i] for r in rows],
+            type=arrow.field(i).type,
+        )
+        for i, f in enumerate(schema.fields)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)

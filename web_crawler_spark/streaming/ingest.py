@@ -43,6 +43,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from web_crawler_spark.session import local_df
+
 
 def stream_pair_files(
     spark: SparkSession, path: str, max_files: int | None = 1
@@ -134,5 +136,5 @@ def read_accepted(spark: SparkSession, workdir: str) -> DataFrame:
     if not dirs:
         from web_crawler_spark.schemas import IMAGES
 
-        return spark.createDataFrame([], IMAGES)
+        return local_df(spark, [], IMAGES)
     return spark.read.parquet(*dirs)
