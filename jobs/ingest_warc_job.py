@@ -3,8 +3,9 @@ jobs/ingest_warc_job.py
 
 Replays a Common-Crawl-style .warc.gz archive into the pair lake — the
 "crawl already happened" twin of jobs/crawl_job.py. One binaryFile +
-per-member-gunzip scan (sources/warc.py:read_warc_gz_binary) fans out by
-media type:
+per-member-gunzip scan (sources/warc.py:read_warc_gz_binary), persisted
+and counted once, fans out by media type, so both lanes read the cached
+members and the archive is gunzipped once:
 
 - text/html 2xx responses: the binary-safe HTTP parse
   (http_response_binary) yields the entity, which decodes to HTML and
@@ -13,13 +14,16 @@ media type:
   record;
 - image/* 2xx responses keep BYTE bodies end-to-end: the zero-decode
   header audit columns (images.sniff_format/png_ihdr) supply fmt/w/h at
-  scan speed, and the decode+phash mapInPandas runs only on records the
-  audit admits.
+  scan speed.
 
-The join on the image URL marries markup captions to image bytes and
-lands input_hint-shaped rows (image_id, bytes, w, h, fmt, caption,
-phash) in a SnapshotTable with per-host lineage and ingest metrics in
-the snapshot summary.
+The join on the image URL marries markup captions to image bytes; one
+pass-through decode + phash mapInPandas (images.with_phash) then appends
+each pair's phash, so each host's row keeps the hash of its own bytes.
+The pair table is persisted once, counted per host (the snapshot's
+lineage), and appended from the cache: input_hint-shaped rows
+(image_id, bytes, w, h, fmt, caption, phash) in a SnapshotTable
+partitioned by host, with per-host lineage and ingest metrics in the
+snapshot summary.
 
 ``--synthesize N`` writes a deterministic N-host fixture archive first
 (SyntheticWeb HTML + real PNG payloads, gzip member per record, mtime
@@ -147,29 +151,38 @@ def ingest(spark: SparkSession, archive_dir: str, out_dir: str) -> dict:
         ih["w"].alias("w"), ih["h"].alias("h"), ih["ihdr_ok"].alias("_ok"),
     ).filter(F.col("_ok")).drop("_ok")
 
-    pairs = audited.join(captions, "img_url", "inner").select(
+    # captions (one short row per image URL) are the broadcast side: the
+    # image lane carries the bytes, and streaming it keeps the archive
+    # scan's partitioning, so each task writes files only for the hosts
+    # of the shards it read
+    pairs = audited.join(F.broadcast(captions), "img_url", "inner").select(
         "image_id", "bytes",
         F.col("w").cast("int"), F.col("h").cast("int"),
-        "fmt", "caption", "seed_host", "img_url",
+        "fmt", "caption", "seed_host",
     )
-    feats = IM.image_features(
-        pairs.select("image_id", "bytes", "w", "h", "fmt", "caption")
-    ).select("image_id", "phash")
-    out = pairs.join(feats, "image_id").select(
+    out = IM.with_phash(pairs).select(
         "image_id", "bytes", "w", "h", "fmt", "caption",
         "phash", "seed_host",
     )
 
+    # each Python-worker pass runs once: gunzip fills the member scan's
+    # cache, which both lanes read; decode + phash fill the pair table's
+    # cache, which the per-host count and the append read. The pair table
+    # is persisted after the member scan, so its cached plan reads that
+    # cache. The per-host count is the append's lineage, so the append
+    # reads nothing back from its files
     tbl = SnapshotTable(out_dir)
-    n_records = recs.count()
-    # the pair pipeline (gunzip, decode, phash on Python workers) runs
-    # once: the count fills the cache and the append writes from it; the
-    # per-host lineage the append reads back from its files gives `hosts`
+    recs = recs.persist()
     out = out.persist()
     try:
-        n_pairs = out.count()
-        snap = tbl.append(
-            out, partition_by=["seed_host"], lineage_key="seed_host",
+        n_records = recs.count()
+        lineage = {
+            str(r["seed_host"]): r["count"]
+            for r in out.groupBy("seed_host").count().collect()
+        }
+        n_pairs = sum(lineage.values())
+        tbl.append(
+            out, partition_by=["seed_host"], lineage=lineage,
             summary={
                 "job": "ingest_warc", "n_archive_records": n_records,
                 "n_pairs": n_pairs,
@@ -177,10 +190,11 @@ def ingest(spark: SparkSession, archive_dir: str, out_dir: str) -> dict:
         )
     finally:
         out.unpersist()
+        recs.unpersist()
     return {
         "records": n_records,
         "pairs": n_pairs,
-        "hosts": len(snap["partition_lineage"]),
+        "hosts": len(lineage),
         "seconds": round(time.time() - t0, 2),
     }
 

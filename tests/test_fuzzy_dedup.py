@@ -216,3 +216,23 @@ def test_naive_blocked_dedup_matches_production_merge():
             sorted(rows, key=lambda r: r["sourceUrl"]), 0.85
         )
         assert got == want, seed
+
+
+def test_records_pipeline_is_partition_independent(spark):
+    """records_pipeline gives the same records at any shuffle partition
+    count: the fuzzy merge's blocks spread over the cores, each still fed
+    in its deterministic order."""
+    from web_crawler_spark.analytics.queries import _e2e_pages
+    from web_crawler_spark.plans.enrich import records_pipeline
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            rows = records_pipeline(_e2e_pages(spark)).collect()
+            got.append(sorted(repr(r) for r in rows))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got[0] == got[1]
+    assert len(got[0]) > 0

@@ -66,6 +66,22 @@ def test_spark_pipeline_caption_equality_and_dedup(spark):
         assert (iid, f"{iid}_dup") in got
 
 
+def test_with_phash_keeps_rows_and_nulls_undecodable_bytes(spark):
+    # one batch mixes decodable and undecodable bytes: each row keeps its
+    # own columns, a failed decode reads NULL, and the other hashes stay
+    # exact 64-bit values rather than floats
+    pngs = [IM.encode_png(IM.synth_pixels(f"img_{i}", 32, 32)) for i in range(3)]
+    rows = [(f"img_{i}", png, "png") for i, png in enumerate(pngs)]
+    rows.append(("img_bad", pngs[0][:40], "png"))
+    df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
+    got = {r["image_id"]: r for r in IM.with_phash(df.coalesce(1)).collect()}
+    assert IM.with_phash(df).columns == ["image_id", "bytes", "fmt", "phash"]
+    assert got["img_bad"]["phash"] is None
+    for i, png in enumerate(pngs):
+        assert bytes(got[f"img_{i}"]["bytes"]) == png
+        assert got[f"img_{i}"]["phash"] == IM.phash64(IM.decode_png(png))
+
+
 def test_synthesize_is_deterministic(spark):
     a = IM.synthesize_images(spark, 20).select("image_id", "phash").collect()
     b = IM.synthesize_images(spark, 20).select("image_id", "phash").collect()

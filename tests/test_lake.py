@@ -381,12 +381,38 @@ def test_snapshot_schema_reads_like_inference_without_a_job(
                      (reads["changes"], snap["added_files"][0])):
         assert got.schema == inferred(rel).schema
         assert rows(got) == rows(inferred(rel))
-    # read_where scans data files, not partition directories, so a
-    # partition column is absent there, as with inference on those files
-    kept, _ = t.plan_scan({"n": (3, 8)})
-    leaf = spark.read.parquet(*kept)
-    assert reads["where"].schema == leaf.schema
-    assert rows(reads["where"]) == rows(leaf.filter("n >= 3 AND n <= 8"))
+    # read_where is read() filtered, partition column included
+    whole = t.read(spark)
+    assert reads["where"].schema == whole.schema
+    assert rows(reads["where"]) == rows(whole.filter("n >= 3 AND n <= 8"))
+
+
+def test_partitioned_table_reads_every_file_set(spark, tmp_path):
+    """Two partitioned appends leave two data-file sets holding the same
+    ``seed_host=...`` directories. read, read_where on the partition
+    column and read_changes see every set's rows with their partition
+    values, and planning them starts no Spark job."""
+    t = _tbl(spark, tmp_path, "parts")
+    df = spark.createDataFrame(
+        [(i, f"h{i % 3}.example") for i in range(12)], "n long, seed_host string")
+    first = t.append(df.filter("n < 6"), partition_by=["seed_host"])
+    t.append(df.filter("n >= 6"), partition_by=["seed_host"])
+
+    reads = {}
+    jobs = _jobs_run_by(spark, lambda: reads.update(
+        all=t.read(spark),
+        host=t.read_where(spark, {"seed_host": ("h1.example", "h1.example")}),
+        changes=t.read_changes(spark, first["snapshot_id"]),
+    ))
+    assert jobs == []
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.collect())
+
+    assert reads["all"].columns == ["n", "seed_host"]
+    assert rows(reads["all"]) == rows(df)
+    assert rows(reads["host"]) == [(i, "h1.example") for i in (1, 4, 7, 10)]
+    assert rows(reads["changes"]) == rows(df.filter("n >= 6"))
 
 
 def test_snapshot_without_schema_reads_by_inference(spark, tmp_path):

@@ -108,23 +108,101 @@ def test_driver_rows_plan_as_local_relation(spark):
 
 
 def test_create_dataframe_only_inside_local_df():
-    # every driver-built table in the package goes through local_df;
-    # createDataFrame over a Python list plans as an RDD scan that starts
-    # Python workers on every execution
+    # every driver-built table in the package, the jobs and the tools goes
+    # through local_df; createDataFrame over a Python list plans as an RDD
+    # scan that starts Python workers on every execution
     import re
 
-    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                       "web_crawler_spark")
+    root = os.path.dirname(os.path.dirname(__file__))
     hits = []
-    for dirpath, _, names in os.walk(pkg):
-        for name in names:
-            if name.endswith(".py"):
-                path = os.path.join(dirpath, name)
-                with open(path) as fh:
-                    for i, line in enumerate(fh, 1):
-                        if re.search(r"\bcreateDataFrame\(", line):
-                            hits.append((os.path.relpath(path, pkg), i, line.strip()))
-    assert [p for p, _, _ in hits] == ["session.py"], hits
+    for top in ("web_crawler_spark", "jobs", "tools"):
+        for dirpath, _, names in os.walk(os.path.join(root, top)):
+            for name in names:
+                if name.endswith(".py"):
+                    path = os.path.join(dirpath, name)
+                    with open(path) as fh:
+                        for i, line in enumerate(fh, 1):
+                            if re.search(r"\bcreateDataFrame\(", line):
+                                hits.append((os.path.relpath(path, root), i, line.strip()))
+    assert [p for p, _, _ in hits] == [os.path.join("web_crawler_spark", "session.py")], hits
+
+
+def _executed_nodes(spark, df) -> list:
+    """The physical operators that run when ``df`` executes: adaptive
+    plans and query stages are entered, a reused exchange is not (its
+    exchange runs once), and a cached relation's plan is walked once
+    however many scans read it."""
+    ident = spark._jvm.System.identityHashCode
+    cached, nodes = set(), []
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        elif name == "InMemoryTableScan":
+            key = ident(node.relation().cacheBuilder())
+            if key not in cached:
+                cached.add(key)
+                todo.append(node.relation().cachedPlan())
+        elif name != "ReusedExchange":
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_ingest_runs_each_python_pass_once(spark, tmp_path, monkeypatch):
+    # the pair table the ingest appends gunzips the archive once (both
+    # lanes read one cached member scan) and phashes each pair once, with
+    # no join back on image_id (which fanned rows out across hosts that
+    # serve the same image path)
+    import importlib.util
+    import re
+
+    from web_crawler_spark import lake
+
+    spec = importlib.util.spec_from_file_location(
+        "ingest_warc_job", os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                                        "jobs", "ingest_warc_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    arc = str(tmp_path / "arc")
+    job.synthesize_archive(arc, 2, 3)
+
+    plans = []
+    append = lake.SnapshotTable.append
+
+    def capture(self, df, *args, **kwargs):
+        plans.append([(n.nodeName(), n.simpleString(100))
+                      for n in _executed_nodes(spark, df)])
+        return append(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(lake.SnapshotTable, "append", capture)
+    job.ingest(spark, arc, str(tmp_path / "pairs"))
+    (nodes,) = plans
+    python = [s for name, s in nodes if name == "MapInPandas"]
+    assert len(python) == 2, python
+    assert sum("gunzip(" in s for s in python) == 1, python
+    assert sum("append_phash(" in s for s in python) == 1, python
+    joins = [s for name, s in nodes if "Join" in name]
+    assert not [s for s in joins if re.search(r"\[image_id#", s)], joins
+
+
+def test_records_pipeline_runs_the_fuzzy_merge_once(spark):
+    # attach_payload reads the records twice; both reads scan the one
+    # checkpoint of the fuzzy output, so no fuzzy merge is in the plan
+    from web_crawler_spark.analytics.queries import _e2e_pages
+    from web_crawler_spark.plans.enrich import records_pipeline
+
+    nodes = _executed_nodes(spark, records_pipeline(_e2e_pages(spark)))
+    assert not [n for n in nodes if n.nodeName() == "FlatMapGroupsInPandas"]
+    merged = [n for n in nodes if n.nodeName().startswith("Scan ExistingRDD")
+              and "mergedFrom" in n.output().toString()]
+    assert len(merged) == 2
+    assert len({n.rdd().id() for n in merged}) == 1
 
 
 def test_heavy_queries_keep_wholestage_codegen(spark):

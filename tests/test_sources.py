@@ -965,17 +965,9 @@ def test_cdx_plan_drives_selective_member_reads(spark, tmp_path):
         W.read_members_at(spark, bad, str(tmp_path)).collect()
 
 
-def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
-    """The archive-replay job elects one caption per image URL by rule —
-    longest caption, ties to the lexicographically smallest — so the pair
-    table is identical at any shuffle partition count, however the pages
-    citing an image are spread across shards. The job caches its pair
-    pipeline for one pass and leaves no persisted RDD behind."""
+def _ingest_job():
+    """jobs/ingest_warc_job.py loaded as a module."""
     import importlib.util
-
-    from web_crawler_spark import images as IM
-    from web_crawler_spark.lake import SnapshotTable
-    from web_crawler_spark.sources import warc as W
 
     spec = importlib.util.spec_from_file_location(
         "ingest_warc_job",
@@ -984,14 +976,45 @@ def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
     )
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
+    return job
 
-    def record(uri, ctype, payload):
-        msg = f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode() + payload
-        return (
-            f"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: {uri}\r\n"
-            f"WARC-Date: 2024-01-15T00:00:00Z\r\nContent-Length: {len(msg)}"
-            "\r\n\r\n"
-        ).encode("ascii") + msg + b"\r\n\r\n"
+
+def _warc_response(uri, ctype, payload):
+    msg = f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode() + payload
+    return (
+        f"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: {uri}\r\n"
+        f"WARC-Date: 2024-01-15T00:00:00Z\r\nContent-Length: {len(msg)}"
+        "\r\n\r\n"
+    ).encode("ascii") + msg + b"\r\n\r\n"
+
+
+def _write_gallery(path, host, images):
+    """One shard for ``host``: a page captioning each image of ``images``
+    ({image_id: (caption, png bytes)}), then one image/png response each."""
+    from web_crawler_spark.sources import warc as W
+
+    body = "".join(f'<img src="/images/{img}.png" alt="{cap}">'
+                   for img, (cap, _) in images.items())
+    W.write_warc_gz(
+        [_warc_response(f"https://{host}/gallery", "text/html",
+                        f"<html><body>{body}</body></html>".encode())]
+        + [_warc_response(f"https://{host}/images/{img}.png", "image/png", png)
+           for img, (_, png) in images.items()],
+        str(path),
+    )
+
+
+def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
+    """The archive-replay job elects one caption per image URL by rule —
+    longest caption, ties to the lexicographically smallest — so the pair
+    table is identical at any shuffle partition count, however the pages
+    citing an image are spread across shards. The job caches its pair
+    pipeline for one pass and leaves no persisted RDD behind."""
+    from web_crawler_spark import images as IM
+    from web_crawler_spark.lake import SnapshotTable
+    from web_crawler_spark.sources import warc as W
+
+    job = _ingest_job()
 
     host = "gallery.example"
     captions = {  # image -> the alt texts its citing pages carry
@@ -1008,13 +1031,13 @@ def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
             for img, caps in captions.items() if i < len(caps)
         )
         W.write_warc_gz(
-            [record(f"https://{host}/p{i}", "text/html",
-                    f"<html><body>{body}</body></html>".encode())],
+            [_warc_response(f"https://{host}/p{i}", "text/html",
+                            f"<html><body>{body}</body></html>".encode())],
             str(arc / f"page{i}.warc.gz"),
         )
     W.write_warc_gz(
-        [record(f"https://{host}/images/{img}.png", "image/png",
-                IM.encode_png(IM.synth_pixels(img, 48, 32)))
+        [_warc_response(f"https://{host}/images/{img}.png", "image/png",
+                        IM.encode_png(IM.synth_pixels(img, 48, 32)))
          for img in captions],
         str(arc / "images.warc.gz"),
     )
@@ -1044,4 +1067,61 @@ def test_ingest_warc_caption_election_is_partition_independent(spark, tmp_path):
         ("img_000000000001", "a longer caption"),
         ("img_000000000002", "two boats"),
         ("img_000000000003", "lighthouse"),
+    ]
+
+
+def test_ingest_warc_keeps_each_hosts_own_image(spark, tmp_path):
+    """Two hosts serve the same image path with their own bytes and
+    captions: the pair table holds one row per host, each with the phash
+    of its own bytes, never the other host's."""
+    from web_crawler_spark import images as IM
+    from web_crawler_spark.lake import SnapshotTable
+
+    arc = tmp_path / "arc"
+    arc.mkdir()
+    served = {}
+    for host, caption in (("a.example", "harbour at dusk"),
+                          ("b.example", "market at noon")):
+        png = IM.encode_png(IM.synth_pixels(host, 96, 96))
+        served[host] = (caption, png)
+        _write_gallery(arc / f"{host}.warc.gz", host, {"img_1": (caption, png)})
+
+    out = str(tmp_path / "pairs")
+    got = _ingest_job().ingest(spark, str(arc), out)
+    assert (got["pairs"], got["hosts"]) == (2, 2)
+    rows = sorted(SnapshotTable(out).read(spark).collect(), key=lambda r: r["seed_host"])
+    assert [(r["seed_host"], r["image_id"], r["caption"], bytes(r["bytes"]), r["phash"])
+            for r in rows] == [
+        (host, "img_1", cap, png, IM.phash64(IM.decode_png(png)))
+        for host, (cap, png) in sorted(served.items())
+    ]
+    assert rows[0]["phash"] != rows[1]["phash"]
+
+
+def test_second_ingest_into_a_lake_is_released_in_full(spark, tmp_path):
+    """A second archive ingested into the same lake adds a second
+    partitioned data-file set; the release reads both."""
+    from web_crawler_spark import images as IM
+    from web_crawler_spark.lake import SnapshotTable
+    from web_crawler_spark.plans.corpus import build_pair_corpus
+
+    job = _ingest_job()
+    lake = str(tmp_path / "lake")
+    captions = ["quiet harbour at dusk", "golden market square",
+                "misty bridge over the river", "crowded station hall"]
+    for k, host in enumerate(("a.example", "b.example")):
+        arc = tmp_path / f"arc_{host}"
+        arc.mkdir()
+        imgs = {f"img_{2 * k + i}": (captions[2 * k + i],
+                                     IM.encode_png(IM.synth_pixels(f"img_{2 * k + i}", 96, 96)))
+                for i in range(2)}
+        _write_gallery(arc / "shard.warc.gz", host, imgs)
+        assert job.ingest(spark, str(arc), lake)["pairs"] == 2
+
+    table = SnapshotTable(lake)
+    assert len(table.current()["files"]) == 2
+    release = build_pair_corpus(table.read(spark)).drop("bytes").collect()
+    assert sorted((r["seed_host"], r["image_id"]) for r in release) == [
+        ("a.example", "img_0"), ("a.example", "img_1"),
+        ("b.example", "img_2"), ("b.example", "img_3"),
     ]

@@ -96,6 +96,7 @@ def records_e2e_rows(spark) -> tuple[list[str], list[tuple]]:
     from web_crawler_spark.analytics import queries as Q
     from web_crawler_spark.operators import extract as EX
     from web_crawler_spark.plans.enrich import geocode_enrich, to_canonical_records
+    from web_crawler_spark.session import local_df
 
     pages = Q._e2e_pages(spark)
     canon = to_canonical_records(geocode_enrich(EX.extract_all(pages)))
@@ -131,8 +132,8 @@ def records_e2e_rows(spark) -> tuple[list[str], list[tuple]]:
     cols = ["seed_host", "locationName", "locationAddress", "latitude",
             "longitude", "countryIso3", "postcode", "qualityScore",
             "qualityLevel", "mergedFrom", "image_id", "caption"]
-    df = spark.createDataFrame(
-        out,
+    df = local_df(
+        spark, out,
         "seed_host string, locationName string, locationAddress string, "
         "latitude double, longitude double, countryIso3 string, "
         "postcode string, qualityScore int, qualityLevel string, "

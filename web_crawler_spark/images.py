@@ -378,6 +378,30 @@ def image_features(images: DataFrame) -> DataFrame:
     return images.mapInPandas(gen, IMAGE_FEATURES_SCHEMA)
 
 
+def with_phash(images: DataFrame) -> DataFrame:
+    """``images`` (any columns including ``bytes`` and ``fmt``) with a
+    ``phash`` column appended: the decode + phash of
+    :func:`image_features`, NULL where the bytes do not decode. One
+    pass-through mapInPandas, so every row keeps its own columns and
+    nothing is joined back on a key."""
+    schema = T.StructType(
+        images.schema.fields + [T.StructField("phash", T.LongType(), True)]
+    )
+
+    def append_phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            hashes = []
+            for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
+                try:
+                    hashes.append(phash64(decode_image(data, fmt)))
+                except Exception:
+                    hashes.append(None)
+            # nullable Int64: a NULL never turns the 64-bit hashes into floats
+            yield pdf.assign(phash=pd.array(hashes, dtype="Int64"))
+
+    return images.mapInPandas(append_phash, schema)
+
+
 def synthesize_images(
     spark, n: int, caption_fn=None, lossy_every: int = 4, neardup_every: int = 10
 ) -> DataFrame:

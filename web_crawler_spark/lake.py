@@ -23,11 +23,11 @@ deliberately Iceberg-like (append / overwrite / snapshots / summary).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
-from collections.abc import Container
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -318,21 +318,38 @@ class SnapshotTable:
             raise ValueError(f"table {self.path} has no snapshot/data")
         return snap
 
-    @staticmethod
-    def _scan(
-        spark: SparkSession, paths: list[str], snap: dict, drop: Container[str] = ()
-    ) -> DataFrame:
-        """Parquet scan of ``paths`` with ``snap``'s recorded schema
-        (minus ``drop``), so the reader plans without an inference job. A
-        snapshot written before schemas were recorded has none; its files
-        are read with inference."""
-        reader = spark.read.option("mergeSchema", "false")
-        if snap.get("schema"):
-            schema = T.StructType.fromJson(snap["schema"])
-            reader = reader.schema(
-                T.StructType([f for f in schema.fields if f.name not in drop])
-            )
-        return reader.parquet(*paths)
+    def _scan(self, spark: SparkSession, snap: dict, rels: list[str]) -> DataFrame:
+        """Parquet scan of ``rels`` (data-file sets, or data files in them,
+        relative to the data directory) with ``snap``'s recorded schema, so
+        the reader plans without an inference job. A snapshot written
+        before schemas were recorded has none; its files are read with
+        inference.
+
+        A partitioned table's partition columns live in ``key=value``
+        directory names, and partition discovery takes one base directory
+        per scan: each data-file set is scanned under its own ``basePath``
+        and the scans are unioned. An unpartitioned table is one scan."""
+        schema = T.StructType.fromJson(snap["schema"]) if snap.get("schema") else None
+        by_set: dict[str, list[str]] = {}
+        for rel in rels:
+            by_set.setdefault(rel.split(os.sep, 1)[0], []).append(
+                os.path.join(self.data_dir, rel))
+
+        def reader():
+            r = spark.read.option("mergeSchema", "false")
+            return r if schema is None else r.schema(schema)
+
+        partitioned = any(
+            "=" in name for s in by_set
+            for name in os.listdir(os.path.join(self.data_dir, s))
+        )
+        if not partitioned:
+            return reader().parquet(*(p for ps in by_set.values() for p in ps))
+        scans = [
+            reader().option("basePath", os.path.join(self.data_dir, s)).parquet(*ps)
+            for s, ps in by_set.items()
+        ]
+        return functools.reduce(DataFrame.unionByName, scans)
 
     def plan_scan(
         self,
@@ -385,20 +402,15 @@ class SnapshotTable:
         """Pruned read: scan only the files :meth:`plan_scan` keeps, then
         apply the same ranges as a residual row filter — result identical
         to ``read().filter(...)``, cost proportional to the files the
-        predicate actually touches. The scan names data files, not their
-        partition directories, so partition columns are not read."""
+        predicate actually touches."""
         paths, _ = self.plan_scan(predicates, snapshot_id)
         if not paths:
             df = self.read(spark, snapshot_id).limit(0)
         else:
-            # key=value directory names mark the partition columns
-            part_cols = {
-                seg.split("=", 1)[0]
-                for p in paths
-                for seg in os.path.relpath(p, self.data_dir).split(os.sep)[1:-1]
-                if "=" in seg
-            }
-            df = self._scan(spark, paths, self._snapshot(snapshot_id), part_cols)
+            df = self._scan(
+                spark, self._snapshot(snapshot_id),
+                [os.path.relpath(p, self.data_dir) for p in paths],
+            )
         for col, (lo, hi) in predicates.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= lo)
@@ -408,8 +420,7 @@ class SnapshotTable:
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         snap = self._snapshot(snapshot_id)
-        paths = [os.path.join(self.data_dir, rel) for rel in snap["files"]]
-        return self._scan(spark, paths, snap)
+        return self._scan(spark, snap, snap["files"])
 
     def read_changes(
         self,
@@ -450,8 +461,7 @@ class SnapshotTable:
                  for rel in s["added_files"]]
         if not added:
             return self.read(spark, hi).limit(0)
-        paths = [os.path.join(self.data_dir, rel) for rel in added]
-        return self._scan(spark, paths, next(s for s in snaps if s["snapshot_id"] == hi))
+        return self._scan(spark, next(s for s in snaps if s["snapshot_id"] == hi), added)
 
     def rollback(self, snapshot_id: int) -> dict:
         """Iceberg rollback semantics (manageSnapshots().rollbackTo): a

@@ -312,8 +312,12 @@ def fuzzy_dedup(
     missing = [c for c in order_cols if c not in df.columns]
     if missing:
         raise ValueError(f"order_cols not in input DataFrame: {missing}")
+    # an explicit partition count, which AQE never coalesces: the blocks
+    # spread over every core instead of merging in one task
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.select(*cols)
+        .repartition(parallelism, block_col)
         .groupBy(block_col)
         .applyInPandas(
             lambda _key, pdf: run_block(pdf), FUZZY_OUT_SCHEMA

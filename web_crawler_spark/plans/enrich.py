@@ -250,7 +250,8 @@ def records_pipeline(
     dedup per host → geocode enrich → canonical records (+ payload).
 
     ``truncate_lineage`` persists the two stage boundaries (extraction
-    output, canonical records) via lazy localCheckpoint. Everything
+    output, and the records after the optional fuzzy merge, where
+    ``attach_payload`` forks them) via lazy localCheckpoint. Everything
     downstream of extraction re-analyzes the full 7-strategy union tree
     on every DataFrame operation otherwise — driver-side plan work that
     dominates wall time well before executors see a row (and grows with
@@ -267,8 +268,6 @@ def records_pipeline(
         raw = raw.localCheckpoint(eager=False)
     enriched = geocode_enrich(raw)
     recs = to_canonical_records(enriched)
-    if truncate_lineage:
-        recs = recs.localCheckpoint(eager=False)
     if fuzzy:
         deduped = FZ.fuzzy_dedup(
             recs, "seed_host", order_cols=["sourceUrl", "locationName", "extractionMethod"]
@@ -282,6 +281,10 @@ def records_pipeline(
             .withColumn("qualityLevel", R.quality_level("qualityScore"))
             .withColumn("missingFields", R.missing_fields(qmap))
         )
+    if truncate_lineage:
+        # attach_payload reads the records twice (the URL explode and the
+        # final join): the checkpoint runs the fuzzy merge once for both
+        recs = recs.localCheckpoint(eager=False)
     payload = EX.extract_images(pages)
     return attach_payload(recs, payload)
 
