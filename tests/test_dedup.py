@@ -48,21 +48,31 @@ def _corpus(spark):
 
 def test_minhash_finds_planted_neardups(spark):
     df = _corpus(spark)
-    survivors = D.minhash_dedup(df, "doc_id", "text", k=3, perms=8, band_size=2,
-                                jaccard_threshold=0.8)
-    ids = {r["doc_id"] for r in survivors.select("doc_id").collect()}
-    assert 100 not in ids and 101 not in ids  # dups collapsed to min id
-    assert 0 in ids and 1 in ids
-    assert len(ids) == 20
+    cand = D.minhash_lsh_candidates(df, "doc_id", "text", k=3, perms=8, band_size=2)
+    pairs = {(r["a"], r["b"]) for r in cand.collect()}
+    # the one-word variant and the exact copy both band with their original
+    assert (0, 100) in pairs and (1, 101) in pairs
 
 
 def test_simhash_table_matches_column_impl(spark):
+    """simhash_table against a per-document Python restatement of the
+    same rule: 60-bit md5 feature hash per distinct shingle, bit b set
+    iff the shingles voting 1 outnumber those voting 0."""
+    import hashlib
+
+    from web_crawler_spark.functions.text import normalize_text
+
     df = _corpus(spark).limit(5)
     a = {r["doc_id"]: r["simhash"] for r in D.simhash_table(df, "doc_id", "text", 3).collect()}
-    b = {
-        r["doc_id"]: r["s"]
-        for r in df.select("doc_id", D.simhash64("text", 3).alias("s")).collect()
-    }
+    b = {}
+    for r in df.select("doc_id", normalize_text("text").alias("t")).collect():
+        toks = r["t"].split(" ")
+        sh = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in sh]
+        b[r["doc_id"]] = sum(
+            1 << bit for bit in range(60)
+            if sum(1 if h >> bit & 1 else -1 for h in hs) > 0
+        )
     assert a == b
 
 
@@ -259,7 +269,9 @@ def test_semantic_dedup_pairs_and_anti_join(spark):
     # 3's witness is 1, not 2: cos(2,3) < 0.9 so 2 never pairs with 3
     assert got == {(2, 1), (3, 1), (5, 4)}
 
-    kept = {r["vec_id"] for r in D.semantic_dedup(df, threshold=0.9, codebook=cb).collect()}
+    kept = {r["vec_id"] for r in df.join(
+        pairs.select(F.col("dup").alias("vec_id")), "vec_id", "left_anti"
+    ).collect()}
     assert kept == {1, 4}
 
     # hash-seeded path: whatever the 2 seeds, every over-threshold pair is

@@ -731,39 +731,3 @@ def test_jsonld_recursive_walk_semantics(spark):
         ("Graph HQ", "1 Way", "Oslo", "", 59.9, 10.7),
         ("Deep Biz", "", "Bergen", "555", None, None),
     ]
-
-
-def test_extract_all_locations_info_score_dedup(spark, ld_pages):
-    from web_crawler_spark.operators import extract as EX
-
-    out = EX.extract_all_locations(ld_pages).collect()
-    # every strategy page yields rows through the composite
-    strategies = {r["strategy"] for r in out}
-    assert {"lists", "sections", "tables", "patterns"} <= strategies
-    # the pattern sweep also runs over the tables page and matches the
-    # same '12 Harbor Street, Springfield, IL 62704' (same dedup key);
-    # the tables row carries name+phone+email (score 7) and must beat the
-    # patterns row (score 5). The pat page's 'Suite 9' variant keeps a
-    # DIFFERENT key ('suite' strips but '9' stays) and survives alongside.
-    spring = sorted(
-        (r for r in out if r["address"] and "Springfield" in r["address"]
-         and "Harbor" in r["address"]),
-        key=lambda r: len(r["address"]),
-    )
-    assert len(spring) == 2
-    assert spring[0]["strategy"] == "tables"
-    assert spring[0]["phone"] == "217-555-0133"
-    assert "Suite 9" in spring[1]["address"]
-
-
-def test_loc_dedup_key_exact_pass_order(spark):
-    from web_crawler_spark.operators import extract as EX
-
-    df = spark.createDataFrame(
-        [("12 Harbor St., Springfield",), ("12 harbor STREET Springfield",)],
-        "a string",
-    )
-    keys = [r["k"] for r in df.select(EX.loc_dedup_key(F.col("a")).alias("k")).collect()]
-    # '.' and ',' become spaces, whitespace collapses, THEN 'st'/'street'
-    # strip (leaving an uncollapsed double space) -> both forms agree
-    assert keys[0] == keys[1] == "12 harbor  springfield"

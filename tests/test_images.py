@@ -24,10 +24,12 @@ def test_lossy_psnr_at_least_40db():
 
 
 def test_jpeg_real_seam_raises():
+    # decode_image's jpeg branch reads only the lossy surrogate: real JPEG
+    # bytes fail loudly at that seam instead of decoding to garbage
     import pytest
 
-    with pytest.raises(NotImplementedError):
-        IM.decode_jpeg_real(b"\xff\xd8")
+    with pytest.raises(ValueError, match="lossy-surrogate"):
+        IM.decode_image(b"\xff\xd8\xff\xe0" + bytes(16), "jpeg")
 
 
 def test_phash_properties():

@@ -127,6 +127,165 @@ def test_create_dataframe_only_inside_local_df():
     assert [p for p, _, _ in hits] == [os.path.join("web_crawler_spark", "session.py")], hits
 
 
+
+# Package defs that no program reaches but that stay: each is the one
+# implementation of a SURVEY §2 operator, checked by pytest only and
+# labelled "pytest" in COVERAGE.md's Query column.
+_PYTEST_ONLY = {
+    # WET/WARC crawl-archive ingestion: the plain-text WET scale path
+    "web_crawler_spark.sources.warc:read_wet",
+    # WET/WARC crawl-archive ingestion: the ranged-read seam a CDX fetch
+    # plan drives (one member per planned offset)
+    "web_crawler_spark.sources.warc:read_members_at",
+    # J1 frontier anti-join: deleting revisit-eligible URLs from the cuckoo
+    "web_crawler_spark.operators.seen_filter:delete_from_cuckoo",
+    # HyperLogLog distinct-count sketch: the cross-wave register merge
+    "web_crawler_spark.operators.sketch:hll_merge",
+    # ANN IVF-flat top-k: the codebook quality measure
+    "web_crawler_spark.operators.similarity:ivf_distortion",
+    # S8 CSV bulk source
+    "web_crawler_spark.sources.bulk:read_bulk_csv",
+}
+_PROGRAMS = ("jobs", "tools", "perfbench", "bench.py", "__spark_entry__.py")
+
+
+def _modules(root: str) -> dict:
+    """{module name: (tree, top-level defs, import aliases)} for the package
+    and every program file."""
+    import ast
+
+    out = {}
+    for top in ("web_crawler_spark",) + _PROGRAMS:
+        base = os.path.join(root, top)
+        paths = [base] if top.endswith(".py") else [
+            os.path.join(d, f) for d, _, fs in os.walk(base) for f in fs
+            if f.endswith(".py")
+        ]
+        for path in paths:
+            name = os.path.relpath(path, root)[:-3].replace(os.sep, ".")
+            name = name.removesuffix(".__init__")
+            pkg = name if path.endswith("__init__.py") else name.rpartition(".")[0]
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            defs, aliases = {}, {}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    for a in node.names:
+                        head = a.asname or a.name.split(".")[0]
+                        aliases[head] = ("mod", a.name if a.asname else head)
+                elif isinstance(node, ast.ImportFrom):
+                    src = node.module or ""
+                    if node.level:
+                        parts = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
+                        src = ".".join(parts + ([src] if src else []))
+                    for a in node.names:
+                        aliases[a.asname or a.name] = ("attr", src, a.name)
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    defs[node.name] = node
+                elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                    if all(isinstance(t, ast.Name) for t in targets):
+                        defs.update((t.id, node) for t in targets)
+            out[name] = (tree, defs, aliases)
+    return out
+
+
+def test_every_package_def_is_reachable_from_a_program():
+    # A top-level def, class or constant in the package must be reachable
+    # from a program: package module-level code, a @query-registered
+    # function, or jobs/, tools/, perfbench/, bench.py, __spark_entry__.py.
+    # Name, attribute and import-alias references are followed
+    # transitively; a def only tests call is dead weight (or, for a
+    # reference implementation, belongs in tests/).
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mods = _modules(root)
+
+    def attr(mod, name, depth=0):
+        if mod in mods and depth < 8:
+            _, defs, aliases = mods[mod]
+            if name in defs:
+                return ("def", mod, name)
+            if name in aliases:
+                return alias(aliases[name], depth + 1)
+        full = f"{mod}.{name}"
+        return ("mod", full) if full in mods else None
+
+    def alias(a, depth=0):
+        return ("mod", a[1]) if a[0] == "mod" else attr(a[1], a[2], depth)
+
+    def refs(mod, node):
+        _, defs, aliases = mods[mod]
+
+        def lookup(name):
+            if name in defs:
+                return ("def", mod, name)
+            return alias(aliases[name]) if name in aliases else None
+
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                hit = lookup(n.id)
+                if hit:
+                    yield hit
+            elif isinstance(n, ast.Attribute):
+                chain = []
+                while isinstance(n, ast.Attribute):
+                    chain.append(n.attr)
+                    n = n.value
+                hit = lookup(n.id) if isinstance(n, ast.Name) else None
+                for a in reversed(chain):
+                    if not hit or hit[0] != "mod":
+                        break
+                    hit = attr(hit[1], a)
+                    if hit:
+                        yield hit
+
+    def is_query(dec):
+        f = dec.func if isinstance(dec, ast.Call) else dec
+        return isinstance(f, ast.Name) and f.id == "query"
+
+    def reach(todo, seen):
+        seen = set(seen)
+        while todo:
+            mod, node = todo.pop()
+            for hit in refs(mod, node):
+                if hit[0] == "def" and hit not in seen:
+                    seen.add(hit)
+                    todo.append((hit[1], mods[hit[1]][1][hit[2]]))
+        return seen
+
+    roots, registered = [], set()
+    for mod, (tree, defs, _) in mods.items():
+        if not mod.startswith("web_crawler_spark"):
+            roots.append((mod, tree))
+            continue
+        for node in tree.body:
+            if node in defs.values():
+                if any(is_query(d) for d in getattr(node, "decorator_list", ())):
+                    roots.append((mod, node))
+                    registered.add(("def", mod, node.name))
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)) and not (
+                isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+            ):
+                roots.append((mod, node))
+    kept = [tuple(k.split(":")) for k in sorted(_PYTEST_ONLY)]
+    from_programs = reach(list(roots), registered)
+    seen = reach(roots + [(m, mods[m][1][n]) for m, n in kept], registered)
+    dead = sorted(
+        f"{mod}:{name}"
+        for mod, (_, defs, _) in mods.items() if mod.startswith("web_crawler_spark")
+        for name in defs
+        if not name.startswith("__") and ("def", mod, name) not in seen
+        and f"{mod}:{name}" not in _PYTEST_ONLY
+    )
+    assert not dead, f"{len(dead)} package defs no program reaches: {dead}"
+    # the allowlist names only defs that no program reaches
+    live = [f"{m}:{n}" for m, n in kept if ("def", m, n) in from_programs]
+    assert not live, f"reachable from a program, drop from _PYTEST_ONLY: {live}"
+
+
 def _executed_nodes(spark, df) -> list:
     """The physical operators that run when ``df`` executes: adaptive
     plans and query stages are entered, a reused exchange is not (its

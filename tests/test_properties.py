@@ -5,10 +5,60 @@ strings; each example set runs through Spark in ONE batch."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from web_crawler_spark.functions import urls as U
+
+# ---------------------------------------------- pure-Python twins -----
+# Reference implementations the column kernels are compared against;
+# the crawl oracle's own twins (py_canonicalize, ...) live in functions/urls.py.
+def py_is_pdf_url(url: str) -> bool:
+    u = url.lower()
+    return (u.endswith(".pdf") or ".pdf?" in u or "/pdf/" in u
+            or "doc_financials" in u)
+
+
+def py_is_document_url(url: str) -> bool:
+    return url.lower().endswith((".doc", ".docx", ".txt", ".rtf"))
+
+
+def py_is_homepage(url: str) -> bool:
+    base = re.sub(r"[?#].*$", "", url)
+    return bool(re.match(r"^https?://[^/?#]+/?$", base))
+
+
+def py_rfc3986_normalize(url: str) -> str:
+    """Pure-Python twin of :func:`urls.rfc3986_normalize` — the SAME rule
+    battery in the same order (hypothesis parity pins the Java-regex /
+    RE2 / Python-re semantics to one another). Non-``scheme://`` inputs
+    come back unchanged, like the column kernel."""
+    c = re.sub(r"[\t\n\r]", "", url)
+    for pct, ch in U.PCT_UNRESERVED:
+        c = c.replace(pct, ch)
+    m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)(.*)$", c, re.S)
+    if not m:
+        return url
+    scheme, hostport, rest = m.group(1).lower(), m.group(2).lower(), m.group(3)
+    if scheme == "http":
+        hostport = re.sub(r":80$", "", hostport)
+    elif scheme == "https":
+        hostport = re.sub(r":443$", "", hostport)
+    pm = re.match(r"^([^?#]*)", rest)
+    raw_path, tail = pm.group(1), rest[len(pm.group(1)):]
+    path = raw_path if raw_path != "" else "/"
+    for _ in range(U.DOTSEG_DEPTH):
+        path = re.sub(r"/\./", "/", path)
+    path = re.sub(r"/\.$", "/", path)
+    for _ in range(U.DOTSEG_DEPTH):
+        path = re.sub(f"/{U._SEG}/\\.\\./", "/", path)
+    path = re.sub(f"/{U._SEG}/\\.\\.$", "/", path)
+    path = re.sub(r"^(/\.\.)+/", "/", path)
+    path = re.sub(r"^(/\.\.)+$", "/", path)
+    return f"{scheme}://{hostport}{path}{tail}"
+
 
 _scheme = st.sampled_from(
     ["https://", "http://", "javascript:", "mailto:", "tel:", ""]
@@ -68,9 +118,9 @@ def test_doc_route_kernels_match_python_twins(spark, urls):
     ).collect()
     for r in rows:
         u = r["url"]
-        assert r["pdf"] == U.py_is_pdf_url(u), u
-        assert r["doc"] == U.py_is_document_url(u), u
-        assert r["home"] == U.py_is_homepage(u), u
+        assert r["pdf"] == py_is_pdf_url(u), u
+        assert r["doc"] == py_is_document_url(u), u
+        assert r["home"] == py_is_homepage(u), u
     by = {r["url"]: r for r in rows}
     assert by["https://a.ex.com/?q=1"]["home"]          # query stripped
     assert by["https://a.ex.com#top"]["home"]           # fragment stripped
@@ -141,13 +191,13 @@ def test_rfc3986_normalize_matches_python_twin(spark, urls):
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     rows = df.select("url", U.rfc3986_normalize("url").alias("n")).collect()
     for r in rows:
-        assert r["n"] == U.py_rfc3986_normalize(r["url"]), r["url"]
+        assert r["n"] == py_rfc3986_normalize(r["url"]), r["url"]
 
 
 @settings(max_examples=200, deadline=None)
 @given(_rfc_url)
 def test_rfc3986_normalize_invariants(url):
-    n = U.py_rfc3986_normalize(url)
+    n = py_rfc3986_normalize(url)
     # scheme + host lowercased, default port gone, path present
     assert n.startswith(("http://", "https://"))
     host = n.split("://", 1)[1].split("/", 1)[0]
@@ -164,7 +214,7 @@ def test_rfc3986_normalize_invariants(url):
     # fixtures stay inside the documented unroll bound)
     if "%" not in url:
         assert "/./" not in path and not path.endswith("/.")
-        assert U.py_rfc3986_normalize(n) == n  # idempotent
+        assert py_rfc3986_normalize(n) == n  # idempotent
 
 
 def test_rfc3986_normalize_curated_cases(spark):
@@ -190,7 +240,7 @@ def test_rfc3986_normalize_curated_cases(spark):
     for r in df.select("url", "expected",
                        U.rfc3986_normalize("url").alias("n")).collect():
         assert r["n"] == r["expected"], (r["url"], r["n"])
-        assert U.py_rfc3986_normalize(r["url"]) == r["expected"]
+        assert py_rfc3986_normalize(r["url"]) == r["expected"]
 
 
 def test_rfc3986_normalize_whitespace_and_non_url_edges(spark):
@@ -208,7 +258,7 @@ def test_rfc3986_normalize_whitespace_and_non_url_edges(spark):
     for r in df.select("url", "expected",
                        U.rfc3986_normalize("url").alias("n")).collect():
         assert r["n"] == r["expected"], (r["url"], r["n"])
-        assert U.py_rfc3986_normalize(r["url"]) == r["expected"]
+        assert py_rfc3986_normalize(r["url"]) == r["expected"]
 
 
 @settings(max_examples=3, deadline=None)
@@ -224,7 +274,7 @@ def test_rfc3986_normalize_twin_parity_beyond_http(spark, urls):
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     rows = df.select("url", U.rfc3986_normalize("url").alias("n")).collect()
     for r in rows:
-        assert r["n"] == U.py_rfc3986_normalize(r["url"]), r["url"]
+        assert r["n"] == py_rfc3986_normalize(r["url"]), r["url"]
 
 
 # --------------------------------------------------- .warc.gz member split --

@@ -1,11 +1,10 @@
-"""S11 JSON envelope, S12 result cache, A7 observed progress counters."""
+"""S11 JSON envelope, S12 result cache."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from web_crawler_spark import serving as SV
-from web_crawler_spark.streaming import progress as PG
 
 
 def test_json_response_envelope(spark):
@@ -35,21 +34,3 @@ def test_result_cache_roundtrip(spark, tmp_path):
     # site-wide crawls bypass the cache entirely
     cache.put(df, urls, "site")
     assert cache.get(spark, urls, "site") is None
-
-
-def test_observe_progress_counts(spark):
-    df = spark.createDataFrame(
-        [
-            ("u1", True, "Office A"),
-            ("u2", False, None),
-            ("u3", True, "Office B"),
-        ],
-        "url string, fetch_ok boolean, locationName string",
-    )
-    observed, obs = PG.observe_progress(df)
-    observed.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    assert m["rowsProcessed"] == 3
-    assert m["errors"] == 1
-    assert m["locationsFound"] == 2
-    assert PG.progress_pct(m["rowsProcessed"], 12) == 25.0

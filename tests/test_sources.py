@@ -16,13 +16,7 @@ from web_crawler_spark.sources import sitemap as SM
 
 # ------------------------------------------------------------ sitemap ------
 def test_sitemap_candidates_and_locs(spark):
-    hosts = spark.createDataFrame([("acme.com",), ("bar.org",)], "host string")
-    cand = SM.sitemap_candidates(hosts)
-    assert cand.count() == 6  # 2 hosts x 3 conventional paths
-    urls = {r["sitemap_url"] for r in cand.collect()}
-    assert "https://acme.com/sitemap.xml" in urls
-    assert "https://bar.org/sitemap/sitemap.xml" in urls
-
+    """A sitemap's <loc> entries are the crawl's candidate pages."""
     xml = (
         "<urlset><url><loc>https://acme.com/a</loc></url>"
         "<url><loc>https://acme.com/login</loc></url>"
@@ -38,32 +32,7 @@ def test_sitemap_candidates_and_locs(spark):
     ]
 
 
-def test_first_working_sitemap(spark):
-    rows = [
-        ("acme.com", "/sitemap_index.xml", True),
-        ("acme.com", "/sitemap/sitemap.xml", True),
-        ("bar.org", "/sitemap.xml", False),
-        ("bar.org", "/sitemap/sitemap.xml", True),
-    ]
-    df = spark.createDataFrame(rows, "host string, sitemap_path string, fetch_ok boolean")
-    got = {r["host"]: r["sitemap_path"] for r in SM.first_working_sitemap(df).collect()}
-    assert got == {
-        "acme.com": "/sitemap_index.xml",  # first in conventional order
-        "bar.org": "/sitemap/sitemap.xml",
-    }
-
-
 # ---------------------------------------------------------- api probe ------
-def test_probe_candidates(spark):
-    hosts = spark.createDataFrame([("acme.com",)], "host string")
-    cand = AP.probe_candidates(hosts)
-    assert cand.count() == len(AP.API_ENDPOINT_PATHS)
-    assert (
-        cand.filter(F.col("endpoint") == "https://acme.com/api/locations").count()
-        == 1
-    )
-
-
 def _payloads():
     arr = json.dumps(
         [
@@ -260,21 +229,6 @@ def test_read_xlsx_grid_roundtrip(spark, tmp_path):
     assert cells[("All Locations", 1, "url")] == "https://bar.org"
 
 
-def test_first_working_sitemap_unknown_paths_rank_last(spark):
-    # a robots-harvested custom path must NOT beat conventional ones
-    rows = [
-        ("acme.com", "/custom-sitemap.xml", True),
-        ("acme.com", "/sitemap.xml", True),
-        ("solo.org", "/another.xml", True),
-    ]
-    df = spark.createDataFrame(rows, "host string, sitemap_path string, fetch_ok boolean")
-    got = {r["host"]: r["sitemap_path"] for r in SM.first_working_sitemap(df).collect()}
-    assert got == {
-        "acme.com": "/sitemap.xml",  # conventional beats custom
-        "solo.org": "/another.xml",  # custom wins only when alone
-    }
-
-
 # ------------------------------------------------- pdf location battery -----
 # Expected rows are pinned from executing the reference's pure text
 # functions (pdf-extractor.service.js extractLocationsFromText +
@@ -359,24 +313,6 @@ def test_pdf_locations_null_and_empty_text(spark):
         "sourceUrl string, text string",
     )
     assert P.extract_pdf_locations(df).count() == 0
-
-
-def test_api_available_three_probe_reduction(spark):
-    from web_crawler_spark.sources import api_probe as AP
-
-    probes = spark.createDataFrame(
-        [("a.com", "/api/locations.json", 404),
-         ("a.com", "/locations.json", 200),
-         ("a.com", "/api/stores.json", 500),
-         ("b.com", "/api/locations.json", 404),
-         # a 200 on a non-test endpoint must not count
-         ("b.com", "/api/v1/sites", 200),
-         ("c.com", "/api/stores.json", 200)],
-        "host string, path string, status int",
-    )
-    got = {r["host"]: r["api_available"]
-           for r in AP.api_available(probes).collect()}
-    assert got == {"a.com": True, "b.com": False, "c.com": True}
 
 
 def test_sitemap_index_classification_and_routing(spark):
@@ -503,16 +439,12 @@ def test_warc_http_response_parsing_and_non_http_nulls(spark):
     assert rows[1]["body"] == "plain text" and rows[1]["len_ok"]
 
 
-def test_warc_route_media_type_lanes_and_extraction_composition(spark):
-    """Archive → lanes → extractor, end to end: a 2xx text/html response
-    routed to the html lane feeds the contact battery and yields a
-    record; pdf/image/error/text lanes split exactly; nothing non-2xx
-    ever reaches an extractor."""
+def test_warc_responses_feed_the_extraction_battery(spark):
+    """Archive → HTTP layer → extractor, end to end: each response record
+    carries its parsed status and media type, and a 2xx text/html
+    response feeds the contact battery and yields a record."""
     from web_crawler_spark.operators.extract import extract_text
-    from web_crawler_spark.sources.warc import (
-        parse_warc_responses,
-        route_media_type,
-    )
+    from web_crawler_spark.sources.warc import parse_warc_responses
 
     crlf = "\r\n"
     page = ("<html><p>Acme HQ: 12 Main St, Springfield, 12345 USA. "
@@ -531,24 +463,20 @@ def test_warc_route_media_type_lanes_and_extraction_composition(spark):
         rec("response", "https://a.example/page", http("200 OK", "text/html", page))
         + rec("response", "https://a.example/doc.pdf",
               http("200 OK", "application/pdf", "%PDF-1.4 fake"))
-        + rec("response", "https://a.example/pic",
-              http("200 OK", "image/png", "PNGBYTES"))
         + rec("response", "https://a.example/gone",
               http("404 Not Found", "text/html", "missing"))
-        + rec("conversion", "https://a.example/wet", "already plain text")
     )
-    routed = route_media_type(
-        parse_warc_responses(spark.createDataFrame([(shard,)], "warc string"))
-    )
-    lanes = {r["target_uri"]: r["lane"] for r in routed.collect()}
-    assert lanes == {
-        "https://a.example/page": "html",
-        "https://a.example/doc.pdf": "pdf",
-        "https://a.example/pic": "image",
-        "https://a.example/gone": "error",
-        "https://a.example/wet": "text",
+    parsed = parse_warc_responses(spark.createDataFrame([(shard,)], "warc string"))
+    heads = {r["target_uri"]: (r["http_status"], r["http_content_type"])
+             for r in parsed.collect()}
+    assert heads == {
+        "https://a.example/page": (200, "text/html"),
+        "https://a.example/doc.pdf": (200, "application/pdf"),
+        "https://a.example/gone": (404, "text/html"),
     }
-    html = routed.filter(F.col("lane") == "html").select(
+    html = parsed.filter(
+        (F.col("http_status") == 200) & (F.col("http_content_type") == "text/html")
+    ).select(
         F.col("target_uri").alias("url"),
         F.regexp_extract("target_uri", r"https://([^/]+)", 1).alias("seed_host"),
         F.col("payload").alias("body"),
@@ -661,7 +589,7 @@ def test_warc_gz_http_response_lane_composition(spark, tmp_path):
     """Full-WARC response records through the gz leg: read_warc_gz rows +
     http_response on the body column must yield the same status/media
     type/payload the plain-text parse produces — i.e. the raw-archive
-    path composes with the HTTP layer and the media-type router."""
+    path composes with the HTTP layer."""
     from pyspark.sql import functions as F
 
     from web_crawler_spark.sources import warc as W
@@ -685,22 +613,20 @@ def test_warc_gz_http_response_lane_composition(spark, tmp_path):
     W.write_warc_gz([rec, conv], str(tmp_path / "s.warc.gz"))
     parsed = W.read_warc_gz(spark, str(tmp_path))
     h = W.http_response(F.col("body"))
-    out = W.route_media_type(
-        parsed.select(
-            "*",
-            h["http_status"].alias("http_status"),
-            h["http_content_type"].alias("http_content_type"),
-            h["payload"].alias("payload"),
-        )
+    out = parsed.select(
+        "*",
+        h["http_status"].alias("http_status"),
+        h["http_content_type"].alias("http_content_type"),
+        h["payload"].alias("payload"),
     )
     rows = {r["target_uri"]: r for r in out.collect()}
     rr = rows["https://r.example/"]
     assert rr["http_status"] == 200
     assert rr["http_content_type"] == "text/html"
     assert rr["payload"] == "<html><body>hi</body></html>"
-    assert rr["lane"] == "html" and rr["len_ok"]
+    assert rr["len_ok"]
     cc = rows["https://c.example/"]
-    assert cc["http_status"] is None and cc["lane"] == "text"
+    assert cc["http_status"] is None
 
 
 def test_warc_gz_binary_bodies_feed_image_pipeline(spark, tmp_path):

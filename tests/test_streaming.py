@@ -1,10 +1,7 @@
-"""§2.8 Structured Streaming surface: the streaming hourly rollup must
-agree with the batch twin over the same files; the stateful per-user
-counter must equal a batch groupBy."""
+"""§2.8 Structured Streaming surface: the stateful gap sessionizer must
+agree with the batch lag-window sessionization over the same files."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,59 +27,9 @@ def events_dir(spark, tmp_path_factory):
     return out
 
 
-def test_streaming_hourly_rollup_matches_batch(spark, events_dir):
-    stream = SE.stream_events(spark, events_dir)
-    SE.run_to_memory(SE.hourly_rollup(stream), "rollup_mem", "complete")
-    got = {
-        (str(r["hour_start"]), r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM rollup_mem").collect()
-    }
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("s"))
-        .select(F.col("w.start").alias("hour_start"), "event_type", "n", "s")
-    )
-    want = {
-        (str(r["hour_start"]), r["event_type"]): (r["n"], r["s"])
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stateful_user_counters(spark, events_dir):
-    stream = SE.stream_events(spark, events_dir)
-    SE.run_to_memory(SE.user_counters(stream), "counters_mem", "update")
-    # update mode may emit a row per (user, micro-batch); the LAST emission
-    # per user carries the final running total
-    rows = spark.sql(
-        "SELECT user_id, events, total_value FROM counters_mem"
-    ).collect()
-    final: dict[int, tuple] = {}
-    for r in rows:  # memory sink preserves emission order per batch
-        prev = final.get(r["user_id"])
-        if prev is None or r["events"] >= prev[0]:
-            final[r["user_id"]] = (r["events"], r["total_value"])
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias("s"),
-        )
-    )
-    want = {r["user_id"]: (r["n"], r["s"]) for r in batch.collect()}
-    assert len(final) == len(want)
-    mismatches = {
-        u: (final[u], want[u]) for u in want if final[u] != want[u]
-    }
-    assert not mismatches, list(mismatches.items())[:5]
-
-
 def test_stateful_sessionization_matches_batch(spark, events_dir):
     # single batch: the gap sessionizer needs event-time-ordered arrival,
-    # which a multi-batch file stream does not guarantee; state plumbing
-    # across batches is covered by test_stateful_user_counters
+    # which a multi-batch file stream does not guarantee
     stream = SE.stream_events(spark, events_dir, max_files=None)
     SE.run_to_memory(SE.sessionize_stream(stream), "sessions_mem", "update")
     rows = spark.sql("SELECT * FROM sessions_mem").collect()
@@ -122,72 +69,3 @@ def test_stateful_sessionization_matches_batch(spark, events_dir):
     for uid, n in want_events.items():
         assert got[uid][1] == n, (uid, got[uid], n)
         assert got[uid][0] == want_sessions[uid], (uid, got[uid], want_sessions[uid])
-
-
-# ------------------------------------------- streaming pair ingest -----
-def test_streaming_pair_ingest_matches_batch_and_replays_idempotently(
-    spark, tmp_path_factory
-):
-    """The micro-batch ingest (curation -> in-batch phash collapse ->
-    cross-batch seen-set dedup, epoch-addressed writes) must accept
-    exactly the rows the batch pipeline accepts, and a full replay from a
-    wiped checkpoint must leave the lake byte-identical (row-identical)."""
-    import shutil
-
-    from web_crawler_spark import images as IM
-    from web_crawler_spark.images import curate_pairs
-    from web_crawler_spark.operators.dedup import phash_neardup_pairs
-    from web_crawler_spark.streaming import ingest as SI
-
-    land = str(tmp_path_factory.mktemp("pairs_land"))
-    work = str(tmp_path_factory.mktemp("pairs_work"))
-
-    # land three epoch files in id order (the arrival contract a wave
-    # emitter provides); _dup siblings of epoch-0 originals land later
-    all_pairs = IM.synthesize_images(spark, 45).cache()
-    ids = sorted(r["image_id"] for r in all_pairs.select("image_id").collect())
-    slices = [ids[:20], ids[20:40], ids[40:]]
-    stage = str(tmp_path_factory.mktemp("pairs_stage"))
-    for i, chunk in enumerate(slices):
-        # the file stream source lists plain files, not nested parquet
-        # directories — stage each slice, then land its part file flat
-        out = os.path.join(stage, f"s{i}")
-        all_pairs.filter(F.col("image_id").isin(chunk)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(out)
-        part = next(p for p in os.listdir(out) if p.endswith(".parquet"))
-        shutil.move(os.path.join(out, part), os.path.join(land, f"f{i}.parquet"))
-
-    q = SI.ingest_pairs(
-        SI.stream_pair_files(spark, land, max_files=1), work, max_hamming=8
-    )
-    q.awaitTermination()
-    got = sorted(
-        r["image_id"] for r in SI.read_accepted(spark, work).collect()
-    )
-
-    # batch reference: same gates, global min-id phash collapse
-    kept = curate_pairs(all_pairs).filter(F.col("keep"))
-    dup = phash_neardup_pairs(kept, "image_id", "phash", max_hamming=8)
-    ref = sorted(
-        r["image_id"]
-        for r in kept.join(
-            dup.select(F.col("b").alias("image_id")).distinct(),
-            "image_id",
-            "left_anti",
-        ).collect()
-    )
-    assert got == ref and got
-
-    # replay from scratch: wipe the checkpoint, keep the lake — every epoch
-    # re-runs and must overwrite itself without duplicating a single row
-    shutil.rmtree(os.path.join(work, "_checkpoint"))
-    q2 = SI.ingest_pairs(
-        SI.stream_pair_files(spark, land, max_files=1), work, max_hamming=8
-    )
-    q2.awaitTermination()
-    again = sorted(
-        r["image_id"] for r in SI.read_accepted(spark, work).collect()
-    )
-    assert again == got
-    all_pairs.unpersist()

@@ -55,20 +55,40 @@ def test_stopword_and_punct_ratio(spark):
 
 
 def test_minhash_signature_matches_python(spark):
+    from web_crawler_spark.operators.dedup import minhash_signature_table
+
     text = "the quick brown fox jumps over the lazy dog"
     df = _docs(spark, [text])
-    sig = df.select(TX.minhash_signature("text", 3, 4).alias("s")).collect()[0]["s"]
+    sig = minhash_signature_table(df, "doc_id", "text", k=3, perms=4).collect()[0]
     toks = text.split(" ")
     sh = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
     for p in range(4):
         want = min(hashlib.md5(f"{p}|{s}".encode()).hexdigest() for s in sh)
-        assert sig[p] == want
+        assert sig[f"m{p}"] == want
 
 
-def test_word_overlap_similarity(spark):
-    df = spark.createDataFrame([("a b c", "b c d")], "x string, y string")
-    got = df.select(TX.word_overlap_similarity("x", "y").alias("s")).collect()[0]["s"]
-    assert abs(got - 2 / 4) < 1e-9
+def test_word_overlap_similarity(spark, sf_dir):
+    """X10 as the registry computes it: |common| / |union| over each
+    document's distinct normalized tokens, pairs above 0.7."""
+    from web_crawler_spark.analytics.queries import q_word_overlap_pairs
+
+    got = {(r["a"], r["b"]): r["overlap"]
+           for r in q_word_overlap_pairs(spark, sf_dir).collect()}
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", TX.normalize_text("text").alias("t"))
+        .collect()
+    )
+    toks = {r["doc_id"]: set(r["t"].split(" ")) for r in docs}
+    want = {}
+    for a in toks:
+        for b in toks:
+            if a < b:
+                j = len(toks[a] & toks[b]) / len(toks[a] | toks[b])
+                if j > 0.7:
+                    want[(a, b)] = round(j, 6)
+    assert got == want and got
 
 
 def test_lang_id(spark):

@@ -8,10 +8,8 @@ W7), pagination (:72-77, W8) — as one declarative DataFrame chain that
 Catalyst folds into a single scan with pushed filters. CSV export of the
 filtered+sorted view (:168-190, S9) is ``sources/bulk.py:export_csv``.
 
-Pagination note for scale: ``paginate`` uses a global sort + offset/limit,
-which is the correct semantics for a UI page; for deep paging over 10^10
-rows use keyset pagination (``after`` anchor), which prunes with the sort
-key instead of skipping rows.
+Pagination note: ``paginate`` uses a global sort + offset/limit, which
+is the correct semantics for a UI page.
 """
 
 from __future__ import annotations
@@ -43,14 +41,6 @@ def sort_view(df: DataFrame, key: str, ascending: bool = True) -> DataFrame:
 def paginate(df: DataFrame, page: int, size: int = 20) -> DataFrame:
     """W8: 1-based page slice of an already-sorted view."""
     return df.offset((page - 1) * size).limit(size)
-
-
-def keyset_page(df: DataFrame, key: str, after, size: int = 20, ascending: bool = True) -> DataFrame:
-    """Deep-pagination variant: WHERE key > anchor ORDER BY key LIMIT n —
-    partition-prunable, no offset skip."""
-    c = F.col(key)
-    pred = c > after if ascending else c < after
-    return df.filter(pred).orderBy(c.asc() if ascending else c.desc()).limit(size)
 
 
 def autocomplete(df: DataFrame, col: str, value: str, limit: int = 10) -> DataFrame:

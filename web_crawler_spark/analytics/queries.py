@@ -996,18 +996,14 @@ def q_dedup_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("chosen"),
         F.round("l_quantity", 2).alias("val"),
     )
-    w = Window.partitionBy("l_partkey").orderBy(
-        F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber")
-    )
-    best = (
-        li.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.lit("best_wins").alias("policy"),
-            F.col("l_partkey").alias("grp"),
-            F.col("l_orderkey").alias("chosen"),
-            F.round("l_extendedprice", 2).alias("val"),
-        )
+    best = D.dedup_best_wins(
+        li, "l_partkey", F.col("l_extendedprice"),
+        F.struct("l_orderkey", "l_linenumber"),
+    ).select(
+        F.lit("best_wins").alias("policy"),
+        F.col("l_partkey").alias("grp"),
+        F.col("l_orderkey").alias("chosen"),
+        F.round("l_extendedprice", 2).alias("val"),
     )
     d = load(spark, sf_dir, "documents")
     sub = D.substring_dup_pairs(
@@ -1867,15 +1863,7 @@ def q_sessionize_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(src, "events.parquet"),
     )
     stream = SE.stream_events(spark, src, max_files=None)
-    (
-        SE.sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("wcs_sessionize_stream_q")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    SE.run_to_memory(SE.sessionize_stream(stream), "wcs_sessionize_stream_q", "update")
     emitted = spark.sql("SELECT * FROM wcs_sessionize_stream_q")
     # single-batch emissions: one row per session (closed) + one open per
     # user; aggregate to the oracle's per-user shape
@@ -5057,7 +5045,7 @@ def q_records_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_crawler_spark.plans.enrich import records_pipeline
 
     pages = _e2e_pages(spark)
-    out = records_pipeline(pages, fuzzy=True)
+    out = records_pipeline(pages)
     return out.select(
         "seed_host", "locationName", "locationAddress",
         F.round("latitude", 6).alias("latitude"),
@@ -5171,7 +5159,7 @@ def q_word_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hook+compress connected components (the dedup cluster-id assignment
-    behind minhash_dedup) on a deliberately DEEP chain graph: edge
+    over a near-dup pair graph) on a deliberately DEEP chain graph: edge
     (n, n+1) unless n≡39 (mod 40), so every component is a path of
     diameter up to 39 — far past what bounded naive propagation (the
     round-1/2 max_iters=10 hazard) could label, but ~6 pointer-jumping

@@ -3,9 +3,8 @@ column expressions (JVM-side, whole-stage-codegen friendly — no Python in
 the hot path).
 
 These generalize the reference's text heuristics — length-window
-predicates (heuristic-extractor.service.js:64,95,136), word-overlap
-similarity (scraper.service.js:155-190), exact-key normalization
-(enhanced-deduplication.service.js:169-176) — into the operations a
+predicates (heuristic-extractor.service.js:64,95,136), exact-key
+normalization (enhanced-deduplication.service.js:169-176) — into the operations a
 large-scale corpus pipeline needs: tokenization, language ID, quality
 scoring, shingling, and fingerprinting.
 
@@ -154,41 +153,6 @@ def shingles(text: Column | str, k: int = 3) -> Column:
         return F.when(n <= F.lit(k), F.array(F.array_join(t, " "))).otherwise(joined)
 
     return F.transform(F.array(toks), over)[0]
-
-
-def minhash_signature(text: Column | str, k: int = 3, perms: int = 8) -> Column:
-    """MinHash signature as array<string> of length ``perms``.
-
-    Each "permutation" p hashes shingle s as md5(p || '|' || s); the
-    signature element is the lexicographic MIN (hex compares like the
-    number). Identical SQL exists in DuckDB, so this carries an exact
-    oracle — see analytics/queries.py.
-    """
-    sh = shingles(text, k)
-
-    def perm_hash(p: int):
-        # NOTE: must be a 1-arg lambda — a second (defaulted) parameter
-        # makes PySpark treat it as an (element, index) lambda.
-        return lambda s: F.md5(F.concat(F.lit(f"{p}|"), s))
-
-    # let-bind the shingle array (same no-CSE-in-HOF-args reason as in
-    # shingles): each of the `perms` min-scans references the bound array
-    def over(shb: Column) -> Column:
-        return F.array(
-            *[F.array_min(F.transform(shb, perm_hash(p))) for p in range(perms)]
-        )
-
-    return F.transform(F.array(sh), over)[0]
-
-
-def word_overlap_similarity(a: Column | str, b: Column | str) -> Column:
-    """X10: |common words| / |union| (scraper.service.js:155-190),
-    over normalized tokens."""
-    ta = F.array_distinct(F.split(normalize_text(a), " "))
-    tb = F.array_distinct(F.split(normalize_text(b), " "))
-    inter = F.size(F.array_intersect(ta, tb))
-    uni = F.size(F.array_union(ta, tb))
-    return F.when(uni > 0, inter.cast("double") / uni).otherwise(F.lit(0.0))
 
 
 def repetition_stats(text: Column | str, k: int) -> Column:

@@ -206,21 +206,6 @@ def is_homepage(url: Column | str) -> Column:
     return u.rlike(r"^https?://[^/?#]+/?$")
 
 
-def py_is_pdf_url(url: str) -> bool:
-    u = url.lower()
-    return (u.endswith(".pdf") or ".pdf?" in u or "/pdf/" in u
-            or "doc_financials" in u)
-
-
-def py_is_document_url(url: str) -> bool:
-    return url.lower().endswith((".doc", ".docx", ".txt", ".rtf"))
-
-
-def py_is_homepage(url: str) -> bool:
-    base = re.sub(r"[?#].*$", "", url)
-    return bool(re.match(r"^https?://[^/?#]+/?$", base))
-
-
 def surt_key(url: Column | str) -> Column:
     """SURT (Sort-friendly URI Reordering Transform) canonical key — the
     Heritrix / OpenWayback frontier key form: fragment dropped, host
@@ -339,33 +324,3 @@ def rfc3986_normalize(url: Column | str) -> Column:
         c.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://"),
         F.concat(scheme, F.lit("://"), host, path, tail),
     ).otherwise(c0)
-
-
-def py_rfc3986_normalize(url: str) -> str:
-    """Pure-Python twin of :func:`rfc3986_normalize` — the SAME rule
-    battery in the same order (hypothesis parity pins the Java-regex /
-    RE2 / Python-re semantics to one another). Non-``scheme://`` inputs
-    come back unchanged, like the column kernel."""
-    c = re.sub(r"[\t\n\r]", "", url)
-    for pct, ch in PCT_UNRESERVED:
-        c = c.replace(pct, ch)
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)(.*)$", c, re.S)
-    if not m:
-        return url
-    scheme, hostport, rest = m.group(1).lower(), m.group(2).lower(), m.group(3)
-    if scheme == "http":
-        hostport = re.sub(r":80$", "", hostport)
-    elif scheme == "https":
-        hostport = re.sub(r":443$", "", hostport)
-    pm = re.match(r"^([^?#]*)", rest)
-    raw_path, tail = pm.group(1), rest[len(pm.group(1)):]
-    path = raw_path if raw_path != "" else "/"
-    for _ in range(DOTSEG_DEPTH):
-        path = re.sub(r"/\./", "/", path)
-    path = re.sub(r"/\.$", "/", path)
-    for _ in range(DOTSEG_DEPTH):
-        path = re.sub(f"/{_SEG}/\\.\\./", "/", path)
-    path = re.sub(f"/{_SEG}/\\.\\.$", "/", path)
-    path = re.sub(r"^(/\.\.)+/", "/", path)
-    path = re.sub(r"^(/\.\.)+$", "/", path)
-    return f"{scheme}://{hostport}{path}{tail}"

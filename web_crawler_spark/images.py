@@ -15,8 +15,8 @@ shape, partitioning — with a self-contained deterministic codec:
   lossy path is modeled by a clearly-marked deterministic surrogate —
   uniform pixel quantization at "quality" q — which preserves the property
   the per-row invariant tests (PSNR ≥ 40 dB vs the original, not equal).
-  ``decode_jpeg_real`` raises NotImplementedError at the exact seam where
-  a real codec plugs in.
+  ``decode_image``'s jpeg branch is the one seam where a real codec plugs
+  in.
 
 phash: classic 64-bit DCT perceptual hash (resize 32×32 grayscale → 2D
 DCT-II → top-left 8×8 minus DC → median threshold), pure numpy. Near-dup
@@ -160,14 +160,6 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 # --------------------------------------------------- lossy path (stubbed) --
-def decode_jpeg_real(data: bytes) -> np.ndarray:
-    """Seam for a real JPEG codec. Not available in this container."""
-    raise NotImplementedError(
-        "real JPEG decode requires Pillow/libjpeg — not present; "
-        "the deterministic surrogate (encode_lossy/decode_lossy) is used instead"
-    )
-
-
 LOSSY_MAGIC = b"LQNT"
 
 
@@ -192,7 +184,7 @@ def decode_image(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return decode_png(data)
     if fmt in ("jpeg", "jpg"):
-        return decode_lossy(data)  # surrogate; see decode_jpeg_real
+        return decode_lossy(data)  # surrogate: the real-codec seam
     raise ValueError(f"unknown fmt {fmt}")
 
 

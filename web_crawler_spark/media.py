@@ -7,7 +7,7 @@ numpy implementation where the container allows (resize over our
 decodable formats), and a deterministic capsule format where the real
 library is absent (video = concatenated PNG frames with an index header;
 audio = PCM16 in a length-prefixed capsule). Real-format seams raise
-``NotImplementedError`` exactly like images.decode_jpeg_real.
+``NotImplementedError``.
 """
 
 from __future__ import annotations

@@ -802,23 +802,6 @@ def c4_span_dedup(
     )
 
 
-# -------------------------------------------------------- canonical merge A3
-def canonical_merge(
-    df: DataFrame,
-    key: Column,
-    first_cols: list[str],
-    key_name: str = "canonical_key",
-) -> DataFrame:
-    """A3: groupBy canonical key; each field takes its first non-null value
-    in key order (reference merge fills empty fields, keeps first-seen —
-    address-normalizer.service.js:285-335). Caller supplies deterministic
-    input order via a prior sort column baked into ``first_cols`` usage.
-    """
-    aggs = [F.first(c, ignorenulls=True).alias(c) for c in first_cols]
-    aggs.append(F.count(F.lit(1)).alias("merged_from"))
-    return df.groupBy(key.alias(key_name)).agg(*aggs)
-
-
 # ---------------------------------------------------------- MinHash LSH ----
 def minhash_signature_table(
     df: DataFrame,
@@ -828,11 +811,10 @@ def minhash_signature_table(
     perms: int = 8,
 ) -> DataFrame:
     """(id, m0..m{perms-1}) minhash signature via explode → one groupBy
-    with ``perms`` MIN aggregates (map-side combined). Identical values to
-    :func:`functions.text.minhash_signature`, but each shingle's md5 is
-    computed exactly ``perms`` times in one pass — the array-expression
-    form re-inlines the whole transform tree per consumer, which blows up
-    at corpus scale."""
+    with ``perms`` MIN aggregates (map-side combined): permutation p hashes
+    shingle s as md5(p || '|' || s) and keeps the lexicographic MIN (hex
+    compares like the number), so DuckDB re-runs the same SQL. Each
+    shingle's md5 is computed exactly ``perms`` times in one pass."""
     sh = df.select(
         F.col(id_col),
         F.explode(TX.shingles(F.col(text_col), k)).alias("_s"),
@@ -887,49 +869,6 @@ def minhash_lsh_candidates(
         .filter(F.col("a._id") < F.col("b._id"))
         .select(F.col("a._id").alias("a"), F.col("b._id").alias("b"))
         .distinct()
-    )
-
-
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    perms: int = 8,
-    band_size: int = 2,
-    jaccard_threshold: float = 0.7,
-) -> DataFrame:
-    """Full near-dup dedup: LSH candidates → exact shingle-Jaccard verify →
-    connected-via-min representative (survivor = min id of the pair group).
-
-    Representative selection is single-hop (min over direct neighbors),
-    matching the reference's greedy first-index-wins clustering for the
-    common case of pairwise-discovered duplicates; a full
-    connected-components pass (iterated min propagation) is available via
-    ``connected_min`` for chained duplicate families.
-    """
-    cand = minhash_lsh_candidates(df, id_col, text_col, k, perms, band_size)
-    sh = df.select(
-        F.col(id_col).alias("_sid"),
-        F.array_distinct(TX.shingles(text_col, k)).alias("_sh"),
-    )
-    verified = (
-        cand.join(sh.withColumnRenamed("_sid", "a").withColumnRenamed("_sh", "_sha"), "a")
-        .join(sh.withColumnRenamed("_sid", "b").withColumnRenamed("_sh", "_shb"), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_sha", "_shb")).cast("double")
-            / F.size(F.array_union("_sha", "_shb")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b")
-    )
-    # survivor = smallest id among {self} ∪ {smaller partners}
-    loser_min = verified.groupBy(F.col("b").alias(id_col)).agg(F.min("a").alias("_rep"))
-    return (
-        df.join(loser_min, id_col, "left")
-        .filter(F.col("_rep").isNull())
-        .drop("_rep")
     )
 
 
@@ -1034,9 +973,11 @@ def simhash_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
     """(id, simhash) via explode → one md5 per shingle → 60 partial-agg bit
-    votes → recombine. Identical result to :func:`simhash64`, but the
-    feature hash is computed once per shingle (not once per bit) and the
-    votes aggregate with map-side combine — the shape that survives 100 TB.
+    votes → recombine. A shingle's feature hash is the first 15 hex chars
+    of its md5 (60 bits, zero-extended); bit b of the simhash is 1 iff
+    Σ_shingles (bit_b ? +1 : -1) > 0. The hash is computed once per
+    shingle and the votes aggregate with map-side combine — the shape
+    that survives 100 TB.
     """
     sh = df.select(
         F.col(id_col),
@@ -1057,35 +998,6 @@ def simhash_table(
         )
         out = piece if out is None else out + piece
     return votes.select(F.col(id_col), out.alias("simhash"))
-
-
-def simhash64(text_col: str, k: int = 2) -> Column:
-    """64-bit SimHash over k-token shingles, built from md5-derived feature
-    hashes entirely with built-in expressions (no UDF).
-
-    Each shingle's 64-bit hash = conv(first 15 hex chars of md5, 16, 10)
-    (60 bits, zero-extended — uniform and deterministic). Bit b of the
-    simhash is 1 iff Σ_features (bit_b ? +1 : -1) > 0.
-    """
-    sh = F.array_distinct(TX.shingles(F.col(text_col), k))
-    h = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
-
-    def vote_fn(b: int):
-        def step(acc, x):
-            return acc + F.when(
-                F.shiftright(x, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1))
-
-        return step
-
-    bits = []
-    for b in range(60):
-        vote = F.aggregate(h, F.lit(0), vote_fn(b))
-        bits.append(F.when(vote > 0, F.lit(2 ** b).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for bcol in bits[1:]:
-        out = out + bcol
-    return out
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -1445,26 +1357,6 @@ def semantic_dedup_pairs(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_centroids: int | None = None,
-    codebook: DataFrame | None = None,
-    seed_strategy: str = "hash",
-) -> DataFrame:
-    """Corpus after SemDeDup: anti-join the dropped ids from
-    :func:`semantic_dedup_pairs` (first-wins — the smallest id of each
-    semantic group survives, every later member with an over-threshold
-    in-cluster witness is removed). As there, ``n_centroids=None``
-    without a ``codebook`` runs an eager ``df.count()`` at call time."""
-    drops = semantic_dedup_pairs(
-        df, id_col, vec_col, threshold, n_centroids, codebook, seed_strategy
-    ).select(F.col("dup").alias(id_col))
-    return df.join(drops, id_col, "left_anti")
-
-
 # ------------------------------------------------------------ phash --------
 def phash_neardup_pairs(
     df: DataFrame,
@@ -1560,8 +1452,8 @@ def phash_crossdup_ids(
     n_blocks: int = 5,
 ) -> DataFrame:
     """Candidate ids whose phash is within ``max_hamming`` of ANY seen
-    phash — the cross-set form of phash_neardup_pairs (streaming ingest
-    probes each micro-batch against the accumulated seen set). Same
+    phash — the cross-set form of phash_neardup_pairs (the pair corpus
+    build probes its training pairs against the eval set). Same
     pigeonhole banding: both sides explode into n_blocks block keys, the
     equi-join touches only same-block pairs, an exact Hamming filter
     restores precision. The seen side is typically the big one — the

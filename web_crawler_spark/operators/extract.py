@@ -353,12 +353,6 @@ _MAP_IFRAME_MARKERS = [
     "mapbox", "maps.app.goo.gl", "leafletjs",
 ]
 
-_MAP_CAND_TYPE = (
-    "struct<kind:string,src:string,coords_found:boolean,lat:double,"
-    "lon:double,provider:string,text:string>"
-)
-
-
 def _attr(tag: Column, name: str) -> Column:
     """attr value of a double- or single-quoted HTML attribute, NULL when
     absent (the JSON-bearing data-location values are single-quoted in
@@ -1932,9 +1926,10 @@ def extract_images(pages: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------ full stack ---
-def extract_all(pages: DataFrame, min_confidence: float = CONFIDENCE_FLOOR) -> DataFrame:
-    """The 7-strategy union + confidence filter (F6). One narrow pass per
-    strategy over the same scan; Spark shares the pages scan via plan reuse.
+def extract_all(pages: DataFrame) -> DataFrame:
+    """The 7-strategy union + the ``CONFIDENCE_FLOOR`` filter (F6). One
+    narrow pass per strategy over the same scan; Spark shares the pages
+    scan via plan reuse.
     """
     parts = [
         extract_jsonld(pages),
@@ -1948,7 +1943,7 @@ def extract_all(pages: DataFrame, min_confidence: float = CONFIDENCE_FLOOR) -> D
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.filter(F.col("confidence") >= min_confidence)
+    return out.filter(F.col("confidence") >= CONFIDENCE_FLOOR)
 
 
 # ---------------------------------------------------------------------------
@@ -2380,110 +2375,3 @@ def extract_loc_lists(pages: DataFrame) -> DataFrame:
         "col.locationName", "col.street", "col.phone", "col.email",
         "col.activity", "col.usageShare",
     )
-
-
-# ---------------------------------------------------------------------------
-# X39: location-extractor's own orchestrator (extractAllLocations,
-# location-extractor.service.js:10-88) — the 10-strategy union closed by
-# its info-score dedup (:505-547).
-# ---------------------------------------------------------------------------
-
-def loc_dedup_key(address: Column) -> Column:
-    """normalizeAddress (:530-537), in the reference's exact pass order:
-    lowercase → [.,-#] to spaces → collapse whitespace → strip street-type
-    words → trim. Stripping a word can leave a double space that is NOT
-    re-collapsed — bug-compatible."""
-    s = F.lower(F.coalesce(address, F.lit("")))
-    s = F.regexp_replace(s, r"[.,\-#]", " ")
-    s = F.regexp_replace(s, r"\s+", " ")
-    s = F.regexp_replace(
-        s, r"\b(street|st|avenue|ave|road|rd|boulevard|blvd|suite|ste|unit|apt)\b", ""
-    )
-    return F.trim(s)
-
-
-def loc_info_score(name: Column, address: Column, phone: Column,
-                   email: Column, activity: Column) -> Column:
-    """getInfoScore (:539-547): name>5 → +2, address>20 → +3, phone → +1,
-    email → +1, activity present and not 'Office' → +1."""
-    nz = lambda c: F.coalesce(c, F.lit(""))  # noqa: E731
-    return (
-        F.when(F.length(nz(name)) > 5, 2).otherwise(0)
-        + F.when(F.length(nz(address)) > 20, 3).otherwise(0)
-        + F.when(F.length(nz(phone)) > 0, 1).otherwise(0)
-        + F.when(F.length(nz(email)) > 0, 1).otherwise(0)
-        + F.when(
-            (F.length(nz(activity)) > 0) & (nz(activity) != "Office"), 1
-        ).otherwise(0)
-    )
-
-
-def extract_all_locations(pages: DataFrame) -> DataFrame:
-    """X39: the full extractAllLocations stack — strategies in reference
-    order (jsonld, microdata, lists, sections, tables, address patterns,
-    contact page, data attributes, inline scripts, sequential headers),
-    then the normalized-address dedup where the MORE-INFORMATIVE record
-    wins and ties keep the earlier strategy (:505-528's strict ``>``).
-
-    Composition note: strategies 1/2/9/10 are the richer component-level
-    ports (the reference's own flatter :90-153 coercions are subsumed);
-    their address is the component join. The dedup key and info score
-    are exact. One narrow pass per strategy, a single shuffle at the
-    dedup window."""
-    strategies = [
-        ("jsonld", extract_jsonld(pages)),
-        ("microdata", extract_microdata(pages)),
-        ("lists", extract_loc_lists(pages)),
-        ("sections", extract_loc_sections(pages)),
-        ("tables", extract_loc_tables(pages)),
-        ("patterns", extract_loc_patterns(pages)),
-        ("contact_page", extract_contact_page(pages)),
-        ("data_attributes", extract_data_attributes(pages)),
-        ("inline_scripts", extract_inline_script(pages)),
-        ("sequential_h3", extract_h3_sequential(pages)),
-    ]
-    _ns = F.lit(None).cast("string")
-    parts = []
-    for rank, (tag, df) in enumerate(strategies):
-        cols = df.columns
-        addr = (
-            F.col("street")
-            if "city" not in cols
-            else F.nullif(
-                F.concat_ws(
-                    ", ",
-                    *[F.col(c) for c in ("street", "city", "postcode")
-                      if c in cols],
-                ),
-                F.lit(""),
-            )
-        )
-        parts.append(
-            df.select(
-                "sourceUrl",
-                F.lit(tag).alias("strategy"),
-                F.lit(rank).alias("_rank"),
-                F.col("locationName"),
-                addr.alias("address"),
-                (F.col("phone") if "phone" in cols else _ns).alias("phone"),
-                (F.col("email") if "email" in cols else _ns).alias("email"),
-                (F.col("activity") if "activity" in cols else _ns).alias("activity"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    scored = out.select(
-        "*",
-        loc_dedup_key(F.col("address")).alias("_key"),
-        loc_info_score(
-            F.col("locationName"), F.col("address"), F.col("phone"),
-            F.col("email"), F.col("activity"),
-        ).alias("_score"),
-    )
-    from web_crawler_spark.operators.dedup import dedup_best_wins
-
-    return dedup_best_wins(
-        scored.where(F.col("address").isNotNull()),
-        key=F.col("_key"), score=F.col("_score"), tiebreak=F.col("_rank"),
-    ).drop("_key", "_score", "_rank")

@@ -243,50 +243,40 @@ def attach_payload(records: DataFrame, images: DataFrame) -> DataFrame:
     )
 
 
-def records_pipeline(
-    pages: DataFrame, fuzzy: bool = True, truncate_lineage: bool = True
-) -> DataFrame:
+def records_pipeline(pages: DataFrame) -> DataFrame:
     """pages → 7-strategy extraction → confidence floor → greedy fuzzy
     dedup per host → geocode enrich → canonical records (+ payload).
 
-    ``truncate_lineage`` persists the two stage boundaries (extraction
-    output, and the records after the optional fuzzy merge, where
-    ``attach_payload`` forks them) via lazy localCheckpoint. Everything
-    downstream of extraction re-analyzes the full 7-strategy union tree
-    on every DataFrame operation otherwise — driver-side plan work that
-    dominates wall time well before executors see a row (and grows with
-    plan depth, not data). Extraction output is rows-per-location, far
-    smaller than the page bodies it came from, so the materialization is
-    cheap at any scale; pass False to keep pure lineage (e.g. when a
-    caller checkpoints to its own table right after, as the crawl loop
-    does)."""
+    Two lazy localCheckpoints cut the lineage at the stage boundaries: the
+    extraction output, and the records after the fuzzy merge, where
+    ``attach_payload`` forks them. Everything downstream of extraction
+    would otherwise re-analyze the full 7-strategy union tree on every
+    DataFrame operation — driver-side plan work that dominates wall time
+    well before executors see a row (and grows with plan depth, not
+    data) — and the fork would run the fuzzy merge twice. Extraction
+    output is rows-per-location, far smaller than the page bodies it came
+    from, so the materialization is cheap at any scale."""
     from web_crawler_spark.operators import extract as EX
     from web_crawler_spark.operators import fuzzy as FZ
 
-    raw = EX.extract_all(pages)
-    if truncate_lineage:
-        raw = raw.localCheckpoint(eager=False)
-    enriched = geocode_enrich(raw)
-    recs = to_canonical_records(enriched)
-    if fuzzy:
-        deduped = FZ.fuzzy_dedup(
-            recs, "seed_host", order_cols=["sourceUrl", "locationName", "extractionMethod"]
-        )
-        # re-derive envelope columns lost through the fuzzy merge schema
-        qmap = {k: k for k in R.QUALITY_WEIGHTS}
-        recs = (
-            deduped.withColumn("footprint", G.footprint_wkt("latitude", "longitude"))
-            .withColumn("height", R.estimate_height(F.coalesce("activityAtAsset", F.lit(""))))
-            .withColumn("qualityScore", R.quality_score(qmap))
-            .withColumn("qualityLevel", R.quality_level("qualityScore"))
-            .withColumn("missingFields", R.missing_fields(qmap))
-        )
-    if truncate_lineage:
+    raw = EX.extract_all(pages).localCheckpoint(eager=False)
+    recs = to_canonical_records(geocode_enrich(raw))
+    deduped = FZ.fuzzy_dedup(
+        recs, "seed_host", order_cols=["sourceUrl", "locationName", "extractionMethod"]
+    )
+    # re-derive envelope columns lost through the fuzzy merge schema
+    qmap = {k: k for k in R.QUALITY_WEIGHTS}
+    recs = (
+        deduped.withColumn("footprint", G.footprint_wkt("latitude", "longitude"))
+        .withColumn("height", R.estimate_height(F.coalesce("activityAtAsset", F.lit(""))))
+        .withColumn("qualityScore", R.quality_score(qmap))
+        .withColumn("qualityLevel", R.quality_level("qualityScore"))
+        .withColumn("missingFields", R.missing_fields(qmap))
         # attach_payload reads the records twice (the URL explode and the
         # final join): the checkpoint runs the fuzzy merge once for both
-        recs = recs.localCheckpoint(eager=False)
-    payload = EX.extract_images(pages)
-    return attach_payload(recs, payload)
+        .localCheckpoint(eager=False)
+    )
+    return attach_payload(recs, EX.extract_images(pages))
 
 
 # Reverse geocoding (multi-geocoding.service.js:114-161): Google first,

@@ -1,9 +1,11 @@
-"""Fixed StructTypes for every engine table.
+"""Fixed StructTypes for the two driver-built tables the engine shares
+across modules: the image+caption payload (``IMAGES``) and the parsed
+robots dimension (``ROBOTS``).
 
 The reference is schemaless-JS (arrays of plain objects, strings everywhere
-— SURVEY.md §1.2); we enforce typed schemas at every boundary. Documented
-deviation: latitude/longitude are DoubleType here (reference carries them as
-strings, crawler.service.js:453-454).
+— SURVEY.md §1.2); we enforce typed schemas at every boundary. The crawl's
+own table schemas (frontier, delta) live with the crawl loop in
+``plans/crawl.py``.
 """
 
 from __future__ import annotations
@@ -23,31 +25,6 @@ IMAGES = T.StructType(
     ]
 )
 
-# --- crawl state tables (reference: site-crawler.service.js:134-136) ------
-FRONTIER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-        # deterministic total order for bit-identical crawl ordering:
-        # position in the reference's single-threaded FIFO queue
-        T.StructField("discovery_seq", T.LongType(), False),
-        T.StructField("priority_tier", T.IntegerType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("lineage", T.StringType(), True),  # parent url
-    ]
-)
-
-SEEN = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("visit_seq", T.LongType(), False),
-    ]
-)
-
 ROBOTS = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
@@ -55,60 +32,5 @@ ROBOTS = T.StructType(
         T.StructField("disallow_prefixes", T.ArrayType(T.StringType()), True),
         T.StructField("crawl_delay_s", T.DoubleType(), True),
         T.StructField("sitemaps", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("visit_seq", T.LongType(), False),
-        T.StructField("body", T.StringType(), True),
-        T.StructField("xhr_json", T.StringType(), True),  # S3 XHR capture analogue
-        T.StructField("fetch_ok", T.BooleanType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-# --- canonical output (reference crawler.service.js:449-464 + envelopes) --
-RECORDS = T.StructType(
-    [
-        T.StructField("locationName", T.StringType(), True),
-        T.StructField("locationAddress", T.StringType(), True),
-        T.StructField("activityAtAsset", T.StringType(), True),
-        T.StructField("latitude", T.DoubleType(), True),
-        T.StructField("longitude", T.DoubleType(), True),
-        T.StructField("countryIso3", T.StringType(), True),
-        T.StructField("postcode", T.StringType(), True),
-        T.StructField("state", T.StringType(), True),
-        T.StructField("streetOrCity", T.StringType(), True),
-        T.StructField("footprint", T.StringType(), True),  # MULTIPOLYGON WKT
-        T.StructField("height", T.DoubleType(), True),
-        T.StructField("usageShare", T.StringType(), True),
-        T.StructField("sourceUrl", T.StringType(), True),
-        T.StructField("sourceType", T.StringType(), True),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("extractionMethod", T.StringType(), True),
-        T.StructField("qualityScore", T.IntegerType(), True),
-        T.StructField("qualityLevel", T.StringType(), True),
-        T.StructField("missingFields", T.ArrayType(T.StringType()), True),
-        # graft payload join (FIXTURES.md F5)
-        T.StructField("image_id", T.StringType(), True),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("phash", T.LongType(), True),
-    ]
-)
-
-GEOCODE_DIM = T.StructType(
-    [
-        T.StructField("address_norm", T.StringType(), False),
-        T.StructField("formattedAddress", T.StringType(), True),
-        T.StructField("latitude", T.DoubleType(), True),
-        T.StructField("longitude", T.DoubleType(), True),
-        T.StructField("city", T.StringType(), True),
-        T.StructField("state", T.StringType(), True),
-        T.StructField("postalCode", T.StringType(), True),
-        T.StructField("countryCode", T.StringType(), True),
     ]
 )

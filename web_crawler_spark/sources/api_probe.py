@@ -1,8 +1,7 @@
-"""S6 + X18: conventional JSON endpoint probing and payload normalization.
+"""S6 + X18: JSON endpoint payload normalization.
 
-Reference semantics (api-extractor.service.js:33-68 endpoint list,
-:103-296 parseJsonLocations/normalizeJsonLocation/normalizeGeoJsonFeature,
-restated): probe 20 conventional endpoints per host; a JSON payload is
+Reference semantics (api-extractor.service.js:103-296 parseJsonLocations/
+normalizeJsonLocation/normalizeGeoJsonFeature, restated): a JSON payload is
 either a bare array, an object with the first present array under one of 8
 container keys (locations/stores/offices/branches/data/results/items/
 features), or a GeoJSON FeatureCollection; per item, fields come from
@@ -21,30 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# api-extractor.service.js:37-67 — conventional endpoint paths (data).
-API_ENDPOINT_PATHS = [
-    "/api/locations",
-    "/api/locations.json",
-    "/api/stores",
-    "/api/stores.json",
-    "/api/offices",
-    "/api/offices.json",
-    "/api/branches",
-    "/locations.json",
-    "/stores.json",
-    "/offices.json",
-    "/data/locations.json",
-    "/data/stores.json",
-    "/wp-json/wp/v2/locations",
-    "/wp-json/store-locator/v1/stores",
-    "/locations-sitemap.xml",
-    "/graphql",
-    "/api/graphql",
-    "/store-locator/data",
-    "/store-locator/locations.json",
-    "/storelocator/data.json",
-]
 
 # api-extractor.service.js:113-117
 CONTAINER_KEYS = [
@@ -72,19 +47,6 @@ ISO2_TO_3 = {
     "ES": "ESP", "NL": "NLD", "BE": "BEL", "CA": "CAN", "AU": "AUS",
     "JP": "JPN", "CN": "CHN", "IN": "IND", "BR": "BRA", "MX": "MEX",
 }
-
-
-def probe_candidates(hosts: DataFrame, host_col: str = "host") -> DataFrame:
-    """One probe URL per (host, conventional endpoint)."""
-    return hosts.select(
-        "*",
-        F.explode(
-            F.array(*[F.lit(p) for p in API_ENDPOINT_PATHS])
-        ).alias("api_path"),
-    ).withColumn(
-        "endpoint",
-        F.concat(F.lit("https://"), F.col(host_col), F.col("api_path")),
-    )
 
 
 def _synonym_str(item: Column, keys: list[str]) -> Column:
@@ -210,26 +172,3 @@ def normalize_items(df: DataFrame, source_col: str = "endpoint") -> DataFrame:
         F.when(is_geo, F.lit("GeoJSON")).otherwise(F.lit("API/JSON")).alias("sourceType"),
     )
     return out.filter((F.col("locationName") != "") | (F.col("locationAddress") != ""))
-
-
-# detectApiAvailability (api-extractor.service.js:301-322): three HEAD
-# probes, true on the first 200. As a batch operator: a per-host boolean
-# over the probe-result table (the fetch itself is the probe source's
-# mapInPandas stage; this is the reduction).
-API_AVAILABILITY_PATHS = [
-    "/api/locations.json", "/locations.json", "/api/stores.json"
-]
-
-
-def api_available(
-    probes: DataFrame, host_col: str = "host", path_col: str = "path",
-    status_col: str = "status",
-) -> DataFrame:
-    """(host, path, status) probe results → (host, api_available): true
-    iff any of the three availability test endpoints answered 200."""
-    hit = F.col(path_col).isin(API_AVAILABILITY_PATHS) & (
-        F.col(status_col) == 200
-    )
-    return probes.groupBy(F.col(host_col).alias("host")).agg(
-        F.max(F.when(hit, True).otherwise(False)).alias("api_available")
-    )

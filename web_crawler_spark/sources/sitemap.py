@@ -1,13 +1,13 @@
 """S5: sitemap seed-expansion.
 
-Reference semantics (site-crawler.service.js:199-239, restated): probe the
-three conventional sitemap paths per host, regex `<loc>(.*?)</loc>` over
-the XML body, strip tags, drop excluded URLs, first working sitemap wins.
+Reference semantics (site-crawler.service.js:199-239, restated): regex
+`<loc>(.*?)</loc>` over a fetched sitemap's XML body, strip tags, drop
+excluded URLs.
 
-Spark restatement: the probe set is a literal cross (`explode(array(...))`)
-— at 10^10-host scale this is a generated column, never a driver loop —
-and the `<loc>` mining is JVM-side `regexp_extract_all` + `posexplode`
-(document order preserved, no Python). Exclusion reuses the F1 kernel.
+Spark restatement: the `<loc>` mining is JVM-side `regexp_extract_all` +
+`posexplode` (document order preserved, no Python), and index sitemaps
+route their locs to the next fetch round instead of the page frontier.
+Exclusion reuses the F1 kernel.
 """
 
 from __future__ import annotations
@@ -17,21 +17,7 @@ from pyspark.sql import functions as F
 
 from web_crawler_spark.functions import urls as U
 
-# site-crawler.service.js:202-206
-SITEMAP_PATHS = ["/sitemap.xml", "/sitemap_index.xml", "/sitemap/sitemap.xml"]
-
 LOC_RE = "<loc>(.*?)</loc>"
-
-
-def sitemap_candidates(hosts: DataFrame, host_col: str = "host") -> DataFrame:
-    """One probe URL per (host, conventional path): the fetch stage's input."""
-    return hosts.select(
-        "*",
-        F.explode(F.array(*[F.lit(p) for p in SITEMAP_PATHS])).alias("sitemap_path"),
-    ).withColumn(
-        "sitemap_url",
-        F.concat(F.lit("https://"), F.col(host_col), F.col("sitemap_path")),
-    )
 
 
 def extract_locs(
@@ -48,29 +34,6 @@ def extract_locs(
     if exclude:
         out = out.filter(~U.is_excluded("loc_url"))
     return out
-
-
-def first_working_sitemap(
-    sitemaps: DataFrame, host_col: str = "host", ok_col: str = "fetch_ok"
-) -> DataFrame:
-    """Keep each host's first (in SITEMAP_PATHS order) successful sitemap —
-    the reference's `break` after the first 200 response (:227)."""
-    pos = F.array_position(
-        F.array(*[F.lit(p) for p in SITEMAP_PATHS]), F.col("sitemap_path")
-    )
-    # array_position is 0 for paths outside the conventional list (e.g.
-    # harvested from robots.txt Sitemap: lines) — rank those LAST, then by
-    # path for determinism, instead of letting 0 sort first
-    order = F.when(pos == 0, F.lit(len(SITEMAP_PATHS) + 1)).otherwise(pos)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(host_col).orderBy(order.asc(), F.col("sitemap_path").asc())
-    return (
-        sitemaps.filter(F.col(ok_col))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
 
 
 def classify_sitemap(xml: "Column | str") -> "Column":

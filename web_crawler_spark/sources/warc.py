@@ -487,42 +487,3 @@ def parse_warc_responses(
         h["http_content_type"].alias("http_content_type"),
         h["payload"].alias("payload"),
     )
-
-
-def route_media_type(
-    records: DataFrame,
-    status_col: str = "http_status",
-    ctype_col: str = "http_content_type",
-    uri_col: str = "target_uri",
-) -> DataFrame:
-    """Fan-out lane per archive record — the seam where a corpus build
-    splits one 100 TB WARC scan into its per-modality pipelines:
-
-    - ``text``  — WET ``conversion`` records (already-extracted text)
-    - ``error`` — HTTP responses outside 2xx (and responses whose body
-      failed to parse as HTTP): never silently fed to an extractor
-    - ``html``  — 2xx ``text/html`` → the DOM/contact extraction battery
-    - ``pdf``   — 2xx ``application/pdf`` (or a 2xx with no Content-Type
-      but a .pdf URL — the WAT-practice suffix fallback) → the PDF battery
-    - ``image`` — 2xx ``image/*`` → the image+caption pair pipeline
-    - ``other`` — everything else, kept addressable for audits
-
-    Content-Type is authoritative when the server sent one; the URL
-    suffix only breaks the no-header tie. One CASE column, zero shuffles
-    — the lanes stay in the same scan until each pipeline filters its own.
-    """
-    from web_crawler_spark.functions.urls import is_pdf_url
-
-    ct = F.lower(F.coalesce(F.col(ctype_col), F.lit("")))
-    status = F.col(status_col)
-    lane = (
-        F.when(F.col("warc_type") == "conversion", F.lit("text"))
-        .when(status.isNull() | (status < 200) | (status >= 300),
-              F.lit("error"))
-        .when(ct == "text/html", F.lit("html"))
-        .when(ct == "application/pdf", F.lit("pdf"))
-        .when(ct.startswith("image/"), F.lit("image"))
-        .when((ct == "") & is_pdf_url(F.col(uri_col)), F.lit("pdf"))
-        .otherwise(F.lit("other"))
-    )
-    return records.withColumn("lane", lane)

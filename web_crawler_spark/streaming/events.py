@@ -1,21 +1,17 @@
-"""§2.8: Structured Streaming twins of the engine's stream-shaped machinery.
+"""§2.8: Structured Streaming twin of the engine's stream-shaped machinery.
 
 The reference is not a streaming system — its "streams" are SSE progress
 pushes (progress-tracker.service.js:100-153) and the stateful crawl loop.
 The north_rule's crawl is our iterative batch driver (plans/crawl.py);
-this module provides the genuine Structured Streaming surface a
-production deployment of the same engine would run for its event firehose:
+this module provides the Structured Streaming surface a production
+deployment of the same engine would run for its event firehose:
 
 - file-source readStream over the events table layout,
-- watermarked tumbling-window rollup (the streaming twin of the batch
-  ``events_hourly_rollup`` query),
-- a custom stateful operator via ``applyInPandasWithState`` (running
-  per-user counters — the streaming analogue of the progress tracker's
-  per-job counters, progress-tracker.service.js:36-55).
+- a custom stateful operator via ``applyInPandasWithState``: the gap
+  sessionizer, the streaming twin of the batch ``sessionize`` query
+  (certified through the ``sessionize_variants`` registry entry).
 
-Scale notes: the windowed aggregate partitions by (window, event_type) —
-Spark's stateful agg store shards across executors; the watermark bounds
-state. The stateful counter partitions by user_id (state store keyed by
+Scale notes: the sessionizer partitions by user_id (state store keyed by
 group), with Arrow-batched pandas state updates.
 """
 
@@ -57,80 +53,6 @@ def stream_events(
     if max_files is not None:
         r = r.option("maxFilesPerTrigger", max_files)
     return r.parquet(path)
-
-
-def hourly_rollup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of the batch events_hourly_rollup: tumbling 1h
-    windows with late-data watermark.
-
-    ``withWatermark`` requires TIMESTAMP (not NTZ); convert the wall-clock
-    NTZ column to an instant deterministically — wall micros re-tagged as a
-    UTC instant via ``timestamp_micros`` — so window boundaries are
-    session-timezone invariant (a plain ``cast('timestamp')`` would shift
-    them by the session offset)."""
-    stream = stream.withColumn(
-        "ts",
-        F.expr(
-            "timestamp_micros(timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts))"
-        ),
-    )
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("hour_start"),
-            "event_type", "n", "sum_value",
-        )
-    )
-
-
-COUNTER_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
-COUNTER_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-
-def _update_counters(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Stateful kernel: accumulate (count, sum(value)) per user across
-    micro-batches — the progress tracker's running totals, distributed."""
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "events": [n], "total_value": [round(total, 2)]}
-    )
-
-
-def user_counters(stream: DataFrame) -> DataFrame:
-    """applyInPandasWithState per user_id; update-mode emissions."""
-    return (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_counters,
-            outputStructType=COUNTER_OUT,
-            stateStructType=COUNTER_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def run_to_memory(
