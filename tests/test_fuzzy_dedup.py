@@ -115,6 +115,21 @@ def test_haversine_against_known_value():
     assert math.isclose(d, 129.6, abs_tol=1.5)
 
 
+def test_footprint_wkt_prints_six_fixed_decimals(spark):
+    # X13: every coordinate prints with exactly six decimals — also within
+    # 0.0001 of zero, where a shortest-form double prints as -5.0E-5
+    from web_crawler_spark.functions.geo import footprint_wkt
+
+    df = spark.createDataFrame([(0.0, 0.00005), (12.5, -80.25)], "lat double, lon double")
+    got = [r[0] for r in df.select(footprint_wkt("lat", "lon")).collect()]
+    assert got == [
+        "MULTIPOLYGON(((-0.000050 -0.000100,0.000150 -0.000100,0.000150 0.000100,"
+        "-0.000050 0.000100,-0.000050 -0.000100)))",
+        "MULTIPOLYGON(((-80.250100 12.499900,-80.249900 12.499900,-80.249900 12.500100,"
+        "-80.250100 12.500100,-80.250100 12.499900)))",
+    ]
+
+
 # ---------------------------------------------------------------------------
 # Independent naive checker: a second, from-scratch restatement of the
 # reference greedy dedup (enhanced-deduplication.service.js:7-42,100-164,

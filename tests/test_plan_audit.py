@@ -191,17 +191,11 @@ def _modules(root: str) -> dict:
     return out
 
 
-def test_every_package_def_is_reachable_from_a_program():
-    # A top-level def, class or constant in the package must be reachable
-    # from a program: package module-level code, a @query-registered
-    # function, or jobs/, tools/, perfbench/, bench.py, __spark_entry__.py.
-    # Name, attribute and import-alias references are followed
-    # transitively; a def only tests call is dead weight (or, for a
-    # reference implementation, belongs in tests/).
+def _reacher(mods: dict):
+    """``reach(todo, seen)``: every package def the AST nodes in ``todo``
+    (``(module, node)`` pairs) reach, following name, attribute and
+    import-alias references transitively, added to ``seen``."""
     import ast
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    mods = _modules(root)
 
     def attr(mod, name, depth=0):
         if mod in mods and depth < 8:
@@ -242,10 +236,6 @@ def test_every_package_def_is_reachable_from_a_program():
                     if hit:
                         yield hit
 
-    def is_query(dec):
-        f = dec.func if isinstance(dec, ast.Call) else dec
-        return isinstance(f, ast.Name) and f.id == "query"
-
     def reach(todo, seen):
         seen = set(seen)
         while todo:
@@ -256,6 +246,32 @@ def test_every_package_def_is_reachable_from_a_program():
                     todo.append((hit[1], mods[hit[1]][1][hit[2]]))
         return seen
 
+    return reach
+
+
+def _query_decorator(node):
+    """The ``@query(...)`` decorator of a top-level def, or None."""
+    import ast
+
+    for dec in getattr(node, "decorator_list", ()):
+        f = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(f, ast.Name) and f.id == "query":
+            return dec
+    return None
+
+
+def test_every_package_def_is_reachable_from_a_program():
+    # A top-level def, class or constant in the package must be reachable
+    # from a program: package module-level code, a @query-registered
+    # function, or jobs/, tools/, perfbench/, bench.py, __spark_entry__.py.
+    # Name, attribute and import-alias references are followed
+    # transitively; a def only tests call is dead weight (or, for a
+    # reference implementation, belongs in tests/).
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mods = _modules(root)
+    reach = _reacher(mods)
     roots, registered = [], set()
     for mod, (tree, defs, _) in mods.items():
         if not mod.startswith("web_crawler_spark"):
@@ -263,7 +279,7 @@ def test_every_package_def_is_reachable_from_a_program():
             continue
         for node in tree.body:
             if node in defs.values():
-                if any(is_query(d) for d in getattr(node, "decorator_list", ())):
+                if _query_decorator(node):
                     roots.append((mod, node))
                     registered.add(("def", mod, node.name))
             elif not isinstance(node, (ast.Import, ast.ImportFrom)) and not (
@@ -284,6 +300,50 @@ def test_every_package_def_is_reachable_from_a_program():
     # the allowlist names only defs that no program reaches
     live = [f"{m}:{n}" for m, n in kept if ("def", m, n) in from_programs]
     assert not live, f"reachable from a program, drop from _PYTEST_ONLY: {live}"
+
+
+def test_coverage_queries_reach_their_implementations():
+    # A COVERAGE.md row whose Query column names a registry query claims
+    # that the query's oracle certifies the row's Implementation. So for
+    # every `path.py:def` the Implementation column names, one of the
+    # named queries must reach that def (unless the Query column labels it
+    # "`def`: pytest"): an arm that restates the def inline certifies a
+    # twin, not the code the pipelines run.
+    import ast
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mods = _modules(root)
+    reach = _reacher(mods)
+    registry = {}
+    for mod, (_, defs, _) in mods.items():
+        for node in defs.values():
+            dec = _query_decorator(node)
+            if dec is not None and isinstance(dec, ast.Call):
+                registry[dec.args[0].value] = (mod, node)
+    reached = {}
+    bad, checked = [], 0
+    with open(os.path.join(root, "COVERAGE.md")) as fh:
+        for line in fh:
+            cells = [c.strip() for c in line.strip().strip("|").split("|")]
+            if not line.startswith("|") or len(cells) < 3:
+                continue
+            named = [q for q in re.findall(r"`(\w+)`", cells[2]) if q in registry]
+            impls = re.findall(r"`([\w/]+)\.py:(\w+)`", cells[1])
+            pytest_only = set(re.findall(r"`(\w+)`: pytest", cells[2]))
+            for path, name in impls if named else ():
+                mod = "web_crawler_spark." + path.replace("/", ".")
+                if name in pytest_only or name not in mods.get(mod, (None, {}))[1]:
+                    continue  # labelled pytest-only, or a method of a class
+                checked += 1
+                for q in named:
+                    if q not in reached:
+                        mod_q, node = registry[q]
+                        reached[q] = reach([registry[q]], {("def", mod_q, node.name)})
+                if not any(("def", mod, name) in reached[q] for q in named):
+                    bad.append(f"{cells[0]}: {named} never reach {path}.py:{name}")
+    assert checked >= 50, checked  # the parse still finds the table rows
+    assert not bad, "\n".join(bad)
 
 
 def _executed_nodes(spark, df) -> list:

@@ -69,3 +69,17 @@ def test_stateful_sessionization_matches_batch(spark, events_dir):
     for uid, n in want_events.items():
         assert got[uid][1] == n, (uid, got[uid], n)
         assert got[uid][0] == want_sessions[uid], (uid, got[uid], want_sessions[uid])
+
+
+def test_sessionize_variants_leaves_no_stream_copy(spark, tmp_path, monkeypatch):
+    # the streaming arm copies events.parquet into a scratch source dir;
+    # the memory sink holds every emitted row once the availableNow run
+    # returns, so the copy must not outlive the call
+    import tempfile
+
+    from web_crawler_spark.analytics import queries as Q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = Q.q_sessionize_variants(spark, "/root/testdata/sf0.001")
+    assert not list(tmp_path.glob("wcs_sess_stream_*"))
+    assert df.filter(F.col("variant") == "streaming").count() > 0

@@ -416,43 +416,26 @@ def q_grid_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching, e.g. BUILDING/HOUSEHOLD) — unioned under a variant tag so
     each slice keeps its independent oracle coverage."""
     cust = load(spark, sf_dir, "customer")
-    fs = (
-        grid.contains_filter(cust, {"c_name": "00001", "c_mktsegment": "a"})
-        .orderBy(F.col("c_acctbal").desc_nulls_last(), F.col("c_custkey"))
-        .limit(50)
-        .select(
-            F.lit("filter_sort").alias("variant"), "c_custkey", "c_name",
-            "c_mktsegment", F.round("c_acctbal", 2).alias("acctbal"),
-        )
-    )
+    S = {"variant": "string", "c_custkey": "bigint", "c_name": "string",
+         "c_mktsegment": "string", "acctbal": "double"}
+    row = dict(c_custkey="c_custkey", c_name="c_name", acctbal=F.round("c_acctbal", 2))
+    fs = grid.contains_filter(cust, {"c_name": "00001", "c_mktsegment": "a"}).orderBy(
+        F.col("c_acctbal").desc_nulls_last(), F.col("c_custkey")
+    ).limit(50)
     pg = grid.paginate(
         grid.sort_view(cust.select("c_custkey", "c_name", "c_acctbal"), "c_name"),
         page=3, size=20,
-    ).select(
-        F.lit("paginate").alias("variant"), "c_custkey", "c_name",
-        F.lit(None).cast("string").alias("c_mktsegment"),
-        F.round("c_acctbal", 2).alias("acctbal"),
     )
-    rg = grid.range_filter(cust, "c_acctbal", "1000-5000").select(
-        F.lit("range").alias("variant"), "c_custkey", "c_name",
-        F.lit(None).cast("string").alias("c_mktsegment"),
-        F.round("c_acctbal", 2).alias("acctbal"),
-    )
-
-    def _ac(tag: str, needle: str) -> DataFrame:
-        return grid.autocomplete(cust, "c_mktsegment", needle, limit=10).select(
-            F.lit(tag).alias("variant"),
-            F.lit(None).cast("long").alias("c_custkey"),
-            F.lit(None).cast("string").alias("c_name"),
-            F.col("suggestion").alias("c_mktsegment"),
-            F.lit(None).cast("double").alias("acctbal"),
-        )
-
-    return (
-        fs.unionByName(pg).unionByName(rg)
-        .unionByName(_ac("autocomplete_a", "a"))
-        .unionByName(_ac("autocomplete_ld", "LD"))
-    )
+    return reduce(DataFrame.unionByName, [
+        _arm(fs, S, "filter_sort", c_mktsegment="c_mktsegment", **row),
+        _arm(pg, S, "paginate", **row),
+        _arm(grid.range_filter(cust, "c_acctbal", "1000-5000"), S, "range", **row),
+        *[
+            _arm(grid.autocomplete(cust, "c_mktsegment", needle, limit=10), S, tag,
+                 c_mktsegment="suggestion")
+            for tag, needle in [("autocomplete_a", "a"), ("autocomplete_ld", "LD")]
+        ],
+    ])
 
 
 # --------------------------------------------------------------------------
@@ -1652,51 +1635,39 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = load(spark, sf_dir, "documents")
-    out = orders
-    for qi, terms in enumerate(_BM25_QUERIES):
-        scored = SIM.bm25_scores(d, terms)
-        # global top-20: orderBy+limit plans as TakeOrderedAndProject
-        # (per-partition top-k, driver merge of 20-row heads) — the
-        # whole scored corpus never moves to one partition; the rank
-        # window then runs over the ≤20 survivors only. The order is
-        # total (score desc, doc_id), so ranks equal the old global
-        # row_number ≤ 20 filter bit-for-bit.
-        wq = Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
-        arm = (
-            scored.orderBy(F.col("bm25").desc(), "doc_id").limit(20)
-            .withColumn("rk", F.row_number().over(wq).cast("long"))
-            .select(
-                F.lit(f"bm25:q{qi}").alias("arm"),
-                F.lit(qi).cast("long").alias("grp"),
-                F.col("doc_id").alias("key"),
-                F.round("bm25", 6).alias("score"),
-                "rk",
-            )
-        )
-        out = out.unionByName(arm)
-    # index-served twins: same queries answered from posting lists
+    # index-served twins (bm25x): same queries answered from posting lists
     # (build_inverted_index → bm25_scores_indexed); candidates are the
     # matching docs only, scores bit-identical to the scan arm's
     postings, tstats, cstats = SIM.build_inverted_index(d)
     cs = cstats.collect()[0]
-    for qi, terms in enumerate(_BM25_QUERIES):
-        scored = SIM.bm25_scores_indexed(
+    scorers = {
+        "bm25": lambda terms: SIM.bm25_scores(d, terms),
+        "bm25x": lambda terms: SIM.bm25_scores_indexed(
             postings, tstats, int(cs["n"]), int(cs["total_len"]), terms
-        )
-        # same TakeOrderedAndProject top-20 shape as the scan arm
-        wq = Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
-        arm = (
-            scored.orderBy(F.col("bm25").desc(), "doc_id").limit(20)
-            .withColumn("rk", F.row_number().over(wq).cast("long"))
-            .select(
-                F.lit(f"bm25x:q{qi}").alias("arm"),
-                F.lit(qi).cast("long").alias("grp"),
-                F.col("doc_id").alias("key"),
-                F.round("bm25", 6).alias("score"),
-                "rk",
+        ),
+    }
+    out = orders
+    for tag, score in scorers.items():
+        for qi, terms in enumerate(_BM25_QUERIES):
+            # global top-20: orderBy+limit plans as TakeOrderedAndProject
+            # (per-partition top-k, driver merge of 20-row heads) — the
+            # whole scored corpus never moves to one partition; the rank
+            # window then runs over the ≤20 survivors only. The order is
+            # total (score desc, doc_id), so ranks equal the old global
+            # row_number ≤ 20 filter bit-for-bit.
+            wq = Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
+            arm = (
+                score(terms).orderBy(F.col("bm25").desc(), "doc_id").limit(20)
+                .withColumn("rk", F.row_number().over(wq).cast("long"))
+                .select(
+                    F.lit(f"{tag}:q{qi}").alias("arm"),
+                    F.lit(qi).cast("long").alias("grp"),
+                    F.col("doc_id").alias("key"),
+                    F.round("bm25", 6).alias("score"),
+                    "rk",
+                )
             )
-        )
-        out = out.unionByName(arm)
+            out = out.unionByName(arm)
     return out
 
 
@@ -1857,13 +1828,18 @@ def q_sessionize_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from web_crawler_spark.streaming import events as SE
 
+    # the memory sink holds every emitted row once run_to_memory returns,
+    # so the copied source is removed before the result is even planned
     src = tempfile.mkdtemp(prefix="wcs_sess_stream_")
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(src, "events.parquet"),
-    )
-    stream = SE.stream_events(spark, src, max_files=None)
-    SE.run_to_memory(SE.sessionize_stream(stream), "wcs_sessionize_stream_q", "update")
+    try:
+        shutil.copy(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(src, "events.parquet"),
+        )
+        stream = SE.stream_events(spark, src, max_files=None)
+        SE.run_to_memory(SE.sessionize_stream(stream), "wcs_sessionize_stream_q", "update")
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
     emitted = spark.sql("SELECT * FROM wcs_sessionize_stream_q")
     # single-batch emissions: one row per session (closed) + one open per
     # user; aggregate to the oracle's per-user shape
@@ -1901,14 +1877,7 @@ def _footprint_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("s_suppkey") * 37 % 16000) / 100.0 - 80.0).alias("lat"),
         ((F.col("s_suppkey") * 73 % 36000) / 100.0 - 180.0).alias("lon"),
     )
-    off = 0.0001
-    lat, lon = F.col("lat"), F.col("lon")
-    wkt = F.format_string(
-        "MULTIPOLYGON(((%.6f %.6f,%.6f %.6f,%.6f %.6f,%.6f %.6f,%.6f %.6f)))",
-        lon - off, lat - off, lon + off, lat - off, lon + off, lat + off,
-        lon - off, lat + off, lon - off, lat - off,
-    )
-    return su.select("s_suppkey", wkt.alias("footprint"))
+    return su.select("s_suppkey", G.footprint_wkt("lat", "lon").alias("footprint"))
 
 
 _PHONE_POSTAL_ORACLE = """
@@ -2893,7 +2862,7 @@ def _chlog_fixture_table(spark, sf_dir, corpus, increment):
     """The chlog arm's INPUT: a snapshot table with the corpus as the
     checkpoint append and the increment as the delta append. Memoized per
     sf_dir — in production this table pre-exists (the producer wrote it);
-    only its synthesis is cached, the incremental scan + sketch dedup
+    only its synthesis is cached, the incremental scan + exact dedup
     still execute on every query evaluation."""
     from web_crawler_spark.lake import SnapshotTable
 
@@ -2954,9 +2923,8 @@ def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``incr``: incremental-ingest dedup (operators/dedup.py:
       dedup_against_corpus) — a synthetic crawl increment (verbatim
       re-crawls of docs % 3 = 0, revised texts of docs % 3 = 1) lands
-      against the standing corpus via the Bloom-sketch + exact-verify
-      path; re-crawls drop, revisions survive. The oracle states the
-      anti-join the sketch path must equal exactly.
+      against the standing corpus via one exact fingerprint anti-join;
+      re-crawls drop, revisions survive.
     - ``chlog``: the same increment, but landed as a snapshot-table
       append and consumed via the Iceberg-style incremental scan
       (lake.read_changes + operators/dedup.py:dedup_table_changes) with
@@ -2964,12 +2932,14 @@ def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       oracle anti-join, so the changelog read is gated too.
     """
     d = load(spark, sf_dir, "documents")
-    allarm = (
-        d.withColumn("fingerprint", TX.fingerprint("text"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("survivor"), F.count(F.lit(1)).alias("n_dups"))
-        .select(F.lit("all").alias("arm"), "fingerprint", "survivor", "n_dups")
-    )
+
+    def groups(arm: str, fingerprinted: DataFrame) -> DataFrame:
+        return (
+            fingerprinted.groupBy("fingerprint")
+            .agg(F.min("doc_id").alias("survivor"), F.count(F.lit(1)).alias("n_dups"))
+            .select(F.lit(arm).alias("arm"), "fingerprint", "survivor", "n_dups")
+        )
+
     recrawl = d.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 10000000).alias("doc_id"), "text"
     )
@@ -2978,18 +2948,6 @@ def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" rev2")).alias("text"),
     )
     increment = recrawl.unionByName(revised)
-    # sketch sized to the corpus (the operator's contract: bits/key set
-    # by the fp rate the verify join should pay for) — the 64-bucket /
-    # 8 MiB default is a 10^10-key shape; at these SFs 8 buckets x 16 KiB
-    # holds <1 bit-per-key collision odds and costs 8 tasks, not 64
-    sketch_kw = dict(n_buckets=8, m_bits=1 << 17)
-    survivors = D.dedup_against_corpus(increment, d, text_col="text",
-                                       **sketch_kw)
-    incr = (
-        survivors.groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("survivor"), F.count(F.lit(1)).alias("n_dups"))
-        .select(F.lit("incr").alias("arm"), "fingerprint", "survivor", "n_dups")
-    )
     # chlog: the same increment landed as a snapshot-table append and
     # consumed through the Iceberg-style incremental scan — corpus append
     # = consumer checkpoint, increment append = the delta manifests;
@@ -2997,14 +2955,11 @@ def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus time-traveled to the checkpoint (operators/dedup.py:
     # dedup_table_changes, lake.py:read_changes)
     tbl, chk = _chlog_fixture_table(spark, sf_dir, d, increment)
-    ch_survivors = D.dedup_table_changes(spark, tbl, chk, text_col="text",
-                                         **sketch_kw)
-    chlog = (
-        ch_survivors.groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("survivor"), F.count(F.lit(1)).alias("n_dups"))
-        .select(F.lit("chlog").alias("arm"), "fingerprint", "survivor", "n_dups")
-    )
-    return allarm.unionByName(incr).unionByName(chlog)
+    return reduce(DataFrame.unionByName, [
+        groups("all", d.withColumn("fingerprint", TX.fingerprint("text"))),
+        groups("incr", D.dedup_against_corpus(increment, d, text_col="text")),
+        groups("chlog", D.dedup_table_changes(spark, tbl, chk, text_col="text")),
+    ])
 
 
 def _minhash_oracle(perms: int = 8, band: int = 2, thr: float = 0.7) -> str:
@@ -3443,48 +3398,21 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idealized exact search. Ranks use the 6-dp-rounded cosine with
     vec_id tiebreak (cross-engine determinism)."""
     e = load(spark, sf_dir, "embeddings")
-    # each side's norm projected once pre-join (bit-identical to the
-    # inline cosine — same IEEE fold order; see operators/similarity.py)
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("_qv"),
-        SIM._l2(F.col("embedding")).alias("_qn"),
-    )
-    c = e.select("vec_id", "embedding", SIM._l2(F.col("embedding")).alias("_cn"))
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            SIM._dot(F.col("_qv"), F.col("embedding")) / (F.col("_qn") * F.col("_cn")), 6
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    brute = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(F.lit("brute").alias("variant"), "query_id", "vec_id", "cosine", "rank")
-    )
-    topk = SIM.lsh_topk(
-        e, e.filter(F.col("vec_id") < 10), k=5, n_bits=8, probe_hamming=1,
-        query_id_col="vec_id",
-    )
-    # rank recomputed on the ROUNDED cosine for cross-engine determinism
-    lsh_scored = topk.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
-    lsh = (
-        lsh_scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(F.lit("lsh").alias("variant"), "query_id", "vec_id", "cosine", "rank")
-    )
-    ivf_raw = SIM.ivf_topk(
-        e, e.filter(F.col("vec_id") < 10), k=5, n_centroids=8, nprobe=2,
-        query_id_col="vec_id",
-    )
-    ivf_scored = ivf_raw.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
-    ivf = (
-        ivf_scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(F.lit("ivf").alias("variant"), "query_id", "vec_id", "cosine", "rank")
-    )
+    q10 = e.filter(F.col("vec_id") < 10)
+
+    def ranked(topk: DataFrame, variant: str) -> DataFrame:
+        # rank recomputed on the ROUNDED cosine for cross-engine determinism
+        return SIM.topk_rank(
+            topk.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine")), 5, "vec_id"
+        ).select(F.lit(variant).alias("variant"), "query_id", "vec_id", "cosine", "rank")
+
+    brute = ranked(SIM.brute_force_topk(e, q10, k=5, query_id_col="vec_id"), "brute")
+    lsh = ranked(SIM.lsh_topk(
+        e, q10, k=5, n_bits=8, probe_hamming=1, query_id_col="vec_id",
+    ), "lsh")
+    ivf = ranked(SIM.ivf_topk(
+        e, q10, k=5, n_centroids=8, nprobe=2, query_id_col="vec_id",
+    ), "ivf")
     # pair_gate: CLIP-score-style image↔caption alignment filter — even
     # vec_ids stand in for image embeddings, the following odd vec_id for
     # the paired caption; keep pairs with cosine ≥ 0.1
@@ -3505,7 +3433,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carries the arm's score (negated approx L2^2, exact integer
     # micro-units under the hood), so rank direction matches the union
     pq = SIM.pq_topk(
-        e, e.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "query_id"),
+        e, q10.withColumnRenamed("vec_id", "query_id"),
         k=5, m=4, n_centroids=8,
     ).select(
         F.lit("pq").alias("variant"), "query_id", "vec_id",
@@ -3516,7 +3444,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then PQ-ADC scores the candidates' RESIDUAL codes (4x8 books
     # re-seeded on the residual table, per-(query, list) LUT)
     ivfadc = SIM.ivfadc_topk(
-        e, e.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "query_id"),
+        e, q10.withColumnRenamed("vec_id", "query_id"),
         k=5, n_centroids=8, nprobe=2, m=4, pq_k=8,
     ).select(
         F.lit("ivfadc").alias("variant"), "query_id", "vec_id",
@@ -4391,16 +4319,12 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     pdfs = docs.mapInPandas(encode, "sourceUrl string, bytes binary")
-    nstr = F.lit(None).cast("string")
-    env = P.extract_pdf_text(pdfs).select(
-        F.lit("envelope").alias("kernel"),
-        "sourceUrl", "pages", "decode_ok",
-        F.lit(None).cast("bigint").alias("ord"),
-        nstr.alias("strategy"), nstr.alias("locationName"),
-        nstr.alias("locationAddress"), nstr.alias("city"),
-        nstr.alias("state"), nstr.alias("postcode"),
-        nstr.alias("countryIso3"),
-    )
+    S = {"kernel": "string", "sourceUrl": "string", "pages": "int",
+         "decode_ok": "boolean", "ord": "bigint", "strategy": "string",
+         "locationName": "string", "locationAddress": "string", "city": "string",
+         "state": "string", "postcode": "string", "countryIso3": "string"}
+    env = _arm(P.extract_pdf_text(pdfs), S, "envelope",
+               sourceUrl="sourceUrl", pages="pages", decode_ok="decode_ok")
 
     variants = F.array(*[
         F.struct(F.lit(v).alias("variant"), F.lit(t).alias("ftext"))
@@ -4420,15 +4344,8 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fpdfs = fdocs.mapInPandas(encode, "sourceUrl string, bytes binary")
     ftexts = P.extract_pdf_text(fpdfs)
-    loc = P.extract_pdf_locations(ftexts).select(
-        F.lit("pdf_locations").alias("kernel"),
-        "sourceUrl",
-        F.lit(None).cast("int").alias("pages"),
-        F.lit(None).cast("boolean").alias("decode_ok"),
-        F.col("ord").cast("bigint").alias("ord"),
-        "strategy", "locationName", "locationAddress",
-        "city", "state", "postcode", "countryIso3",
-    )
+    loc = _arm(P.extract_pdf_locations(ftexts), S, "pdf_locations",
+               **{c: c for c in S if c not in ("kernel", "pages", "decode_ok")})
     return env.unionByName(loc)
 
 
@@ -5404,21 +5321,14 @@ def _robots_txt_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
                  txt.alias("robots_txt"))
     )
     key = F.regexp_extract("host", r"^h(\d+)\.", 1).cast("long")
-    sm = parsed.select(
-        key.alias("k"), F.lit("sitemap").alias("kind"),
-        F.posexplode("sitemaps"),
-    ).select("k", "kind", F.col("col").alias("value"),
-             F.col("pos").cast("long").alias("ord"))
-    dis = parsed.select(
-        key.alias("k"), F.lit("disallow").alias("kind"),
-        F.posexplode("disallow_prefixes"),
-    ).select("k", "kind", F.col("col").alias("value"),
-             F.col("pos").cast("long").alias("ord"))
-    alw = parsed.select(
-        key.alias("k"), F.lit("allow").alias("kind"),
-        F.posexplode("allow_prefixes"),
-    ).select("k", "kind", F.col("col").alias("value"),
-             F.col("pos").cast("long").alias("ord"))
+    lists = [
+        parsed.select(
+            key.alias("k"), F.lit(kind).alias("kind"), F.posexplode(col),
+        ).select("k", "kind", F.col("col").alias("value"),
+                 F.col("pos").cast("long").alias("ord"))
+        for kind, col in [("sitemap", "sitemaps"), ("disallow", "disallow_prefixes"),
+                          ("allow", "allow_prefixes")]
+    ]
     cd = parsed.select(
         key.alias("k"), F.lit("crawl_delay").alias("kind"),
         F.col("crawl_delay_s").cast("string").alias("value"),
@@ -5448,7 +5358,7 @@ def _robots_txt_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("value"),
         F.col("ord").cast("long").alias("ord"),
     )
-    return sm.unionByName(dis).unionByName(alw).unionByName(cd).unionByName(rfc)
+    return reduce(DataFrame.unionByName, lists + [cd, rfc])
 
 
 _MAP_DETECT_ORACLE = r"""

@@ -38,16 +38,18 @@ def haversine_km(lat1, lon1, lat2, lon2) -> Column:
 
 def footprint_wkt(lat, lon, offset: float = FOOTPRINT_OFFSET) -> Column:
     """X13: ~20 m MULTIPOLYGON square around a point, 6-dp coordinates
-    (crawler.service.js:508-540). Pure format_string — no geometry lib."""
+    (crawler.service.js:508-540). Pure format_string — no geometry lib;
+    ``%.6f`` always prints six fixed decimals (never Java's shortest
+    ``Double.toString`` form, which drops trailing zeros and switches
+    to scientific notation near zero)."""
     la, lo = _c(lat), _c(lon)
-    r6 = lambda c: F.round(c, 6)  # noqa: E731
     return F.format_string(
-        "MULTIPOLYGON(((%s %s,%s %s,%s %s,%s %s,%s %s)))",
-        r6(lo - offset), r6(la - offset),
-        r6(lo + offset), r6(la - offset),
-        r6(lo + offset), r6(la + offset),
-        r6(lo - offset), r6(la + offset),
-        r6(lo - offset), r6(la - offset),
+        "MULTIPOLYGON(((%.6f %.6f,%.6f %.6f,%.6f %.6f,%.6f %.6f,%.6f %.6f)))",
+        lo - offset, la - offset,
+        lo + offset, la - offset,
+        lo + offset, la + offset,
+        lo - offset, la + offset,
+        lo - offset, la - offset,
     )
 
 

@@ -14,11 +14,13 @@ Three tiers, as a 100 TB training-data pipeline needs:
   only its probe buckets — the scan prunes instead of reading 100 TB.
 
 All math is higher-order-function column algebra (zip_with/aggregate) —
-JVM-side, Arrow-free, no UDF. Each side's L2 norm is projected ONCE
-before the pair join (``_with_norm``), so per-pair work is a single dot
-fold instead of three array passes — numerically bit-identical to the
-inline form (same IEEE op order), 3× less per-pair compute and a ~3×
-smaller expression tree for Catalyst to analyze/compile.
+JVM-side, Arrow-free, no UDF. ``_dot``/``_l2`` are the engine's one
+cosine fold (the near-dup operators in operators/dedup.py use them too).
+Each side's L2 norm is projected ONCE before the pair join (``_l2``), so
+per-pair work is a single dot fold (``_cosine``) instead of three array
+passes — numerically bit-identical to the inline form (same IEEE op
+order), 3× less per-pair compute and a ~3× smaller expression tree for
+Catalyst to analyze/compile. Every top-k tier ends in ``topk_rank``.
 """
 
 from __future__ import annotations
@@ -57,6 +59,20 @@ def _l2(a: Column) -> Column:
     )
 
 
+def _cosine(av: Column | str, an: Column | str, bv: Column | str, bn: Column | str) -> Column:
+    """Cosine of two vectors from their :func:`_l2` norms, projected once
+    per row before the pair join: one :func:`_dot` fold per pair."""
+    c = lambda x: F.col(x) if isinstance(x, str) else x  # noqa: E731
+    return _dot(c(av), c(bv)) / (c(an) * c(bn))
+
+
+def topk_rank(scored: DataFrame, k: int, id_col: str, score_col: str = "cosine") -> DataFrame:
+    """The per-query top-k every ANN tier ends with: ``rank`` =
+    row_number over (score desc, id asc) within ``query_id``, kept ≤ k."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score_col).desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -81,15 +97,9 @@ def brute_force_topk(
         _l2(F.col(vec_col)).alias("_cn"),
     )
     scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        id_col,
-        (_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("cosine"),
+        "query_id", id_col, _cosine("_qv", "_qn", "_cv", "_cn").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk_rank(scored, k, id_col)
 
 
 def pair_cosine_gate(
@@ -122,9 +132,7 @@ def pair_cosine_gate(
     )
     scored = a.join(b, "pair_id").select(
         "pair_id",
-        F.round(
-            _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn")), 6
-        ).alias("cosine"),
+        F.round(_cosine("_av", "_an", "_bv", "_bn"), 6).alias("cosine"),
     )
     if keep_all:
         return scored.withColumn("pair_keep", F.col("cosine") >= threshold)
@@ -194,14 +202,11 @@ def lsh_topk(
         ).alias("bucket"),
     )
     scored = c.join(F.broadcast(q), "bucket").select(
-        "query_id",
-        id_col,
-        (_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("cosine"),
+        "query_id", id_col, _cosine("_qv", "_qn", "_cv", "_cn").alias("cosine")
     )
     # a corpus vector can match several probe buckets of one query → dedup
     scored = scored.groupBy("query_id", id_col).agg(F.max("cosine").alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return topk_rank(scored, k, id_col)
 
 
 def ivf_codebook(
@@ -256,7 +261,7 @@ def _cb_scored(vcol: Column, norm_col: Column) -> Column:
     return F.transform(
         F.col("_cb"),
         lambda ent: F.struct(
-            (-F.round(_dot(vcol, ent["ce"]) / (norm_col * ent["cn"]), 6)).alias("d"),
+            (-F.round(_cosine(vcol, norm_col, ent["ce"], ent["cn"]), 6)).alias("d"),
             ent["i"].alias("i"),
         ),
     )
@@ -407,12 +412,9 @@ def ivf_topk(
     )
     # each corpus vector lives in exactly one list → no per-pair dedup
     scored = c.join(F.broadcast(q), "list_id").select(
-        "query_id",
-        id_col,
-        (_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("cosine"),
+        "query_id", id_col, _cosine("_qv", "_qn", "_cv", "_cn").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return topk_rank(scored, k, id_col)
 
 
 # ------------------------------------------------------ text relevance -----
@@ -599,6 +601,46 @@ def _l2sq_micro(a: Column, b: Column) -> Column:
     return F.floor(d * F.lit(1000000.0) + F.lit(0.5)).cast("long")
 
 
+def _sub_l2sq(v: Column, s: Column, ent: Column) -> Column:
+    """Micro-unit L2² from subspace ``s`` of ``v`` to codebook entry ``ent``."""
+    n = F.size(ent["ce"])
+    return _l2sq_micro(F.slice(v, s * n + 1, n), ent["ce"])
+
+
+def _pq_nearest(v: Column, field: str) -> Column:
+    """Per subspace, ``field`` ('j' index or 'd' distance) of the nearest
+    ``_pcb`` entry to ``v`` (ties to the lower index)."""
+    return F.transform(
+        F.col("_pcb"),
+        lambda cbs, s: F.array_min(
+            F.transform(
+                cbs, lambda ent: F.struct(_sub_l2sq(v, s, ent).alias("d"), ent["j"].alias("j"))
+            )
+        )[field],
+    )
+
+
+def _adc_lut(v: Column) -> Column:
+    """The [m][k] ADC lookup table of ``v``: micro-unit L2² from each of
+    its subvectors to every entry of its subspace's codebook."""
+    return F.transform(
+        F.col("_pcb"), lambda cbs, s: F.transform(cbs, lambda ent: _sub_l2sq(v, s, ent))
+    )
+
+
+def _adc_score(m: int) -> Column:
+    """score = −(Σ_s LUT[s][code[s]]) / 1e6: m table lookups summed in
+    fixed subspace order — an exact integer before the scale."""
+    adist = None
+    for s in range(m):
+        term = F.element_at(
+            F.element_at(F.col("_lut"), s + 1),
+            F.element_at(F.col("pq_code"), s + 1) + 1,
+        )
+        adist = term if adist is None else adist + term
+    return (-(adist.cast("double") / F.lit(1000000.0))).alias("score")
+
+
 def pq_codebooks(
     corpus: DataFrame,
     m: int = 4,
@@ -705,42 +747,10 @@ def pq_topk(
             F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qv")
         )
         .join(F.broadcast(cb))
-        .select(
-            "query_id",
-            F.transform(
-                F.col("_pcb"),
-                lambda cbs, s: F.transform(
-                    cbs,
-                    lambda ent: _l2sq_micro(
-                        F.slice(
-                            F.col("_qv"),
-                            s * F.size(ent["ce"]) + 1,
-                            F.size(ent["ce"]),
-                        ),
-                        ent["ce"],
-                    ),
-                ),
-            ).alias("_lut"),
-        )
+        .select("query_id", _adc_lut(F.col("_qv")).alias("_lut"))
     )
-    adist = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("_lut"), s + 1),
-            F.element_at(F.col("pq_code"), s + 1) + 1,
-        )
-        adist = term if adist is None else adist + term
-    scored = enc.join(F.broadcast(q)).select(
-        "query_id",
-        id_col,
-        (-(adist.cast("double") / F.lit(1000000.0))).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    scored = enc.join(F.broadcast(q)).select("query_id", id_col, _adc_score(m))
+    return topk_rank(scored, k, id_col, "score")
 
 
 def _pq_assign(
@@ -762,25 +772,7 @@ def _pq_assign(
             F.col(id_col),
             *[F.col(c) for c in keep],
             "_v",
-            F.transform(
-                F.col("_pcb"),
-                lambda cbs, s: F.array_min(
-                    F.transform(
-                        cbs,
-                        lambda ent: F.struct(
-                            _l2sq_micro(
-                                F.slice(
-                                    F.col("_v"),
-                                    s * F.size(ent["ce"]) + 1,
-                                    F.size(ent["ce"]),
-                                ),
-                                ent["ce"],
-                            ).alias("d"),
-                            ent["j"].alias("j"),
-                        ),
-                    )
-                )["j"],
-            ).alias("pq_code"),
+            _pq_nearest(F.col("_v"), "j").alias("pq_code"),
         )
     )
 
@@ -799,25 +791,7 @@ def pq_distortion(
         .join(F.broadcast(codebooks))
         .select(
             F.aggregate(
-                F.transform(
-                    F.col("_pcb"),
-                    lambda cbs, s: F.array_min(
-                        F.transform(
-                            cbs,
-                            lambda ent: F.struct(
-                                _l2sq_micro(
-                                    F.slice(
-                                        F.col("_v"),
-                                        s * F.size(ent["ce"]) + 1,
-                                        F.size(ent["ce"]),
-                                    ),
-                                    ent["ce"],
-                                ).alias("d"),
-                                ent["j"].alias("j"),
-                            ),
-                        )
-                    )["d"],
-                ),
+                _pq_nearest(F.col("_v"), "d"),
                 F.lit(0).cast("long"),
                 lambda acc, d: acc + d,
             ).alias("_tot")
@@ -1014,42 +988,9 @@ def ivfadc_topk(
             ).alias("_qr"),
         )
         .join(F.broadcast(pcb))
-        .select(
-            "query_id",
-            "list_id",
-            F.transform(
-                F.col("_pcb"),
-                lambda cbs, s: F.transform(
-                    cbs,
-                    lambda ent: _l2sq_micro(
-                        F.slice(
-                            F.col("_qr"),
-                            s * F.size(ent["ce"]) + 1,
-                            F.size(ent["ce"]),
-                        ),
-                        ent["ce"],
-                    ),
-                ),
-            ).alias("_lut"),
-        )
+        .select("query_id", "list_id", _adc_lut(F.col("_qr")).alias("_lut"))
     )
-    adist = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("_lut"), s + 1),
-            F.element_at(F.col("pq_code"), s + 1) + 1,
-        )
-        adist = term if adist is None else adist + term
     # a corpus vector lives in exactly one list → the equi-join IS the
     # candidate pruning, and no per-pair dedup is needed.
-    scored = enc.join(F.broadcast(q), "list_id").select(
-        "query_id",
-        id_col,
-        (-(adist.cast("double") / F.lit(1000000.0))).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    scored = enc.join(F.broadcast(q), "list_id").select("query_id", id_col, _adc_score(m))
+    return topk_rank(scored, k, id_col, "score")

@@ -40,26 +40,31 @@ from pyspark.sql import functions as F
 from web_crawler_spark.functions import text as TX
 from web_crawler_spark.operators import dedup as D
 
+# Stage settings no caller varies, fixed at the values every release used.
+MAX_TOP2_FRAC = 0.2  # Gopher: top duplicate 2-gram's share of the characters
+PACK_BUCKETS = 8  # sequence-packing parallelism (md5 buckets)
+PARA_MODE = "boilerplate"  # paragraph_dedup survivor policy
+LM_KEEP_TIERS = ("head", "middle")  # CCNet keeps head + middle tertiles
+MAX_HAMMING = 8  # phash near-dup / decontamination radius
+BATCH_SIZE = 8  # aspect-bucket batch size
+N_WRITERS = 8  # WebDataset shard writers
+LANG_MIX_ALPHA = (1, 2)  # temperature-sampling exponent alpha = 1/2 (n^alpha)
 
 def build_text_corpus(
     docs: DataFrame,
     eval_docs: DataFrame | None = None,
     allowed_langs: tuple[str, ...] = ("en",),
     min_quality: int = 70,
-    max_top2_frac: float = 0.2,
     mix_rates: dict[str, float] | None = None,
     default_mix_rate: float = 1.0,
     pack_capacity: int = 512,
-    pack_buckets: int = 8,
     line_clean: bool = True,
     dsir_target=None,
     para_min_df: int | None = None,
-    para_mode: str = "boilerplate",
     gopher_min_words: int | None = None,
     gopher_min_stop: int = 2,
     c4_span_window: int | None = None,
     lm_target=None,
-    lm_keep_tiers: tuple[str, ...] = ("head", "middle"),
     unimax_budget: int | None = None,
     unimax_epochs: int = 1,
     learn_bpe: int | None = None,
@@ -82,8 +87,8 @@ def build_text_corpus(
 
     ``lm_target`` (a boolean Column, e.g. the labeled in-domain rows)
     enables the CCNet LM-quality stage: documents are scored by the
-    target-trained fixed-point unigram LM and only the ``lm_keep_tiers``
-    tertiles survive (CCNet keeps head+middle). ``unimax_budget``
+    target-trained fixed-point unigram LM and only the
+    ``LM_KEEP_TIERS`` tertiles survive (CCNet keeps head+middle). ``unimax_budget``
     switches mixing from per-stratum rates to UniMax epoch-capped
     allocation over ``lang`` (docs with ≥ 1 copy survive; the copy count
     rides along as ``unimax_copies``). ``learn_bpe`` = n merges: train a
@@ -93,13 +98,13 @@ def build_text_corpus(
     ``para_min_df`` (CCNet ordering: cross-document paragraph dedup runs
     FIRST, before any per-document gate) rewrites each doc's text through
     operators/dedup.py:paragraph_dedup at that document-frequency
-    threshold with the ``para_mode`` survivor policy; docs whose every
+    threshold with the ``PARA_MODE`` survivor policy; docs whose every
     paragraph was boilerplate drop here. The reassembled text joins back
     on doc_id to recover the metadata columns (one co-keyed join)."""
     if para_min_df is not None:
         cleaned = (
             D.paragraph_dedup(
-                docs, "doc_id", "text", min_df=para_min_df, mode=para_mode
+                docs, "doc_id", "text", min_df=para_min_df, mode=PARA_MODE
             )
             .filter(F.col("clean_text") != "")
             .select("doc_id", "clean_text")
@@ -149,7 +154,7 @@ def build_text_corpus(
             (r2.getField("top_n") * r2.getField("top_len")).cast("double")
             / F.greatest(norm_len, F.lit(1)),
         )
-        .filter(F.col("_top2") <= max_top2_frac)
+        .filter(F.col("_top2") <= MAX_TOP2_FRAC)
     )
 
     if gopher_min_words is not None:
@@ -197,7 +202,7 @@ def build_text_corpus(
             deduped, target=lm_target, text_col="text_redacted"
         )
         deduped = deduped.join(
-            tiers.filter(F.col("tier").isin(*lm_keep_tiers)).select("doc_id"),
+            tiers.filter(F.col("tier").isin(*LM_KEEP_TIERS)).select("doc_id"),
             "doc_id", "left_semi",
         )
 
@@ -263,7 +268,7 @@ def build_text_corpus(
             "_pk",
             TX.pack_bins(
                 F.col("n_tokens"), pack_key,
-                n_buckets=pack_buckets, capacity=pack_capacity,
+                n_buckets=PACK_BUCKETS, capacity=pack_capacity,
             ),
         )
         .select(
@@ -294,13 +299,9 @@ def build_pair_corpus(
     model_scores: DataFrame | None = None,
     caption_lang: str | None = None,
     align_threshold: float = 0.1,
-    max_hamming: int = 8,
-    batch_size: int = 8,
     shard_bytes: int = 4 * 1024 * 1024,
-    n_writers: int = 8,
     elect_caption: bool = False,
     lang_mix_budget: int | None = None,
-    lang_mix_alpha: tuple[int, int] = (1, 2),
 ) -> DataFrame:
     """Image+caption pairs (input_hint schema) → training-ready release.
 
@@ -355,7 +356,7 @@ def build_pair_corpus(
         annotated = caption_quality(kept)
         kept = temperature_sample(
             annotated, stratum="cap_lang", key="image_id",
-            budget=lang_mix_budget, alpha=lang_mix_alpha, salt="pairmix",
+            budget=lang_mix_budget, alpha=LANG_MIX_ALPHA, salt="pairmix",
         ).drop(
             "cap_n_chars", "cap_n_tokens", "cap_alpha_ok", "cap_has_url",
             "cap_keep", "temp_bucket", "temp_alloc",
@@ -369,7 +370,7 @@ def build_pair_corpus(
             .drop("keep", "reject_reason", "nsfw_p", "aesthetic", "watermark_p")
         )
     kept = D.dedup_exact_text(kept, text_col="caption", order="image_id")
-    dup = phash_neardup_pairs(kept, "image_id", "phash", max_hamming=max_hamming)
+    dup = phash_neardup_pairs(kept, "image_id", "phash", max_hamming=MAX_HAMMING)
     if elect_caption:
         # near-dup collapse WITH caption election (images.elect_captions):
         # the survivor keeps the cluster's best caption (longest, ties
@@ -401,7 +402,7 @@ def build_pair_corpus(
         # phash sits within the near-dup radius of an eval image leaks the
         # benchmark — drop it (cross-set pigeonhole probe, never all-pairs)
         dirty = phash_crossdup_ids(
-            kept, eval_pairs.select("image_id", "phash"), max_hamming=max_hamming
+            kept, eval_pairs.select("image_id", "phash"), max_hamming=MAX_HAMMING
         )
         kept = kept.join(dirty, "image_id", "left_anti")
 
@@ -413,7 +414,7 @@ def build_pair_corpus(
         ).select(F.col("pair_id").alias("image_id"))
         kept = kept.join(aligned, "image_id")
 
-    kept = aspect_bucket(kept, batch_size=batch_size)
+    kept = aspect_bucket(kept, batch_size=BATCH_SIZE)
     size_guess = (  # metadata-only inputs carry no payload column
         F.length("bytes") if "bytes" in kept.columns
         else F.col("w").cast("long") * F.col("h") * 3
@@ -422,5 +423,5 @@ def build_pair_corpus(
         + F.coalesce(F.length("caption"), F.lit(0))
     return shard_pack(
         kept.withColumn("_eb", est.cast("long")), "_eb",
-        n_writers=n_writers, shard_bytes=shard_bytes,
+        n_writers=N_WRITERS, shard_bytes=shard_bytes,
     ).drop("_eb")
