@@ -65,11 +65,11 @@ def main() -> None:
                          "shard_key column)")
     args = ap.parse_args()
 
+    from web_crawler_spark.session import ENGINE_CONF
+
     spark = (
         SparkSession.builder.appName(f"wcs_corpus_{args.mode}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

@@ -35,12 +35,12 @@ def main() -> None:
     ap.add_argument("--salt-partitions", type=int, default=None)
     args = ap.parse_args()
 
+    from web_crawler_spark.session import ENGINE_CONF
+
     # spark-submit owns master/deploy config; we only set engine-level conf
     spark = (
         SparkSession.builder.appName("wcs_crawl_job")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

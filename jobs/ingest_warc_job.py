@@ -4,8 +4,8 @@ jobs/ingest_warc_job.py
 Replays a Common-Crawl-style .warc.gz archive into the pair lake — the
 "crawl already happened" twin of jobs/crawl_job.py. One binaryFile +
 per-member-gunzip scan (sources/warc.py:read_warc_gz_binary), persisted
-and counted once, fans out by media type, so both lanes read the cached
-members and the archive is gunzipped once:
+once, fans out by media type, so both lanes read the cached members and
+the archive is gunzipped once:
 
 - text/html 2xx responses: the binary-safe HTTP parse
   (http_response_binary) yields the entity, which decodes to HTML and
@@ -20,7 +20,8 @@ The join on the image URL marries markup captions to image bytes; one
 pass-through decode + phash mapInPandas (images.with_phash) then appends
 each pair's phash, so each host's row keeps the hash of its own bytes.
 The pair table is persisted once, counted per host (the snapshot's
-lineage), and appended from the cache: input_hint-shaped rows
+lineage) in the one action that also counts the archive records, and
+appended from the cache: input_hint-shaped rows
 (image_id, bytes, w, h, fmt, caption, phash) in a SnapshotTable
 partitioned by host, with per-host lineage and ingest metrics in the
 snapshot summary.
@@ -166,19 +167,26 @@ def ingest(spark: SparkSession, archive_dir: str, out_dir: str) -> dict:
     )
 
     # each Python-worker pass runs once: gunzip fills the member scan's
-    # cache, which both lanes read; decode + phash fill the pair table's
-    # cache, which the per-host count and the append read. The pair table
-    # is persisted after the member scan, so its cached plan reads that
-    # cache. The per-host count is the append's lineage, so the append
-    # reads nothing back from its files
+    # cache, which both lanes and the record count read; decode + phash
+    # fill the pair table's cache, which the per-host count and the append
+    # read. The pair table is persisted after the member scan, so its
+    # cached plan reads that cache. The per-host count is the append's
+    # lineage, so the append reads nothing back from its files
     tbl = SnapshotTable(out_dir)
     recs = recs.persist()
     out = out.persist()
     try:
-        n_records = recs.count()
+        # one action counts both: the pairs per host, and the archive
+        # records under a NULL host, which no pair has (seed_host is a
+        # regexp_extract, never NULL)
+        counts = out.groupBy("seed_host").count().unionByName(
+            recs.agg(F.lit(None).cast("string").alias("seed_host"),
+                     F.count(F.lit(1)).alias("count"))
+        ).collect()
+        n_records = next(r["count"] for r in counts if r["seed_host"] is None)
         lineage = {
             str(r["seed_host"]): r["count"]
-            for r in out.groupBy("seed_host").count().collect()
+            for r in counts if r["seed_host"] is not None
         }
         n_pairs = sum(lineage.values())
         tbl.append(
@@ -208,7 +216,9 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=8)
     args = ap.parse_args()
 
-    spark = SparkSession.builder.getOrCreate()
+    from web_crawler_spark.session import ENGINE_CONF
+
+    spark = SparkSession.builder.config(map=ENGINE_CONF).getOrCreate()
     metrics: dict = {}
     if args.synthesize:
         metrics["synthesized_records"] = synthesize_archive(

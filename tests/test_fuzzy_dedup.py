@@ -221,6 +221,64 @@ def test_naive_checker_agrees_on_randomized_sets():
         assert _kernel_clusters(rows) == _naive_greedy_clusters(rows), seed
 
 
+def _pandas_shaped_rows(seed: int):
+    """Rows the way ``fuzzy_dedup`` feeds them to the kernel: through
+    ``pd.DataFrame(...).to_dict("records")``, so a missing double is NaN,
+    not None. The sets plant NaN coordinates, rows with only one of
+    latitude and longitude, ``""`` names, addresses and postcodes, and
+    pairs that sit exactly on the 0.85 threshold: a 20-character name
+    three edits from its twin (name the only shared component), and a
+    16-character address three edits away with the same postcode."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(1000 + seed)
+    rows = _random_rows(seed)[:14]
+    for r in rows:
+        roll = rng.random()
+        if roll < 0.2:
+            r["latitude"] = r["longitude"] = float("nan")
+        elif roll < 0.3:
+            r["latitude"] = None
+        elif roll < 0.4:
+            r["longitude"] = float("nan")
+        for k in ("locationName", "locationAddress", "postcode"):
+            if rng.random() < 0.15:
+                r[k] = ""
+    name = "Abcdefghij Klmnopqrs"  # 20 chars; 3 edits -> ratio 0.85
+    addr = "Abcdefgh Ijklmno"  # 16 chars; 3 edits -> 0.8125, +postcode -> 0.85
+    for k in range(3):
+        rows.append(_rec("h.com", name, "", None, None, "",
+                         f"https://h.com/{seed}/n{k}", q=k))
+        rows.append(_rec("h.com", name[:-3] + "xyz", None, float("nan"), None, None,
+                         f"https://h.com/{seed}/n{k}x", q=k))
+        rows.append(_rec("h.com", "", addr, None, float("nan"), "19 001",
+                         f"https://h.com/{seed}/a{k}", q=k))
+        rows.append(_rec("h.com", None, addr[:-3] + "xyz", float("nan"), float("nan"),
+                         "19001", f"https://h.com/{seed}/a{k}x", q=k))
+    rng.shuffle(rows)
+    return pd.DataFrame(rows).to_dict("records")
+
+
+def test_naive_checker_agrees_on_pandas_shaped_rows():
+    boundary = 0
+    for seed in range(12):
+        rows = _pandas_shaped_rows(seed)
+        assert any(isinstance(r["latitude"], float) and math.isnan(r["latitude"])
+                   for r in rows)
+        boundary += sum(
+            1 for a in rows for b in rows
+            if a is not b and abs(_naive_similarity(a, b) - 0.85) < 1e-9
+        )
+        assert _kernel_clusters(rows) == _naive_greedy_clusters(rows), seed
+        want = FZ.fuzzy_cluster_merge(rows, 0.85)
+        got = [naive_merge_cluster([rows[k] for k in members])
+               for members in _naive_greedy_clusters(rows)]
+        assert repr(got) == repr(want), seed
+    assert boundary > 0
+
+
 def test_naive_blocked_dedup_matches_production_merge():
     # end-to-end: blocked + ordered + merged rows agree with the
     # production pure-Python kernel on randomized inputs

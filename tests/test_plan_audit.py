@@ -442,3 +442,61 @@ def test_heavy_queries_keep_wholestage_codegen(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert not missing, f"no WholeStageCodegen span in: {missing}"
+
+
+def _py4j_round_trips(build) -> int:
+    """py4j commands the driver sends the JVM while ``build()`` runs."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    sent = [0]
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    return sent[0]
+
+
+def test_plan_construction_round_trip_budget(spark):
+    # building a plan, without collecting it, is driver work that grows
+    # with the number of Column calls, not with the data: the sessions run
+    # without PySpark's per-call origin capture, and the builders make
+    # each column once
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from web_crawler_spark.analytics.queries import _e2e_pages
+    from web_crawler_spark.images import synthesize_images
+    from web_crawler_spark.plans.corpus import build_pair_corpus
+    from web_crawler_spark.plans.enrich import records_pipeline
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    pages = _e2e_pages(spark)
+    pairs = synthesize_images(spark, 40)
+    # half of what the same builds took with origin capture on and the
+    # envelope and bucket literal built column by column (13,562 and
+    # 3,748 round trips); they now take about 4,900 and 1,400
+    assert _py4j_round_trips(lambda: records_pipeline(pages)) <= 6_781
+    assert _py4j_round_trips(lambda: build_pair_corpus(pairs)) <= 1_874
+
+
+def test_registry_queries_leave_no_scratch_dirs(spark, tmp_path, monkeypatch):
+    # each of these queries writes a crawl, a sink or an archive under a
+    # new temp dir; the rows they return are materialized first, so the
+    # dir must not outlive the call
+    import tempfile
+
+    from web_crawler_spark.analytics import queries as Q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for q in (Q.q_crawl_bfs, Q.q_crawl_progress, Q.q_sink_roundtrips,
+              Q.q_archive_ingest):
+        df = q(spark, SF_DIR)
+        assert not list(tmp_path.iterdir()), q.__name__
+        assert df.count() > 0, q.__name__

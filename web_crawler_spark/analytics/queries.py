@@ -2868,9 +2868,14 @@ def _chlog_fixture_table(spark, sf_dir, corpus, increment):
 
     hit = _CHLOG_TABLES.get(sf_dir)
     if hit is None:
+        import atexit
+        import shutil
         import tempfile
 
-        tbl = SnapshotTable(tempfile.mkdtemp(prefix="wcs_chlog_"))
+        # the memo outlives every query that reads it: removed at exit
+        path = tempfile.mkdtemp(prefix="wcs_chlog_")
+        atexit.register(shutil.rmtree, path, True)
+        tbl = SnapshotTable(path)
         chk = tbl.append(corpus.select("doc_id", "text"))["snapshot_id"]
         tbl.append(increment)
         hit = _CHLOG_TABLES[sf_dir] = (tbl, chk)
@@ -3593,6 +3598,7 @@ def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: VALUES literal generated from the INDEPENDENT Python oracle
     (web_crawler_spark/oracle.py via tools/pin_oracles.py) — a genuine
     cross-implementation check of order, depth, and seen-set."""
+    import shutil
     import tempfile
 
     from web_crawler_spark.plans.crawl import CrawlConfig, CrawlDriver
@@ -3600,7 +3606,8 @@ def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     web = SyntheticWeb(n_hosts=3, pages_per_host=25, seed=42)
     cfg = CrawlConfig(max_pages=12, max_depth=3)
-    driver = CrawlDriver(spark, web, tempfile.mkdtemp(prefix="wcs_q_"), cfg)
+    workdir = tempfile.mkdtemp(prefix="wcs_q_")
+    driver = CrawlDriver(spark, web, workdir, cfg)
     # workload-aware shuffle sizing: per-wave frontier state here is a few
     # hundred rows — 32 shuffle partitions is pure scheduling overhead.
     # (Production frontiers size this from the frontier table's bucket
@@ -3609,9 +3616,13 @@ def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         driver.run(max_waves=20)
+        # the visit order is materialized before its crawl tables go
+        order = driver.visit_order().select(
+            "seed_host", "url", "depth", "visit_seq", "status")
+        return local_df(spark, order.collect(), order.schema)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return driver.visit_order().select("seed_host", "url", "depth", "visit_seq", "status")
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @query("crawl_progress")
@@ -3623,6 +3634,7 @@ def q_crawl_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame — one row per wave with pages fetched, candidate links,
     dedup drops, and new URLs. Deterministic fixture; golden-pinned
     oracle (tools/pin_oracles.py)."""
+    import shutil
     import tempfile
 
     from web_crawler_spark.plans.crawl import CrawlConfig, CrawlDriver
@@ -3631,25 +3643,27 @@ def q_crawl_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     web = SyntheticWeb(n_hosts=3, pages_per_host=25, seed=42)
     cfg = CrawlConfig(max_pages=12, max_depth=3,
                       keep_snapshots=1000, compact_every=1000)
-    driver = CrawlDriver(spark, web, tempfile.mkdtemp(prefix="wcs_prog_"), cfg)
+    workdir = tempfile.mkdtemp(prefix="wcs_prog_")
+    driver = CrawlDriver(spark, web, workdir, cfg)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         driver.run(max_waves=20)
+        rows = [
+            (
+                s["summary"]["wave"],
+                s["summary"].get("pages_fetched", 0),
+                s["summary"].get("candidates", 0),
+                s["summary"].get("deduped_out", 0),
+                s["summary"].get("new_urls", 0),
+                sum(s["summary"].get("visited_n", {}).values()),
+            )
+            for s in driver.delta_tbl.snapshots()
+            if "pages_fetched" in s.get("summary", {})
+        ]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    rows = [
-        (
-            s["summary"]["wave"],
-            s["summary"].get("pages_fetched", 0),
-            s["summary"].get("candidates", 0),
-            s["summary"].get("deduped_out", 0),
-            s["summary"].get("new_urls", 0),
-            sum(s["summary"].get("visited_n", {}).values()),
-        )
-        for s in driver.delta_tbl.snapshots()
-        if "pages_fetched" in s.get("summary", {})
-    ]
+        shutil.rmtree(workdir, ignore_errors=True)
     return local_df(
         spark,
         rows,
@@ -4512,166 +4526,173 @@ def q_sink_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
       all-true integrity column, so corruption, loss, or double-packing
       breaks the hash.
     """
+    import shutil
     import tempfile
 
     from web_crawler_spark import serving as SV
     from web_crawler_spark.sources import bulk as BK
 
-    cust = load(spark, sf_dir, "customer")
+    scratch = tempfile.mkdtemp(prefix="wcs_sinkrt_")
+    try:
+        cust = load(spark, sf_dir, "customer")
 
-    # ---- csv (S9) ----
-    c = cust.filter(F.col("c_custkey") < 100).select(
-        "c_custkey",
-        F.concat("c_name", F.lit(', has "quoted, commas"')).alias("note"),
-    )
-    out = tempfile.mkdtemp(prefix="wcs_sinkrt_") + "/export"
-    BK.export_csv(c, out, columns=["c_custkey", "note"])
-    back = (
-        spark.read.option("header", True)
-        .option("quote", '"')
-        .option("escape", '"')
-        .csv(out)
-    )
-    csv_arm = back.select(
-        F.lit("csv").alias("variant"),
-        F.lit("export").alias("sheet"),
-        F.col("c_custkey").cast("long").alias("rn"),
-        F.lit("note").alias("col"),
-        F.col("note").alias("val"),
-    )
-
-    # ---- xlsx (S10) ----
-    results = cust.filter(F.col("c_custkey") <= 30).select(
-        F.col("c_name").alias("companyName"),
-        F.concat(F.lit("https://c"), "c_custkey", F.lit(".example.com")).alias("url"),
-        F.when(F.col("c_custkey") % 4 == 0, F.lit("failed"))
-        .otherwise(F.lit("success"))
-        .alias("status"),
-        (F.col("c_custkey") % 7).alias("locationsCount"),
-        ((F.col("c_custkey") * 13) % 101).alias("qualityScore"),
-    )
-    xlsx_path = tempfile.mkdtemp(prefix="wcs_sinkrt_") + "/report.xlsx"
-    BK.write_excel_report(results, xlsx_path, force_stdlib=True)
-    xlsx_arm = local_df(
-        spark,
-        [("xlsx", s, rn, col, val) for (s, rn, col, val) in BK.read_xlsx_grid(xlsx_path)],
-        "variant string, sheet string, rn bigint, col string, val string",
-    )
-
-    # ---- envelope (S11 + X30) ----
-    env_src = (
-        cust.filter(F.col("c_custkey").between(1, 5))
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
-    env = SV.json_response(
-        env_src,
-        ["https://a.example", "https://b.example"],
-        mode="single",
-        cached=False,
-        run_ts="2024-01-01T00:00:00Z",
-    )
-    env_rows = [
-        ("envelope", "meta", 0, "success", str(env["success"]).lower()),
-        ("envelope", "meta", 0, "totalRecords", str(env["totalRecords"])),
-        ("envelope", "meta", 0, "cached", str(env["cached"]).lower()),
-        ("envelope", "meta", 0, "mode", env["mode"]),
-        ("envelope", "meta", 0, "jobId", env["jobId"]),
-        ("envelope", "meta", 0, "crawledAt", env["crawledAt"]),
-    ]
-    for i, rec in enumerate(env["data"]):
-        env_rows.append(("envelope", "data", i, "c_custkey", str(rec["c_custkey"])))
-        env_rows.append(("envelope", "data", i, "c_name", rec["c_name"]))
-
-    # ---- cache (S12) ----
-    cache = SV.ResultCache(tempfile.mkdtemp(prefix="wcs_sinkrt_cache_"))
-    curls = ["https://cache.example"]
-    put_df = cust.filter(F.col("c_custkey") <= 25).select("c_custkey", "c_name")
-    first = cache.get(spark, curls, "single")
-    cache.put(put_df, curls, "single")
-    hit = cache.get(spark, curls, "single")
-    site = cache.get(spark, curls, "site")
-    equal = (
-        hit is not None
-        and hit.exceptAll(put_df).count() == 0
-        and put_df.exceptAll(hit).count() == 0
-    )
-    cache_rows = [
-        ("cache", "state", 0, "first_lookup", "miss" if first is None else "stale"),
-        ("cache", "state", 0, "second_lookup", "hit" if hit is not None else "miss"),
-        ("cache", "state", 0, "site_mode_lookup", "skip" if site is None else "hit"),
-        ("cache", "state", 0, "hit_rows", str(hit.count() if hit is not None else 0)),
-        ("cache", "state", 0, "hit_equals_put", str(equal).lower()),
-        ("cache", "state", 0, "request_key", SV.request_key(curls, "single")),
-    ]
-    driver_arm = local_df(
-        spark,
-        env_rows + cache_rows,
-        "variant string, sheet string, rn bigint, col string, val string",
-    )
-
-    # ---- wds (WebDataset tar-shard sink, images.py:write_webdataset) ----
-    # write real ustar shards, re-read them through the binaryFile scan +
-    # tar parse, and prove sample identity + byte integrity: the oracle
-    # predicts every caption and an all-true integrity column, so a
-    # corrupted member, a dropped sample, or a double-packed id all break
-    # the value hash.
-    from web_crawler_spark import images as IM
-
-    wds_pairs = IM.synthesize_images(spark, n=40)
-    wds_dir = tempfile.mkdtemp(prefix="wcs_sinkrt_wds_") + "/shards"
-    manifest = IM.write_webdataset(
-        wds_pairs, wds_dir, n_writers=4, shard_bytes=64 * 1024
-    ).collect()  # eager: the read below must see the files
-    back = IM.read_webdataset(spark, wds_dir)
-    src = wds_pairs.select(
-        "image_id",
-        F.md5("bytes").alias("_src_md5"),
-        F.col("caption").alias("_src_caption"),
-    )
-    per_sample = (
-        back.join(src, "image_id", "full")
-        .groupBy("image_id")
-        .agg(
-            F.count(F.lit(1)).alias("_copies"),
-            F.min("caption").alias("_caption"),
-            F.min(
-                (F.md5("img") == F.col("_src_md5"))
-                & (F.col("caption") == F.col("_src_caption"))
-            ).alias("_ok"),
+        # ---- csv (S9) ----
+        c = cust.filter(F.col("c_custkey") < 100).select(
+            "c_custkey",
+            F.concat("c_name", F.lit(', has "quoted, commas"')).alias("note"),
         )
-    )
-    wds_arm = per_sample.select(
-        F.lit("wds").alias("variant"),
-        F.col("image_id").alias("sheet"),
-        F.lit(0).cast("long").alias("rn"),
-        F.lit("caption").alias("col"),
-        F.col("_caption").alias("val"),
-    ).unionByName(
-        per_sample.select(
+        out = f"{scratch}/export"
+        BK.export_csv(c, out, columns=["c_custkey", "note"])
+        back = (
+            spark.read.option("header", True)
+            .option("quote", '"')
+            .option("escape", '"')
+            .csv(out)
+        )
+        csv_arm = back.select(
+            F.lit("csv").alias("variant"),
+            F.lit("export").alias("sheet"),
+            F.col("c_custkey").cast("long").alias("rn"),
+            F.lit("note").alias("col"),
+            F.col("note").alias("val"),
+        )
+
+        # ---- xlsx (S10) ----
+        results = cust.filter(F.col("c_custkey") <= 30).select(
+            F.col("c_name").alias("companyName"),
+            F.concat(F.lit("https://c"), "c_custkey", F.lit(".example.com")).alias("url"),
+            F.when(F.col("c_custkey") % 4 == 0, F.lit("failed"))
+            .otherwise(F.lit("success"))
+            .alias("status"),
+            (F.col("c_custkey") % 7).alias("locationsCount"),
+            ((F.col("c_custkey") * 13) % 101).alias("qualityScore"),
+        )
+        xlsx_path = f"{scratch}/report.xlsx"
+        BK.write_excel_report(results, xlsx_path, force_stdlib=True)
+        xlsx_arm = local_df(
+            spark,
+            [("xlsx", s, rn, col, val) for (s, rn, col, val) in BK.read_xlsx_grid(xlsx_path)],
+            "variant string, sheet string, rn bigint, col string, val string",
+        )
+
+        # ---- envelope (S11 + X30) ----
+        env_src = (
+            cust.filter(F.col("c_custkey").between(1, 5))
+            .select("c_custkey", "c_name")
+            .orderBy("c_custkey")
+        )
+        env = SV.json_response(
+            env_src,
+            ["https://a.example", "https://b.example"],
+            mode="single",
+            cached=False,
+            run_ts="2024-01-01T00:00:00Z",
+        )
+        env_rows = [
+            ("envelope", "meta", 0, "success", str(env["success"]).lower()),
+            ("envelope", "meta", 0, "totalRecords", str(env["totalRecords"])),
+            ("envelope", "meta", 0, "cached", str(env["cached"]).lower()),
+            ("envelope", "meta", 0, "mode", env["mode"]),
+            ("envelope", "meta", 0, "jobId", env["jobId"]),
+            ("envelope", "meta", 0, "crawledAt", env["crawledAt"]),
+        ]
+        for i, rec in enumerate(env["data"]):
+            env_rows.append(("envelope", "data", i, "c_custkey", str(rec["c_custkey"])))
+            env_rows.append(("envelope", "data", i, "c_name", rec["c_name"]))
+
+        # ---- cache (S12) ----
+        cache = SV.ResultCache(f"{scratch}/cache")
+        curls = ["https://cache.example"]
+        put_df = cust.filter(F.col("c_custkey") <= 25).select("c_custkey", "c_name")
+        first = cache.get(spark, curls, "single")
+        cache.put(put_df, curls, "single")
+        hit = cache.get(spark, curls, "single")
+        site = cache.get(spark, curls, "site")
+        equal = (
+            hit is not None
+            and hit.exceptAll(put_df).count() == 0
+            and put_df.exceptAll(hit).count() == 0
+        )
+        cache_rows = [
+            ("cache", "state", 0, "first_lookup", "miss" if first is None else "stale"),
+            ("cache", "state", 0, "second_lookup", "hit" if hit is not None else "miss"),
+            ("cache", "state", 0, "site_mode_lookup", "skip" if site is None else "hit"),
+            ("cache", "state", 0, "hit_rows", str(hit.count() if hit is not None else 0)),
+            ("cache", "state", 0, "hit_equals_put", str(equal).lower()),
+            ("cache", "state", 0, "request_key", SV.request_key(curls, "single")),
+        ]
+        driver_arm = local_df(
+            spark,
+            env_rows + cache_rows,
+            "variant string, sheet string, rn bigint, col string, val string",
+        )
+
+        # ---- wds (WebDataset tar-shard sink, images.py:write_webdataset) ----
+        # write real ustar shards, re-read them through the binaryFile scan +
+        # tar parse, and prove sample identity + byte integrity: the oracle
+        # predicts every caption and an all-true integrity column, so a
+        # corrupted member, a dropped sample, or a double-packed id all break
+        # the value hash.
+        from web_crawler_spark import images as IM
+
+        wds_pairs = IM.synthesize_images(spark, n=40)
+        wds_dir = f"{scratch}/shards"
+        manifest = IM.write_webdataset(
+            wds_pairs, wds_dir, n_writers=4, shard_bytes=64 * 1024
+        ).collect()  # eager: the read below must see the files
+        back = IM.read_webdataset(spark, wds_dir)
+        src = wds_pairs.select(
+            "image_id",
+            F.md5("bytes").alias("_src_md5"),
+            F.col("caption").alias("_src_caption"),
+        )
+        per_sample = (
+            back.join(src, "image_id", "full")
+            .groupBy("image_id")
+            .agg(
+                F.count(F.lit(1)).alias("_copies"),
+                F.min("caption").alias("_caption"),
+                F.min(
+                    (F.md5("img") == F.col("_src_md5"))
+                    & (F.col("caption") == F.col("_src_caption"))
+                ).alias("_ok"),
+            )
+        )
+        wds_arm = per_sample.select(
             F.lit("wds").alias("variant"),
             F.col("image_id").alias("sheet"),
             F.lit(0).cast("long").alias("rn"),
-            F.lit("bytes_ok").alias("col"),
-            F.when(F.col("_ok") & (F.col("_copies") == 1), F.lit("true"))
-            .otherwise(F.lit("false")).alias("val"),
+            F.lit("caption").alias("col"),
+            F.col("_caption").alias("val"),
+        ).unionByName(
+            per_sample.select(
+                F.lit("wds").alias("variant"),
+                F.col("image_id").alias("sheet"),
+                F.lit(0).cast("long").alias("rn"),
+                F.lit("bytes_ok").alias("col"),
+                F.when(F.col("_ok") & (F.col("_copies") == 1), F.lit("true"))
+                .otherwise(F.lit("false")).alias("val"),
+            )
         )
-    )
-    wds_meta = local_df(
-        spark,
-        [
-            ("wds", "meta", 0, "total_samples",
-             str(sum(r["n_samples"] for r in manifest))),
-            ("wds", "meta", 0, "shards_nonempty",
-             str(all(r["n_samples"] > 0 and r["tar_bytes"] > 0
-                     for r in manifest)).lower()),
-        ],
-        "variant string, sheet string, rn bigint, col string, val string",
-    )
-    return (
-        csv_arm.unionByName(xlsx_arm).unionByName(driver_arm)
-        .unionByName(wds_arm).unionByName(wds_meta)
-    )
+        wds_meta = local_df(
+            spark,
+            [
+                ("wds", "meta", 0, "total_samples",
+                 str(sum(r["n_samples"] for r in manifest))),
+                ("wds", "meta", 0, "shards_nonempty",
+                 str(all(r["n_samples"] > 0 and r["tar_bytes"] > 0
+                         for r in manifest)).lower()),
+            ],
+            "variant string, sheet string, rn bigint, col string, val string",
+        )
+        # the csv and wds arms read files under scratch: materialized first
+        arms = (
+            csv_arm.unionByName(xlsx_arm).unionByName(driver_arm)
+            .unionByName(wds_arm).unionByName(wds_meta)
+        )
+        return local_df(spark, arms.collect(), arms.schema)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -8131,6 +8152,7 @@ def _warc_gz_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected records directly from the orders table and never
     re-parses, so gz splitting, gunzip, framing, byte slicing, and
     field extraction are all independently checked."""
+    import shutil
     import tempfile
     from collections import defaultdict
 
@@ -8185,7 +8207,11 @@ def _warc_gz_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "record_ord", "warc_type", "target_uri", "warc_date",
         "content_length", F.md5("body").alias("body_md5"), "len_ok",
     )
-    return text.unionByName(binary)
+    both = text.unionByName(binary)
+    try:  # materialized before the shards go
+        return local_df(spark, both.collect(), both.schema)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 _ARCHIVE_INGEST_ORACLE = (

@@ -594,14 +594,12 @@ def aspect_bucket(
     bks = buckets if buckets is not None else SDXL_BUCKETS
     w = F.col(w_col).cast("long")
     h = F.col(h_col).cast("long")
-    arr = F.array(*[
-        F.struct(
-            F.lit(i).alias("i"),
-            F.lit(bw).cast("long").alias("bw"),
-            F.lit(bh).cast("long").alias("bh"),
-        )
+    # the literal bucket array as one SQL expression, not ~7 Column calls
+    # per bucket: array<struct<i:int, bw:bigint, bh:bigint>>
+    arr = F.expr("array({})".format(", ".join(
+        f"named_struct('i', {i}, 'bw', {int(bw)}L, 'bh', {int(bh)}L)"
         for i, (bw, bh) in enumerate(bks)
-    ])
+    )))
 
     def ratio(b):  # exact int products -> one correctly-rounded division
         return (

@@ -147,9 +147,9 @@ def extract_jsonld(pages: DataFrame) -> DataFrame:
     raw = F.regexp_extract(
         "body", r'(?s)<script type="application/ld\+json">(.*?)</script>', 1
     )
-    parsed = _base(pages).withColumn("_j", F.from_json(raw, _JSONLD_SCHEMA))
-    items = parsed.select(
-        "sourceUrl", "seed_host", F.explode_outer(F.col("_j.`@graph`")).alias("it")
+    items = _base(pages).select(
+        "sourceUrl", "seed_host",
+        F.explode_outer(F.from_json(raw, _JSONLD_SCHEMA)["@graph"]).alias("it"),
     ).filter(F.col("it.`@type`").isin(_LOCATION_TYPES))
     return _finish(
         items,
@@ -331,14 +331,23 @@ def extract_map(pages: DataFrame) -> DataFrame:
             )
         ).alias("frag"),
     )
-    src = F.regexp_extract("frag", r'src="([^"]*)"', 1)
+    links = frames.select(
+        "sourceUrl", "seed_host",
+        F.regexp_extract("frag", r'data-lon="[^"]*">([^<]*)</div>', 1).alias("_name"),
+        F.regexp_extract("frag", r'src="([^"]*)"', 1).alias("_src"),
+    )
+    # the cascade reads the map URL from a column, and is built once:
+    # both coordinates read its one struct
+    coords = links.select(
+        "sourceUrl", "seed_host", "_name", map_coords(F.col("_src")).alias("_co")
+    )
     return _finish(
-        frames,
+        coords,
         "map",
         {
-            "locationName": F.regexp_extract("frag", r'data-lon="[^"]*">([^<]*)</div>', 1),
-            "latitude": map_coord_lat(src),
-            "longitude": map_coord_lon(src),
+            "locationName": F.col("_name"),
+            "latitude": F.col("_co.lat"),
+            "longitude": F.col("_co.lon"),
         },
     )
 
@@ -558,12 +567,10 @@ _SCRIPT_SCHEMA = T.ArrayType(
 def extract_inline_script(pages: DataFrame) -> DataFrame:
     """X19: window.X = [...] JSON blobs (location-extractor:561-597)."""
     raw = F.regexp_extract("body", r"window\.\w+ = (\[.*?\]);", 1)
-    items = (
-        _base(pages)
-        .withColumn("_arr", F.from_json(raw, _SCRIPT_SCHEMA))
-        .select("sourceUrl", "seed_host", F.explode_outer("_arr").alias("it"))
-        .filter(F.col("it").isNotNull())
-    )
+    items = _base(pages).select(
+        "sourceUrl", "seed_host",
+        F.explode_outer(F.from_json(raw, _SCRIPT_SCHEMA)).alias("it"),
+    ).filter(F.col("it").isNotNull())
     addr = F.col("it.address")
     return _finish(
         items,
@@ -604,12 +611,10 @@ def extract_xhr(pages: DataFrame) -> DataFrame:
     xhr_json column, S3)."""
     if "xhr_json" not in pages.columns:
         return local_df(pages.sparkSession, [], _RAW_SCHEMA)
-    items = (
-        _base(pages)
-        .withColumn("_x", F.from_json("xhr_json", _XHR_SCHEMA))
-        .select("sourceUrl", "seed_host", F.explode_outer("_x.locations").alias("it"))
-        .filter(F.col("it").isNotNull())
-    )
+    items = _base(pages).select(
+        "sourceUrl", "seed_host",
+        F.explode_outer(F.from_json("xhr_json", _XHR_SCHEMA)["locations"]).alias("it"),
+    ).filter(F.col("it").isNotNull())
     addr = F.col("it.address")
     return _finish(
         items,

@@ -16,6 +16,13 @@ Reference semantics (enhanced-deduplication.service.js:7-42,100-164,
   encounter order; sourceUrl = comma-joined set; max qualityScore;
   mergedFrom = cluster size.
 
+Each record's similarity keys (normalized address, lowercased name,
+normalized postcode, float coordinates, and which of them are present)
+are derived once per record before the greedy pass, not once per pair
+test: the pass runs O(n^2) pair tests per block, and the pair test only
+compares keys (bracketing the Levenshtein components by length before
+running any string DP).
+
 The greedy order dependence means this cannot be a commutative aggregate:
 the Spark operator is an ``applyInPandas`` per blocking key that feeds
 each block to the *same pure-Python kernel* in an explicit deterministic
@@ -36,6 +43,7 @@ from __future__ import annotations
 import math
 import re
 from collections.abc import Iterable
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -155,25 +163,56 @@ def merge_cluster(records: list[dict]) -> dict:
     return merged
 
 
-def _similar(a: dict, b: dict, threshold: float) -> bool:
+class _Keys(NamedTuple):
+    """One record's similarity inputs, derived once per record: ``None``
+    where ``similarity`` would skip the component for this record."""
+
+    rec: dict
+    addr: str | None  # normalized address
+    coord: tuple[float, float] | None  # (lat, lon), both present
+    name: str | None  # lowercased name
+    postcode: str | None  # normalized postcode
+
+
+def _keys(r: dict) -> _Keys:
+    addr, name, pc = r.get("locationAddress"), r.get("locationName"), r.get("postcode")
+    lat, lon = r.get("latitude"), r.get("longitude")
+    return _Keys(
+        r,
+        normalize_address(str(addr)) if _present(addr) else None,
+        (float(lat), float(lon)) if _present(lat) and _present(lon) else None,
+        str(name).lower() if _present(name) else None,
+        normalize_postcode(str(pc)) if _present(pc) else None,
+    )
+
+
+def _cap(x: str, y: str) -> float:
+    """Optimistic string-similarity bound, never below the true value."""
+    lx, ly = len(x), len(y)
+    m = max(lx, ly)
+    return 1.0 if m == 0 else 1.0 - abs(lx - ly) / m
+
+
+def _similar(a: _Keys, b: _Keys, threshold: float) -> bool:
     """Decision-identical fast path for ``similarity(a,b) >= threshold``.
 
-    Evaluates cheap components (postcode, coords) first and brackets the
-    two Levenshtein components with optimistic bounds (1 - |len diff| /
-    max len ≥ true similarity), so most non-matching pairs resolve without
-    any O(n*m) string DP. Early True/False only when provable WITH an
-    epsilon margin (the fast path accumulates score*weight in a different
-    float order than similarity()'s score/weight); anything inside the
-    margin falls back to the literal ``similarity(a, b) >= threshold``
-    comparison, so the greedy clustering is bit-identical to the exact
-    kernel even at exact-boundary pairs.
+    Reads both records' precomputed keys, evaluates the cheap components
+    (postcode, coords) first and brackets the two Levenshtein components
+    with optimistic bounds (1 - |len diff| / max len ≥ true similarity),
+    so most non-matching pairs resolve without any O(n*m) string DP.
+    Early True/False only when provable WITH an epsilon margin (the fast
+    path accumulates score*weight in a different float order than
+    similarity()'s score/weight); anything inside the margin falls back to
+    the literal ``similarity(a, b) >= threshold`` comparison, so the
+    greedy clustering is bit-identical to the exact kernel even at
+    exact-boundary pairs.
     """
     EPS = 1e-9
+    has_addr = a.addr is not None and b.addr is not None
+    has_coord = a.coord is not None and b.coord is not None
+    has_name = a.name is not None and b.name is not None
+    has_pc = a.postcode is not None and b.postcode is not None
     w_total = 0.0
-    has_addr = _present(a.get("locationAddress")) and _present(b.get("locationAddress"))
-    has_coord = all(_present(x.get(k)) for x in (a, b) for k in ("latitude", "longitude"))
-    has_name = _present(a.get("locationName")) and _present(b.get("locationName"))
-    has_pc = _present(a.get("postcode")) and _present(b.get("postcode"))
     if has_addr:
         w_total += 0.4
     if has_coord:
@@ -188,32 +227,18 @@ def _similar(a: dict, b: dict, threshold: float) -> bool:
 
     score = 0.0
     # cheap exact components first
-    if has_pc:
-        if normalize_postcode(str(a["postcode"])) == normalize_postcode(str(b["postcode"])):
-            score += 0.1
+    if has_pc and a.postcode == b.postcode:
+        score += 0.1
     if has_coord:
-        d = haversine_km(
-            float(a["latitude"]), float(a["longitude"]),
-            float(b["latitude"]), float(b["longitude"]),
-        )
+        d = haversine_km(*a.coord, *b.coord)
         score += (1.0 if d < 0.1 else max(0.0, 1 - d / 5)) * 0.3
 
-    # optimistic caps for the string components (never below the true sim)
-    def cap(x: str, y: str) -> float:
-        lx, ly = len(x), len(y)
-        m = max(lx, ly)
-        return 1.0 if m == 0 else 1.0 - abs(lx - ly) / m
-
-    na = nb = aa = ab = None
+    # optimistic caps for the string components
     rem = 0.0
     if has_addr:
-        aa = normalize_address(str(a["locationAddress"]))
-        ab = normalize_address(str(b["locationAddress"]))
-        rem += cap(aa, ab) * 0.4
+        rem += _cap(a.addr, b.addr) * 0.4
     if has_name:
-        na = str(a["locationName"]).lower()
-        nb = str(b["locationName"]).lower()
-        rem += cap(na, nb) * 0.2
+        rem += _cap(a.name, b.name) * 0.2
     if score >= target + EPS:
         return True
     if score + rem < target - EPS:
@@ -221,35 +246,34 @@ def _similar(a: dict, b: dict, threshold: float) -> bool:
     # undecided: compute the string DPs exactly (address first — heavier
     # weight tightens the bracket faster)
     if has_addr:
-        s = string_similarity(aa, ab) * 0.4
-        rem -= cap(aa, ab) * 0.4
-        score += s
+        score += string_similarity(a.addr, b.addr) * 0.4
+        rem -= _cap(a.addr, b.addr) * 0.4
         if score >= target + EPS:
             return True
         if score + rem < target - EPS:
             return False
     # within the epsilon bracket: decide with the reference formula's own
     # accumulation order (same adds, divide not multiply)
-    return similarity(a, b) >= threshold
+    return similarity(a.rec, b.rec) >= threshold
 
 
 def fuzzy_cluster_merge(records: Iterable[dict], threshold: float = 0.85) -> list[dict]:
     """The greedy pass (deduplicateWithFuzzy) — also the test oracle."""
-    recs = list(records)
+    keys = [_keys(r) for r in records]
     merged_out: list[dict] = []
     processed: set[int] = set()
-    for i in range(len(recs)):
+    for i in range(len(keys)):
         if i in processed:
             continue
-        base = recs[i]
+        base = keys[i]
         cluster = [i]
-        for j in range(i + 1, len(recs)):
+        for j in range(i + 1, len(keys)):
             if j in processed:
                 continue
-            if _similar(base, recs[j], threshold):
+            if _similar(base, keys[j], threshold):
                 cluster.append(j)
                 processed.add(j)
-        merged_out.append(merge_cluster([recs[k] for k in cluster]))
+        merged_out.append(merge_cluster([keys[k].rec for k in cluster]))
         processed.add(i)
     return merged_out
 

@@ -65,14 +65,11 @@ def geocode_enrich(records: DataFrame, dim: DataFrame | None = None) -> DataFram
         "address_norm", F.lower(F.trim(F.concat_ws(", ", "street", "city")))
     )
     joined = keyed.join(F.broadcast(dim), "address_norm", "left")
-    return (
-        joined.withColumn(
-            "geocoded", F.col("latitude").isNull() & F.col("geo_lat").isNotNull()
-        )
-        .withColumn("latitude", F.coalesce(F.col("latitude"), F.col("geo_lat")))
-        .withColumn("longitude", F.coalesce(F.col("longitude"), F.col("geo_lon")))
-        .drop("geo_lat", "geo_lon", "address_norm")
-    )
+    return joined.withColumns({
+        "geocoded": F.col("latitude").isNull() & F.col("geo_lat").isNotNull(),
+        "latitude": F.coalesce(F.col("latitude"), F.col("geo_lat")),
+        "longitude": F.coalesce(F.col("longitude"), F.col("geo_lon")),
+    }).drop("geo_lat", "geo_lon", "address_norm")
 
 
 # Provider cascade (multi-geocoding.service.js:8-31): try Google Maps →
@@ -151,24 +148,19 @@ def multi_geocode_enrich(
     )
     joined = keyed.join(F.broadcast(dim), "address_norm", "left")
     had_coords = F.col("latitude").isNotNull()
-    return (
-        joined.withColumn(
-            "geo_provider",
-            F.when(had_coords, F.lit("source")).otherwise(
-                F.coalesce(F.col("geo_provider"), F.lit("none"))
-            ),
-        )
-        .withColumn("latitude", F.coalesce(F.col("latitude"), F.col("geo_lat")))
-        .withColumn("longitude", F.coalesce(F.col("longitude"), F.col("geo_lon")))
-        .drop("geo_lat", "geo_lon", "address_norm")
-    )
+    return joined.withColumns({
+        "geo_provider": F.when(had_coords, F.lit("source")).otherwise(
+            F.coalesce(F.col("geo_provider"), F.lit("none"))
+        ),
+        "latitude": F.coalesce(F.col("latitude"), F.col("geo_lat")),
+        "longitude": F.coalesce(F.col("longitude"), F.col("geo_lon")),
+    }).drop("geo_lat", "geo_lon", "address_norm")
 
 
-def to_canonical_records(raw: DataFrame) -> DataFrame:
-    """F14: project enriched raw records into the canonical shape
-    (crawler.service.js:449-464) with the full envelope."""
-    activity = R.classify_activity(F.coalesce("locationName", F.lit("")))
-    out = raw.select(
+def _canonical_projection(raw: DataFrame) -> DataFrame:
+    """The canonical columns of enriched raw records, without the envelope:
+    all the fuzzy merge reads."""
+    return raw.select(
         "seed_host",
         F.col("locationName"),
         F.concat_ws(
@@ -176,15 +168,13 @@ def to_canonical_records(raw: DataFrame) -> DataFrame:
             *[F.when(F.col(c).isNotNull() & (F.col(c) != ""), F.col(c)) for c in
               ("street", "city", "postcode", "country")],
         ).alias("locationAddress"),
-        activity.alias("activityAtAsset"),
+        R.classify_activity(F.coalesce("locationName", F.lit(""))).alias("activityAtAsset"),
         F.col("latitude").cast("double").alias("latitude"),
         F.col("longitude").cast("double").alias("longitude"),
         F.col("country").alias("countryIso3"),
         F.col("postcode"),
         F.lit(None).cast("string").alias("state"),
         F.coalesce("city", "street").alias("streetOrCity"),
-        G.footprint_wkt("latitude", "longitude").alias("footprint"),
-        R.estimate_height(activity).alias("height"),
         F.lit("100%").alias("usageShare"),
         "sourceUrl",
         F.lit("web").alias("sourceType"),
@@ -193,12 +183,37 @@ def to_canonical_records(raw: DataFrame) -> DataFrame:
         "phone",
         "email",
     )
+
+
+def _with_envelope(records: DataFrame) -> DataFrame:
+    """The envelope over canonical columns, in one projection: footprint
+    (X13), height (X12), qualityScore (X24), qualityLevel (X25) and
+    missingFields (X26). A column already present is replaced in place;
+    the others are appended in that order."""
     qmap = {k: k for k in R.QUALITY_WEIGHTS}
-    return (
-        out.withColumn("qualityScore", R.quality_score(qmap))
-        .withColumn("qualityLevel", R.quality_level("qualityScore"))
-        .withColumn("missingFields", R.missing_fields(qmap))
-    )
+    score = R.quality_score(qmap)
+    return records.withColumns({
+        "footprint": G.footprint_wkt("latitude", "longitude"),
+        "height": R.estimate_height(F.coalesce("activityAtAsset", F.lit(""))),
+        "qualityScore": score,
+        "qualityLevel": R.quality_level(score),
+        "missingFields": R.missing_fields(qmap),
+    })
+
+
+CANONICAL_COLUMNS = [
+    "seed_host", "locationName", "locationAddress", "activityAtAsset",
+    "latitude", "longitude", "countryIso3", "postcode", "state",
+    "streetOrCity", "footprint", "height", "usageShare", "sourceUrl",
+    "sourceType", "confidence", "extractionMethod", "phone", "email",
+    "qualityScore", "qualityLevel", "missingFields",
+]
+
+
+def to_canonical_records(raw: DataFrame) -> DataFrame:
+    """F14: project enriched raw records into the canonical shape
+    (crawler.service.js:449-464) with the full envelope."""
+    return _with_envelope(_canonical_projection(raw)).select(*CANONICAL_COLUMNS)
 
 
 def attach_payload(records: DataFrame, images: DataFrame) -> DataFrame:
@@ -235,47 +250,45 @@ def attach_payload(records: DataFrame, images: DataFrame) -> DataFrame:
     best = matched.groupBy("_rid").agg(
         F.min(F.struct("image_id", "caption")).alias("_img")
     )
-    return (
-        rec.join(best, "_rid", "left")
-        .withColumn("image_id", F.col("_img.image_id"))
-        .withColumn("caption", F.col("_img.caption"))
-        .drop("_rid", "_img")
+    return rec.join(best, "_rid", "left").select(
+        *records.columns,
+        F.col("_img.image_id").alias("image_id"),
+        F.col("_img.caption").alias("caption"),
     )
 
 
 def records_pipeline(pages: DataFrame) -> DataFrame:
-    """pages → 7-strategy extraction → confidence floor → greedy fuzzy
-    dedup per host → geocode enrich → canonical records (+ payload).
+    """pages → 7-strategy extraction → confidence floor → geocode enrich
+    → canonical projection → greedy fuzzy dedup per host → envelope →
+    canonical records (+ payload).
 
-    Two lazy localCheckpoints cut the lineage at the stage boundaries: the
-    extraction output, and the records after the fuzzy merge, where
-    ``attach_payload`` forks them. Everything downstream of extraction
-    would otherwise re-analyze the full 7-strategy union tree on every
-    DataFrame operation — driver-side plan work that dominates wall time
-    well before executors see a row (and grows with plan depth, not
-    data) — and the fork would run the fuzzy merge twice. Extraction
-    output is rows-per-location, far smaller than the page bodies it came
-    from, so the materialization is cheap at any scale."""
+    The envelope (footprint, height, quality score, level and missing
+    fields) is built once, after the merge: the merge keeps none of it
+    but the quality score, which the envelope recomputes anyway.
+
+    Two lazy localCheckpoints cut the lineage where a plan is read twice:
+    the extraction output, which the geocode dimension (its distinct
+    addresses) and the enrich join both read, and the records after the
+    fuzzy merge, which ``attach_payload`` reads twice (the URL explode and
+    the final join). Without them the extraction and the fuzzy merge would
+    each run twice, and everything downstream of extraction would
+    re-analyze the full 7-strategy union tree on every DataFrame
+    operation — driver-side plan work that grows with plan depth, not
+    data. Under AQE a lazy localCheckpoint plans its input when it is
+    built and runs that plan's shuffle stages then (the geocode
+    dimension's distinct and the merge's repartition), so building this
+    plan already runs the extraction. Extraction output is
+    rows-per-location, far smaller than the page bodies it came from, so
+    the materialization is cheap at any scale."""
     from web_crawler_spark.operators import extract as EX
     from web_crawler_spark.operators import fuzzy as FZ
 
     raw = EX.extract_all(pages).localCheckpoint(eager=False)
-    recs = to_canonical_records(geocode_enrich(raw))
     deduped = FZ.fuzzy_dedup(
-        recs, "seed_host", order_cols=["sourceUrl", "locationName", "extractionMethod"]
+        _canonical_projection(geocode_enrich(raw)), "seed_host",
+        order_cols=["sourceUrl", "locationName", "extractionMethod"],
     )
-    # re-derive envelope columns lost through the fuzzy merge schema
-    qmap = {k: k for k in R.QUALITY_WEIGHTS}
-    recs = (
-        deduped.withColumn("footprint", G.footprint_wkt("latitude", "longitude"))
-        .withColumn("height", R.estimate_height(F.coalesce("activityAtAsset", F.lit(""))))
-        .withColumn("qualityScore", R.quality_score(qmap))
-        .withColumn("qualityLevel", R.quality_level("qualityScore"))
-        .withColumn("missingFields", R.missing_fields(qmap))
-        # attach_payload reads the records twice (the URL explode and the
-        # final join): the checkpoint runs the fuzzy merge once for both
-        .localCheckpoint(eager=False)
-    )
+    recs = _with_envelope(deduped).localCheckpoint(eager=False)
     return attach_payload(recs, EX.extract_images(pages))
 
 
@@ -339,11 +352,10 @@ def reverse_geocode(
     provider 'none' (the reference returns null)."""
     scale = 10 ** precision
     dim = dim if dim is not None else reverse_geocode_dim_for(points, precision)
-    keyed = points.withColumn(
-        "cell_lat_i", F.round(F.col("latitude") * scale).cast("long")
-    ).withColumn(
-        "cell_lon_i", F.round(F.col("longitude") * scale).cast("long")
-    )
+    keyed = points.withColumns({
+        "cell_lat_i": F.round(F.col("latitude") * scale).cast("long"),
+        "cell_lon_i": F.round(F.col("longitude") * scale).cast("long"),
+    })
     joined = keyed.join(F.broadcast(dim), ["cell_lat_i", "cell_lon_i"], "left")
     return joined.withColumn(
         "rgeo_provider", F.coalesce(F.col("rgeo_provider"), F.lit("none"))
@@ -409,10 +421,8 @@ def place_details(places: DataFrame, dim: DataFrame | None = None) -> DataFrame:
     dim = dim if dim is not None else place_details_dim_for(places)
     joined = places.join(F.broadcast(dim), "place_id", "left")
     blank = F.lit("")
-    return (
-        joined.withColumn("pd_phone", F.coalesce(F.col("pd_phone"), blank))
-        .withColumn("pd_website", F.coalesce(F.col("pd_website"), blank))
-        .withColumn("pd_hours", F.coalesce(F.col("pd_hours"), blank))
-        .withColumn("pd_types", F.coalesce(F.col("pd_types"), blank))
-        .withColumn("pd_hit", F.coalesce(F.col("pd_hit"), F.lit(False)))
-    )
+    return joined.withColumns({
+        **{c: F.coalesce(F.col(c), blank)
+           for c in ("pd_phone", "pd_website", "pd_hours", "pd_types")},
+        "pd_hit": F.coalesce(F.col("pd_hit"), F.lit(False)),
+    })

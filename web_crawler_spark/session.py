@@ -14,6 +14,34 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+# Engine-level settings every session of this engine runs with: get_spark
+# and the spark-submit jobs in jobs/ all apply this one map. Master, memory
+# and local dirs stay with whoever launches the session.
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # image payloads ride in binary columns; bound Arrow batch size so a
+    # batch of bytes rows fits executor memory at 100TB scale
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # The generated-class cache defaults to 100 entries — smaller than
+    # the number of codegen units in ONE multi-strategy composite query
+    # (AQE re-plans per stage, each stage compiles), so a single
+    # execution can evict its own classes and re-pay multi-second
+    # Janino compiles on every run. 2000 entries keeps every plan this
+    # engine produces compiled-once per JVM; the cached classes are
+    # small (metaspace, not heap).
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # PySpark otherwise records the Python call site of every
+    # pyspark.sql.functions call on the JVM, several py4j round trips per
+    # call: most of the driver time spent building a plan. The cost: an
+    # analysis error no longer names the Python line that built the column.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
 
 def get_spark(
     app_name: str = "web_crawler_spark",
@@ -36,28 +64,12 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # image payloads ride in binary columns; bound Arrow batch size so a
-        # batch of bytes rows fits executor memory at 100TB scale
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # 16g, not bigger: oversized heaps measurably GC-anti-scale at high
         # local thread counts (see BENCH.md); real clusters size per-core
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # The generated-class cache defaults to 100 entries — smaller than
-        # the number of codegen units in ONE multi-strategy composite query
-        # (AQE re-plans per stage, each stage compiles), so a single
-        # execution can evict its own classes and re-pay multi-second
-        # Janino compiles on every run. 2000 entries keeps every plan this
-        # engine produces compiled-once per JVM; the cached classes are
-        # small (metaspace, not heap).
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if os.path.isdir("/dev/shm"):
         # tmpfs shuffle: local-mode stand-in for cluster NVMe/shuffle service
